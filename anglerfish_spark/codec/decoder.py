@@ -20,11 +20,23 @@ schema* (what the engine returns): bytes/fixed/enum travel as strings,
 unions as structs keyed by Avro branch names; the decoder then transforms
 wire → target columns.
 
-Raw-text strictness applies at full depth: record/union nodes parse their
-raw text once into a ``map<string,string>`` object view, and arrays/maps
-zip the typed parse with an ``array<string>`` / ``map<string,string>``
-parse of the same text, so per-element raw text (and with it extra-field,
-overflow, and wrong-type detection) is available inside collections too.
+Raw-text strictness applies at full depth: every record, union and map
+node reads its raw text through a ``map<string,string>`` object view
+(keys + per-field raw text from one parse) and every array through an
+``array<string>`` element view zipped with the typed parse, so
+extra-field, overflow and wrong-type detection reach inside collections
+too.
+
+Where the views live.  Outside collections each view is its own staged
+column, parsed once per row: ``_anglerfish_rmap`` for the root and
+``_anglerfish_v<n>`` below it, projected after the first Generate barrier
+in dependency order.  The value and error trees only reference those
+columns, so outside collections they hold no lambda and evaluate as
+generated code.  Inside a
+collection the element text is a lambda variable of ``transform`` /
+``zip_with`` and cannot be staged; there, and only there, the view is
+let-bound (``logical._let``) so each element is still parsed once.
+
 Quoted tokens at typed positions (``"123"`` for ``long``) are rejected on
 both paths since r4 — the general path infers quotedness from
 typed-wire-null + integral raw digits, the flat path from a staged
@@ -35,14 +47,21 @@ quotedness of overflowed digits is unobservable here), and past the
 ``RAW_RECURSION_LIMIT`` unroll depth validation falls back to wire-proxy
 checks.
 
-Error channel: ``mode="strict"`` raises on first violation (FAILFAST
-analogue); ``mode="permissive"`` adds an ``_errors array<string>`` column
-of ``Code@path`` entries (E1 taxonomy) and never raises.
+Error channel: a nullable string of ``;Code@path`` tags (E1 taxonomy),
+each tag carrying its own leading ``;``.  Joins are plain
+``concat_ws("")`` / ``array_join("")`` and null or ``''`` both mean
+clean, so the channel needs no null folding and no let-binding.
+``decode_json`` strips the first ``;`` once, at the top:
+``mode="strict"`` raises on a violation (FAILFAST analogue) with the tags
+joined by ``;``; ``mode="permissive"`` adds an ``_errors array<string>``
+column and never raises.
 """
 
 from __future__ import annotations
 
 import json
+import threading
+from collections import OrderedDict
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame
@@ -66,28 +85,25 @@ from ..schema.model import (
 )
 from ..schema.parser import ParsedSchema, parse_schema
 from ..schema.spark_convert import to_struct_type, union_field_names
-from .logical import _let as _logical_let
+from .logical import _let
 from .pydecode import Decoder as _PyDecoder
 
 INT32_MIN, INT32_MAX = -(2**31), 2**31 - 1
 _B64_RE = r"^([A-Za-z0-9+/]{4})*([A-Za-z0-9+/]{2}==|[A-Za-z0-9+/]{3}=)?$"
 
-def _nullif_empty(c: Column) -> Column:
-    """``nullif(c, '')`` without Spark 4's With-based NullIf, whose
-    definition RewriteWithExpression inlines (duplicating ``c``) when the
-    expression sits inside a higher-order-function lambda — see _cat."""
-    return _logical_let(
-        c, lambda v: F.when(v == "", F.lit(None).cast("string")).otherwise(v)
-    )
+#: object view: keys + raw value text per key (records, unions, maps)
+_OBJ_VIEW = T.MapType(T.StringType(), T.StringType())
+#: element view: raw text per element (arrays)
+_ELEM_VIEW = T.ArrayType(T.StringType())
 
 
 def _empty_errs() -> Column:
-    """No-error sentinel: the error channel is a nullable STRING of
-    ';'-joined Code@path tags (null = clean).  Strings keep every
-    combinator (when/concat_ws/nullif) inside whole-stage codegen —
-    an array channel forces higher-order functions (array_compact →
-    filter), which fall back to interpreted evaluation and cost ~10× on
-    the hot path."""
+    """No-error sentinel of the error channel: a nullable STRING of
+    ``;Code@path`` tags, each with its own leading ``;``, where null and
+    ``''`` both mean clean.  Strings keep every combinator (``when``,
+    ``concat_ws``, ``array_join``) in generated code — an array channel
+    would need ``array_compact``/``filter`` lambdas, which Spark evaluates
+    interpreted."""
     return F.lit(None).cast("string")
 
 
@@ -189,21 +205,21 @@ def _lit_value(value, dtype: T.DataType) -> Column:
 class _ExprBuilder:
     """Builds (value, errors) column pairs per schema node.
 
-    ``raw`` is the raw JSON *text* of the node (None inside collections,
-    where per-element text is unaddressable); ``path`` is used only for
-    error labels.  At record/union nodes the raw text is parsed ONCE into
-    a ``map<string,string>`` (keys + per-field raw text + nested JSON text
-    in a single pass) — the earlier per-check ``get_json_object`` calls
-    re-parsed the document for every validation and dominated the decode
-    cost.  The error channel is a nullable ';'-joined string (see
-    ``_empty_errs``).
+    ``raw`` is the raw JSON *text* of the node (None where it is not
+    threaded: beyond ``RAW_RECURSION_LIMIT``, or under a collection whose
+    own text is not); ``path`` is used only for error labels.  Record,
+    union, map and array nodes read ``raw`` through one parsed view (see
+    ``_view``): outside collections it is appended to ``views`` as a
+    staged column, inside collections it is let-bound.  The error channel
+    is a string of ``;``-prefixed tags (see ``_empty_errs``).
     """
 
     #: raw-text threading stops after this many re-entries of the same
-    #: record (recursion): every level re-references its parent's object
-    #: view several times, so the analysis-time expression tree grows
-    #: ~6^level — beyond the limit validation falls back to wire-proxy
-    #: checks (typed values still decode to the full max_depth unroll)
+    #: record (recursion): inside collections every level re-references
+    #: its parent's let-bound view, so the analysis-time expression tree
+    #: grows with each level — beyond the limit validation falls back to
+    #: wire-proxy checks (typed values still decode to the full max_depth
+    #: unroll)
     RAW_RECURSION_LIMIT = 3
 
     def __init__(
@@ -216,40 +232,74 @@ class _ExprBuilder:
         self.max_depth = max_depth
         self.root_map = root_map  # staged map<string,string> of the root text
         self.depth: dict[str, int] = {}
+        #: staged views, (level, column name, parse): a level-k view reads
+        #: only staged columns of levels < k (level 0 = the first stage)
+        self.views: list[tuple[int, str, Column]] = []
+        self._level = 0
+        self._in_lambda = 0  # > 0 while building a collection lambda body
 
     # helpers ---------------------------------------------------------------
 
     @staticmethod
     def _err(cond: Column, code: str, path: str) -> Column:
-        return F.when(cond, F.lit(f"{code}@{path}"))
+        return F.when(cond, F.lit(f";{code}@{path}"))
 
     @staticmethod
     def _cat(*errs: Column) -> Column:
+        """Join error channels.  ``concat_ws`` skips nulls and the tags
+        carry their own separator, so an all-clean join is ``''`` — which
+        the channel reads as clean, like null.  Nothing here needs a
+        let-binding or a null fold, so the tree stays in generated code."""
         errs = [e for e in errs if e is not None]
         if not errs:
             return _empty_errs()
         if len(errs) == 1:
             return errs[0]
-        # concat_ws skips nulls; collapse the all-null case back to null.
-        # NOT F.nullif: Spark 4's NullIf is RuntimeReplaceable via a `With`
-        # whose definition RewriteWithExpression cannot hoist out of the
-        # `_let` lambdas these trees nest in — it INLINES the first argument
-        # (this whole concat of child errors) instead, doubling the error
-        # tree per nesting level (measured: depth-5 recursive decode plan
-        # 484k chars / 2558 CASE WHENs with nullif vs 16k / 53 with the
-        # explicit let-bound form; SCALE.md #23).
-        return _logical_let(
-            F.concat_ws(";", *errs),
-            lambda c: F.when(c == "", F.lit(None).cast("string")).otherwise(c),
-        )
+        return F.concat_ws("", *errs)
 
-    def _obj_map(self, raw: Optional[Column], path: str) -> Optional[Column]:
-        """One-parse object view: keys + raw value text per key."""
-        if raw is None:
-            return None
-        if path == "$" and self.root_map is not None:
-            return self.root_map
-        return F.from_json(raw, T.MapType(T.StringType(), T.StringType()))
+    def _view(self, raw: Column, path: str, role: str, body, dtype=_OBJ_VIEW):
+        """``body(view, role)`` over ONE parse of ``raw`` as ``dtype``.
+
+        Outside collections the parse becomes a staged column (the root
+        object view is the first stage's ``root_map``) and ``body`` runs
+        once for both slots.  Inside a collection ``raw`` is a lambda
+        variable, so the parse is let-bound instead, separately under each
+        output slot: the value tree references only child values and the
+        errs tree only child errors, so each stays linear in node count
+        (one shared (v, e) pair struct would duplicate per level)."""
+        if self._in_lambda:
+            view = F.from_json(raw, dtype)
+            value = _let(view, lambda m: body(m, "value")[0]) if role != "errs" else F.lit(None)
+            errs = _let(view, lambda m: body(m, "errs")[1]) if role != "value" else _empty_errs()
+            return value, errs
+        if path == "$" and dtype is _OBJ_VIEW and self.root_map is not None:
+            return body(self.root_map, role)
+        name = f"_anglerfish_v{len(self.views)}"
+        self._level += 1
+        self.views.append((self._level, name, F.from_json(raw, dtype)))
+        try:
+            return body(F.col(name), role)
+        finally:
+            self._level -= 1
+
+    def _each(
+        self, t: AvroType, path: str, role: str, wire: Column, raw: Optional[Column]
+    ) -> tuple[Column, Column]:
+        """(value array, joined errs) over collection elements: ``transform``
+        of the typed elements, or ``zip_with`` of typed and raw ones.  A null
+        collection yields null for both."""
+        def over(slot: int, r: str) -> Column:
+            if raw is None:
+                return F.transform(wire, lambda w: self.build(t, w, None, path, r)[slot])
+            return F.zip_with(wire, raw, lambda w, x: self.build(t, w, x, path, r)[slot])
+
+        self._in_lambda += 1
+        try:
+            value = over(0, "value") if role != "errs" else F.lit(None)
+            errs = F.array_join(over(1, "errs"), "") if role != "value" else _empty_errs()
+        finally:
+            self._in_lambda -= 1
+        return value, errs
 
     # node dispatch ----------------------------------------------------------
 
@@ -260,11 +310,12 @@ class _ExprBuilder:
         """Build the (value, errors) column pair for a schema node.
 
         ``role`` controls which slot the caller will actually use —
-        ``"value"`` / ``"errs"`` traversals skip the other slot's
-        construction at the let-bound nodes (records, unions, collections),
-        so the per-column let-binding costs ONE Python traversal per
-        column instead of doubling per nesting level.  The unused slot is
-        a cheap dummy; leaves build both slots (negligible)."""
+        collection lambdas build their value and errs trees in separate
+        ``"value"`` / ``"errs"`` traversals, which skip the other slot's
+        construction at the view and collection nodes, so per-slot
+        let-binding costs ONE Python traversal per slot instead of doubling
+        per nesting level.  The unused slot is a cheap dummy; leaves build
+        both slots (negligible)."""
         if isinstance(t, AvroRecursionRef):
             if self.depth.get(t.fqn, 0) >= self.max_depth:
                 # truncated: decodes to null; data beyond the bound is an error
@@ -428,66 +479,29 @@ class _ExprBuilder:
         role: str = "both",
     ) -> tuple[Column, Column]:
         """Raw text, when addressable, is parsed once as ``array<string>``
-        (same single-pass trick as records) and zipped element-wise with the
+        (same single-pass view as records) and zipped element-wise with the
         typed parse — extra-field / overflow / wrong-type strictness applies
         at full depth inside arrays.  Both arrays come from the same text,
         so lengths always agree when both parse."""
         elem_path = f"{path}[]"
-        want_v, want_e = role != "errs", role != "value"
-
         if raw is None:
-            value = (
-                F.transform(wire, lambda w: self.build(t.items, w, None, elem_path, "value")[0])
-                if want_v
-                else F.lit(None)
-            )
-            # array_join drops null elements → one ';'-joined string per array
-            errs = (
-                F.when(
-                    wire.isNotNull(),
-                    _nullif_empty(
-                        F.array_join(
-                            F.transform(
-                                wire,
-                                lambda w: self.build(t.items, w, None, elem_path, "errs")[1],
-                            ),
-                            ";",
-                        )),
-                )
-                if want_e
-                else _empty_errs()
-            )
-            return value, errs
+            return self._each(t.items, elem_path, role, wire, None)
 
-        raw_elems = F.from_json(raw, T.ArrayType(T.StringType()))
-        value = (
-            F.zip_with(
-                wire, raw_elems, lambda w, r: self.build(t.items, w, r, elem_path, "value")[0]
+        def with_view(elems: Column, role: str) -> tuple[Column, Column]:
+            value, errs = self._each(t.items, elem_path, role, wire, elems)
+            if role == "value":
+                return value, errs
+            present = raw.isNotNull() & (raw != F.lit("null"))
+            # scalar/object at an array position → the raw array parse nulls;
+            # an element whose *typed* parse failed nulls the whole wire array
+            # (from_json PERMISSIVE) while the raw parse survives — both error
+            shape = self._err(present & elems.isNull(), "UnexpectedTypeError", path)
+            elem_fail = self._err(
+                elems.isNotNull() & wire.isNull(), "UnexpectedTypeError", elem_path
             )
-            if want_v
-            else F.lit(None)
-        )
-        if not want_e:
-            return value, _empty_errs()
-        present = raw.isNotNull() & (raw != F.lit("null"))
-        # scalar/object at an array position → the raw array parse nulls;
-        # an element whose *typed* parse failed nulls the whole wire array
-        # (from_json PERMISSIVE) while the raw parse survives — both error
-        shape = self._err(present & raw_elems.isNull(), "UnexpectedTypeError", path)
-        elem_fail = self._err(
-            raw_elems.isNotNull() & wire.isNull(), "UnexpectedTypeError", elem_path
-        )
-        errs = F.when(
-            wire.isNotNull(),
-            _nullif_empty(
-                F.array_join(
-                    F.zip_with(
-                        wire, raw_elems, lambda w, r: self.build(t.items, w, r, elem_path, "errs")[1]
-                    ),
-                    ";",
-                )),
-        )
-        return value, self._cat(errs, shape, elem_fail)
+            return value, self._cat(errs, shape, elem_fail)
+
+        return self._view(raw, path, role, with_view, _ELEM_VIEW)
 
     def _map(
         self, t: AvroMap, wire: Column, raw: Optional[Column], path: str,
@@ -497,110 +511,39 @@ class _ExprBuilder:
         per-value raw text; key order is identical between the typed and raw
         parses because both stream the same document."""
         val_path = f"{path}.{{}}" if raw is not None else "{}"
-        want_v, want_e = role != "errs", role != "value"
+
+        def decode(rmap: Optional[Column], role: str) -> tuple[Column, Column]:
+            rvals = F.map_values(rmap) if rmap is not None else None
+            value, errs = self._each(t.values, val_path, role, F.map_values(wire), rvals)
+            if role != "errs":
+                value = F.map_from_arrays(F.map_keys(wire), value)
+            if role == "value" or rmap is None:
+                return value, errs
+            present = raw.isNotNull() & (raw != F.lit("null"))
+            shape = self._err(present & rmap.isNull(), "UnexpectedTypeError", path)
+            val_fail = self._err(rmap.isNotNull() & wire.isNull(), "UnexpectedTypeError", val_path)
+            return value, self._cat(errs, shape, val_fail)
 
         if raw is None:
-            value = (
-                F.map_from_arrays(
-                    F.map_keys(wire),
-                    F.transform(
-                        F.map_values(wire),
-                        lambda v: self.build(t.values, v, None, val_path, "value")[0],
-                    ),
-                )
-                if want_v
-                else F.lit(None)
-            )
-            errs = (
-                F.when(
-                    wire.isNotNull(),
-                    _nullif_empty(
-                        F.array_join(
-                            F.transform(
-                                F.map_values(wire),
-                                lambda v: self.build(t.values, v, None, val_path, "errs")[1],
-                            ),
-                            ";",
-                        )),
-                )
-                if want_e
-                else _empty_errs()
-            )
-            return value, errs
-
-        rmap = self._obj_map(raw, path)
-        value = (
-            F.map_from_arrays(
-                F.map_keys(wire),
-                F.zip_with(
-                    F.map_values(wire),
-                    F.map_values(rmap),
-                    lambda v, r: self.build(t.values, v, r, val_path, "value")[0],
-                ),
-            )
-            if want_v
-            else F.lit(None)
-        )
-        if not want_e:
-            return value, _empty_errs()
-        present = raw.isNotNull() & (raw != F.lit("null"))
-        shape = self._err(present & rmap.isNull(), "UnexpectedTypeError", path)
-        val_fail = self._err(rmap.isNotNull() & wire.isNull(), "UnexpectedTypeError", val_path)
-        errs = F.when(
-            wire.isNotNull(),
-            _nullif_empty(
-                F.array_join(
-                    F.zip_with(
-                        F.map_values(wire),
-                        F.map_values(rmap),
-                        lambda v, r: self.build(t.values, v, r, val_path, "errs")[1],
-                    ),
-                    ";",
-                )),
-        )
-        return value, self._cat(errs, shape, val_fail)
+            return decode(None, role)
+        return self._view(raw, path, role, decode)
 
     def _union(
         self, t: AvroUnion, wire: Column, raw: Optional[Column], path: str,
         role: str = "both",
     ) -> tuple[Column, Column]:
-        non_null = t.non_null_members
-        if len(non_null) == 0:
+        if len(t.non_null_members) == 0:
             err = (
                 self._err(raw.isNotNull() & (raw != F.lit("null")), "UnionError", path)
                 if raw is not None
                 else _empty_errs()
             )
             return F.lit(None), err
-        branch_keys = [type_name(m) for m in non_null]
-        # struct field names must match to_struct_type's collision-qualified
-        # union_field_names (member_0_X on short-name collisions), not the
-        # bare branch name — bare names would duplicate on collisions
-        field_names = union_field_names(t)
-        umap_expr = self._obj_map(raw, path)
-        if umap_expr is not None:
-            # let-bind the object view per output column — same k^depth
-            # duplication story (and the same shared-pair trap) as _record;
-            # each column's lambda runs a single-role traversal, so the
-            # Python-side build stays linear too
-            value = (
-                _logical_let(
-                    umap_expr,
-                    lambda m: self._union_with_map(t, wire, raw, m, path, "value")[0],
-                )
-                if role != "errs"
-                else F.lit(None)
-            )
-            errs = (
-                _logical_let(
-                    umap_expr,
-                    lambda m: self._union_with_map(t, wire, raw, m, path, "errs")[1],
-                )
-                if role != "value"
-                else _empty_errs()
-            )
-            return value, errs
-        return self._union_with_map(t, wire, raw, None, path, role)
+        if raw is None:
+            return self._union_with_map(t, wire, None, None, path, role)
+        return self._view(
+            raw, path, role, lambda m, r: self._union_with_map(t, wire, raw, m, path, r)
+        )
 
     def _union_with_map(
         self,
@@ -660,45 +603,22 @@ class _ExprBuilder:
         self, t: AvroRecord, wire: Column, raw: Optional[Column], path: str,
         role: str = "both",
     ) -> tuple[Column, Column]:
+        """Every field extraction, the key set and the shape check read the
+        record's object view — ONE parse per row through ``_view``.  (An
+        inline view per reference would embed its own ``from_json`` copy,
+        and the copies multiply per nesting level: json_decode_recursive
+        once carried 178 of them and spent ~20 s per call in
+        analysis+codegen for three rows.)"""
         n = self.depth.get(t.fqn, 0)
         self.depth[t.fqn] = n + 1
         if n >= self.RAW_RECURSION_LIMIT:
             raw = None  # keep the expression tree linear in unroll depth
         try:
-            rmap_expr = self._obj_map(raw, path)
-            if rmap_expr is None:
-                return self._record_with_map(t, wire, raw, None, path, role)
-            # let-bind the object view separately under each output column:
-            # every field extraction, the key set, and the shape check
-            # reference the map — unbound, each reference embeds its own
-            # copy of the from_json parse, and the copies multiply per
-            # nesting level (k_fields^depth: json_decode_recursive carried
-            # 178 from_json copies and spent ~20 s per call in
-            # analysis+codegen for THREE rows).  The value tree references
-            # only child values and the errs tree only child errors, so
-            # binding per column keeps each output linear in node count.
-            # (Binding one shared (v, e) pair struct instead is a trap: the
-            # two getField references duplicate the pair tree and compound
-            # per level — measured 250 kB plans and a 37 MiB task binary.)
-            # each lambda runs a single-role traversal (children skip the
-            # other slot), so Python-side build work is linear per column
-            value = (
-                _logical_let(
-                    rmap_expr,
-                    lambda m: self._record_with_map(t, wire, raw, m, path, "value")[0],
-                )
-                if role != "errs"
-                else F.lit(None)
+            if raw is None:
+                return self._record_with_map(t, wire, None, None, path, role)
+            return self._view(
+                raw, path, role, lambda m, r: self._record_with_map(t, wire, raw, m, path, r)
             )
-            errs = (
-                _logical_let(
-                    rmap_expr,
-                    lambda m: self._record_with_map(t, wire, raw, m, path, "errs")[1],
-                )
-                if role != "value"
-                else _empty_errs()
-            )
-            return value, errs
         finally:
             self.depth[t.fqn] = n
 
@@ -918,12 +838,68 @@ def _is_null_default(f: AvroField) -> bool:
 # public API
 # ---------------------------------------------------------------------------
 
-#: (schema JSON string, max_depth) -> (wire_t, flat, needs_vprobe, value,
-#: errs) — see the cache note inside decode_json.  Bounded like the codec
-#: compile caches; Columns are immutable expression trees, safe to embed in
-#: any number of plans.
-_DECODE_EXPR_CACHE: dict[tuple, tuple] = {}
+#: (schema JSON string, max_depth, SparkContext) -> (wire_t, flat,
+#: needs_vprobe, view_stages, value, errs) — see the cache note inside
+#: decode_json.  Least recently used entries are evicted first; the
+#: SparkContext in the key keeps trees built under a stopped session (or a
+#: relaunched gateway) from ever being reused.  Columns are immutable
+#: expression trees, safe to embed in any number of plans.
+_DECODE_EXPR_CACHE: OrderedDict[tuple, tuple] = OrderedDict()
 _DECODE_EXPR_CACHE_MAX = 256
+_DECODE_EXPR_LOCK = threading.Lock()
+
+# fixed internal stage-column names: the cached trees reference them
+_RAW = "_anglerfish_raw"
+_RMAP = "_anglerfish_rmap"
+_WIRE = "_anglerfish_wire"
+_VPROBE = "_anglerfish_vprobe"
+_ERRS = "_anglerfish_errs"
+
+
+def _with_cols(names: list[str], refs: dict[str, Column], new: dict[str, Column]) -> list[Column]:
+    """``withColumns`` as one projection list: a column named like a new
+    one is replaced in place, the other new ones are appended."""
+    out = [new[n].alias(n) if n in new else refs[n] for n in names]
+    return out + [c.alias(n) for n, c in new.items() if n not in names]
+
+
+def _build_trees(schema: ParsedSchema | AvroType | str, max_depth: int) -> tuple:
+    """The cacheable part of ``decode_json``: (wire_t, flat, needs_vprobe,
+    view_stages, value, errs), where ``view_stages`` holds the aliased
+    view parses of each staging level."""
+    if isinstance(schema, str):
+        schema = parse_schema(schema)
+    if isinstance(schema, ParsedSchema):
+        root, env = schema.root, schema.env
+    else:
+        root, env = schema, {}
+    wire_t = wire_struct_type(root, env, max_depth)
+    if not isinstance(wire_t, (T.StructType, T.ArrayType, T.MapType)):
+        raise InvalidParserStateError(
+            "root schema must be a record, array, map, or multi-union"
+        )
+    flat = _is_flat_record(root)
+    needs_vprobe = flat and any(_kind_rejects_json_strings(f.type) for f in root.fields)
+    raw, rmap = F.col(_RAW), F.col(_RMAP)
+    builder = _ExprBuilder(env, max_depth, root_map=rmap)
+    if flat:
+        # flat records decode from the map view alone: ONE JSON parse/row
+        value, errs = builder.build_flat_record(
+            root, rmap, raw, "$", vprobe=F.col(_VPROBE) if needs_vprobe else None
+        )
+    else:
+        value, errs = builder.build(root, F.col(_WIRE), raw, "$")
+    levels = sorted({lvl for lvl, _, _ in builder.views})
+    view_stages = [[e.alias(n) for lvl, n, e in builder.views if lvl == k] for k in levels]
+    # malformed JSON text: get_json_object('$') is null only when the text
+    # does not parse at all (from_json PERMISSIVE yields an all-null struct,
+    # so the parsed column cannot be used to detect this).  The rmap guard
+    # in front short-circuits in codegen (Java &&), so this extra parse
+    # only runs for rows whose map parse already failed — rare, unless the
+    # root schema is an array (rmap is then always null).
+    malformed = raw.isNotNull() & rmap.isNull() & F.get_json_object(raw, "$").isNull()
+    errs = F.when(malformed, F.lit(";UnexpectedJsonTypeError@$")).otherwise(errs)
+    return wire_t, flat, needs_vprobe, view_stages, value, errs
 
 
 def decode_json(
@@ -940,75 +916,51 @@ def decode_json(
     Engine analogue of reference ``parseDatum`` (AvroJsonFAlgebras.scala:715-723)
     lifted to a whole column.  ``mode``:
 
-    * ``"strict"``   — any violation raises (executor-side, via assert_true);
+    * ``"strict"``   — any violation raises (executor-side, via raise_error);
     * ``"permissive"`` — adds ``errors_col: array<string>`` of ``Code@path``.
     """
     # schema-keyed EXPRESSION cache (r14-opt, the pydecode/avro_binary
-    # compile-cache pattern lifted to the Column layer): the (wire type,
-    # value, errs) trees are pure functions of (schema JSON, max_depth) —
-    # they reference only the FIXED internal stage-column names below —
-    # and building them cost ~0.5 s of py4j round trips per invocation on
-    # the flat events schema.  Keyed on the schema STRING (all engine
-    # callers pass the JSON literal); ParsedSchema/AvroType callers skip
-    # the cache.  Compile cache, never data: the per-row parse still runs
-    # at every action.
-    cache_key = (schema, max_depth) if isinstance(schema, str) else None
-    cached = _DECODE_EXPR_CACHE.get(cache_key) if cache_key is not None else None
-    raw = F.col(col) if isinstance(col, str) else col
-
-    # staged projections: the wire parse and the error string are
-    # materialized as intermediate columns THROUGH A GENERATE BARRIER
-    # (below) so each is evaluated exactly once.  A plain withColumn is
-    # not enough: CollapseProject inlines the from_json into every
-    # downstream reference, and JsonToStructs is CodegenFallback — no
-    # codegen subexpression elimination reaches it, so the validation
-    # tree's many references each re-parsed the JSON (measured 246
-    # from_json copies in q_stream_decode's physical plan, ~13x the
-    # pipeline's runtime, before the barrier).
-    wire_col = "_anglerfish_wire"
-    rmap_col = "_anglerfish_rmap"
-    err_col = "_anglerfish_errs"
-    raw_col = "_anglerfish_raw"
-    vprobe_col = "_anglerfish_vprobe"
-    if cached is not None:
-        wire_t, flat, needs_vprobe, value, errs = cached
-    else:
-        if isinstance(schema, str):
-            schema = parse_schema(schema)
-        if isinstance(schema, ParsedSchema):
-            root, env = schema.root, schema.env
-        else:
-            root, env = schema, {}
-        wire_t = wire_struct_type(root, env, max_depth)
-        if not isinstance(wire_t, (T.StructType, T.ArrayType, T.MapType)):
-            raise InvalidParserStateError(
-                "root schema must be a record, array, map, or multi-union"
-            )
-        flat = _is_flat_record(root)
-        needs_vprobe = flat and any(
-            _kind_rejects_json_strings(f.type) for f in root.fields
-        )
-        builder = _ExprBuilder(env, max_depth, root_map=F.col(rmap_col))
-        if flat:
-            # flat records decode from the map view alone: ONE JSON parse/row
-            value, errs = builder.build_flat_record(
-                root,
-                F.col(rmap_col),
-                F.col(raw_col),
-                "$",
-                vprobe=F.col(vprobe_col) if needs_vprobe else None,
-            )
-        else:
-            value, errs = builder.build(root, F.col(wire_col), F.col(raw_col), "$")
-        if cache_key is not None:
-            if len(_DECODE_EXPR_CACHE) >= _DECODE_EXPR_CACHE_MAX:
-                _DECODE_EXPR_CACHE.clear()
-            _DECODE_EXPR_CACHE[cache_key] = (wire_t, flat, needs_vprobe, value, errs)
-    staged = df.withColumn(raw_col, raw).withColumn(
-        rmap_col, F.from_json(F.col(raw_col), T.MapType(T.StringType(), T.StringType()))
+    # compile-cache pattern lifted to the Column layer): the trees are pure
+    # functions of (schema JSON, max_depth) — they reference only the FIXED
+    # internal stage-column names — and building them costs ~0.5 s of py4j
+    # round trips per invocation on the flat events schema.  Keyed on the
+    # schema STRING (all engine callers pass the JSON literal);
+    # ParsedSchema/AvroType callers skip the cache.  Compile cache, never
+    # data: the per-row parse still runs at every action.
+    cache_key = (
+        (schema, max_depth, df.sparkSession.sparkContext) if isinstance(schema, str) else None
     )
+    cached = None
+    if cache_key is not None:
+        with _DECODE_EXPR_LOCK:  # callers may run on several driver threads
+            cached = _DECODE_EXPR_CACHE.get(cache_key)
+            if cached is not None:
+                _DECODE_EXPR_CACHE.move_to_end(cache_key)
+    if cached is None:
+        cached = _build_trees(schema, max_depth)
+        if cache_key is not None:
+            with _DECODE_EXPR_LOCK:
+                _DECODE_EXPR_CACHE[cache_key] = cached
+                if len(_DECODE_EXPR_CACHE) > _DECODE_EXPR_CACHE_MAX:
+                    _DECODE_EXPR_CACHE.popitem(last=False)
+    wire_t, flat, needs_vprobe, view_stages, value, errs = cached
+
+    # Each stage below is ONE select over column lists kept in Python
+    # (``df.columns`` is read once): every DataFrame op re-analyses the
+    # whole plan, so a withColumn chain costs a re-analysis per column.
+    names = df.columns
+    refs = {c: F.col(c) for c in names}
+    raw = (refs[col] if col in refs else F.col(col)) if isinstance(col, str) else col
+    # staged projections: the parses are materialized as intermediate
+    # columns THROUGH A GENERATE BARRIER so each is evaluated exactly once.
+    # A plain projection is not enough: CollapseProject inlines a parse
+    # into every downstream reference, and JsonToStructs is
+    # CodegenFallback — no codegen subexpression elimination reaches it
+    # (measured 246 from_json copies in q_stream_decode's physical plan,
+    # ~13x the pipeline's runtime, before the barrier).
+    stage = {_RAW: raw, _RMAP: F.from_json(raw, _OBJ_VIEW)}
     if not flat:
-        staged = staged.withColumn(wire_col, F.from_json(F.col(raw_col), wire_t))
+        stage[_WIRE] = F.from_json(raw, wire_t)
     if needs_vprobe:
         # quoted-number/boolean detection (see build_flat_record): one
         # variant parse per row, staged through the same barrier — but only
@@ -1022,28 +974,26 @@ def decode_json(
         # the prefilter is neutral-to-slightly-positive on these ~15-byte
         # payloads — its real payoff is numeric-only payloads at realistic
         # row sizes, where it skips a full second parse of the row text.
-        staged = staged.withColumn(
-            vprobe_col,
-            F.when(F.col(raw_col).rlike(':\\s*"'), F.try_parse_json(F.col(raw_col))),
-        )
-    # Generate barrier: explode of a one-element array is a row-preserving
-    # generator Catalyst cannot collapse a Project through, so the parsed
-    # columns materialize once and every downstream reference reads the
-    # materialized value.  Stays whole-stage-codegen (Generate is
-    # codegen-able; the single CodegenFallback parse runs once per row).
-    staged = staged.select(
-        F.explode(F.array(F.struct(*[F.col(c) for c in staged.columns]))).alias("_b")
-    ).select("_b.*")
-    raw = F.col(raw_col)
-    # malformed JSON text: get_json_object('$') is null only when the text
-    # does not parse at all (from_json PERMISSIVE yields an all-null struct,
-    # so the parsed column cannot be used to detect this).  The rmap guard
-    # in front short-circuits in codegen (Java &&), so this third parse
-    # only runs for rows whose map parse already failed — rare, unless the
-    # root schema is an array (rmap is then always null).
-    malformed = raw.isNotNull() & F.col(rmap_col).isNull() & F.get_json_object(raw, "$").isNull()
-    errs = F.when(malformed, F.lit("UnexpectedJsonTypeError@$")).otherwise(errs)
-    staged = staged.withColumn(err_col, errs).withColumn(output_col, value)
+        stage[_VPROBE] = F.when(raw.rlike(':\\s*"'), F.try_parse_json(raw))
+    # Generate barrier: ``inline`` of a one-element array of structs is a
+    # row-preserving generator Catalyst cannot collapse a Project through,
+    # so every column materializes once and each downstream reference
+    # reads the materialized value.  Generate stays in whole-stage codegen.
+    every = F.col("*")
+    barrier = F.inline(F.array(F.struct(every)))
+    staged = df.select(every, *[e.alias(n) for n, e in stage.items()]).select(barrier)
+    # nested views, one select per level: a view parses a field of a view
+    # one level up and is referenced many times downstream, so (with the
+    # barriers keeping parent operators from being pushed through)
+    # CollapseProject keeps every level its own Project — it never
+    # duplicates a non-cheap expression — and each view is parsed once
+    for views in view_stages:
+        staged = staged.select(every, *views)
+
+    staged = staged.select(*_with_cols(names, refs, {output_col: value, _ERRS: errs}))
+    if output_col not in refs:
+        names = [*names, output_col]
+    refs[output_col] = F.col(output_col)
     if not flat:
         # second Generate barrier: CollapseProject would otherwise inline
         # the (deep) errs tree into the strict/permissive output column and
@@ -1054,25 +1004,19 @@ def decode_json(
         # trees stay in their own Project and are optimized once each.
         # Flat records skip it: their trees are small and the extra
         # Generate would tax the hot json_decode_strict path.
-        staged = staged.select(
-            F.explode(F.array(F.struct(*[F.col(c) for c in staged.columns]))).alias("_b2")
-        ).select("_b2.*")
-    e = F.col(err_col)
-    stage_cols = [
-        c for c in (wire_col, rmap_col, err_col, raw_col, vprobe_col) if c in staged.columns
-    ]
+        staged = staged.select(barrier)
 
+    # the channel is '' or null when clean, else ';'-prefixed tags: strip
+    # the first ';' once, here
+    e = F.col(_ERRS)
+    tags = F.substr(e, F.lit(2))
     if mode == "permissive":
-        err_arr = F.when(e.isNull(), F.array().cast("array<string>")).otherwise(F.split(e, ";"))
-        return staged.withColumn(errors_col, err_arr).drop(*stage_cols)
+        err_arr = F.when(e != "", F.split(tags, ";")).otherwise(F.array().cast("array<string>"))
+        return staged.select(*_with_cols(names, refs, {errors_col: err_arr}))
     if mode == "strict":
-        boom = F.raise_error(F.concat(F.lit("anglerfish strict decode failed: "), e))
-        return (
-            staged.withColumn(
-                output_col, F.when(e.isNotNull(), boom).otherwise(F.col(output_col))
-            )
-            .drop(*stage_cols)
-        )
+        boom = F.raise_error(F.concat(F.lit("anglerfish strict decode failed: "), tags))
+        checked = F.when(e != "", boom).otherwise(refs[output_col])
+        return staged.select(*_with_cols(names, refs, {output_col: checked}))
     raise ValueError(f"unknown mode {mode!r} (strict|permissive)")
 
 

@@ -791,6 +791,116 @@ class TestRecursionThroughCollections:
             )
 
 
+class TestNestedDecodeStaysCompiled:
+    """The nested (non-flat) decode path parses every JSON view exactly
+    once, as a staged column, and binds lambdas only where a collection's
+    elements need them; a regression back to let-bound views (interpreted
+    ``transform`` over the whole error tree, and re-parses) fails here."""
+
+    ORDER = json.dumps({
+        "type": "record", "name": "Order", "namespace": "t.bulk", "fields": [
+            {"name": "id", "type": "long"},
+            {"name": "qty", "type": "int"},
+            {"name": "price", "type": "double"},
+            {"name": "sku", "type": "string"},
+            {"name": "paid", "type": "boolean"},
+            {"name": "status", "type": {"type": "enum", "name": "Status",
+                                        "symbols": ["NEW", "PAID", "SHIPPED", "LOST"]}},
+            {"name": "tags", "type": {"type": "array", "items": "string"}},
+            {"name": "attrs", "type": {"type": "map", "values": "long"}},
+            {"name": "note", "type": ["null", "string"], "default": None},
+            {"name": "ship", "type": ["null", {
+                "type": "record", "name": "Ship", "fields": [
+                    {"name": "city", "type": "string"},
+                    {"name": "zip", "type": ["null", "int"], "default": None},
+                ]}], "default": None},
+        ]})
+
+    def test_plan_parses_each_view_once(self, spark):
+        import re
+
+        df = spark.createDataFrame([('{"id": 1}',)], "j string")
+        for mode in ("strict", "permissive"):
+            out = decode_json(df, "j", self.ORDER, mode=mode)
+            plan = out._jdf.queryExecution().optimizedPlan().toString()
+            # staged views: tags elements, attrs, note, ship, Ship, zip
+            views = set(re.findall(r"_anglerfish_v\d+", plan))
+            assert len(views) == 6, sorted(views)
+            # one parse per view, plus the root object view and the wire
+            assert plan.count("from_json(") == 2 + len(views) == 8, mode
+            # lambdas only over the array's and the map's elements (value
+            # and errs each), never a let-binding of a whole subtree
+            assert plan.count("lambdafunction") == 4, mode
+            assert "transform(array(" not in plan, mode
+
+
+class TestErrorChannelIdentity:
+    """Exact permissive ``_errors`` lists (content and order) and strict
+    messages for rows with violations at several depths, on both decode
+    paths — the error channel's encoding must never leak into output."""
+
+    NESTED = json.dumps({
+        "type": "record", "name": "Doc", "fields": [
+            {"name": "id", "type": "long"},
+            {"name": "ids", "type": {"type": "array", "items": "long"}},
+            {"name": "attrs", "type": {"type": "map", "values": "long"}},
+            {"name": "ship", "type": ["null", {
+                "type": "record", "name": "Ship", "fields": [
+                    {"name": "city", "type": "string"},
+                    {"name": "zip", "type": ["null", "int"], "default": None},
+                ]}], "default": None},
+        ]})
+    FLAT = json.dumps({
+        "type": "record", "name": "Ev", "fields": [
+            {"name": "id", "type": "long"},
+            {"name": "qty", "type": "int"},
+            {"name": "status", "type": {"type": "enum", "name": "St", "symbols": ["NEW", "PAID"]}},
+        ]})
+
+    CASES = {
+        "nested": (NESTED, [
+            ('{"id": 1, "ids": [1, 2], "attrs": {"a": 1}, '
+             '"ship": {"Ship": {"city": "x", "zip": {"int": 7}}}}', []),
+            # root extra field, wrong union branch, array element overflow,
+            # map value of the wrong type
+            ('{"id": 2, "ids": [1, 99999999999999999999], "attrs": {"a": 1, "b": "x"}, '
+             '"ship": {"Nope": {"city": "y"}}, "extra": 1}',
+             ["UnexpectedTypeError@$.ids[]", "UnexpectedTypeError@$.attrs.{}",
+              "UnionResolutionError@$.ship", "RecordError@$"]),
+            ('{"id": 3, "ids": [], "attrs": {}, '
+             '"ship": {"Ship": {"city": "z", "zip": {"int": 5000000000}, "more": 1}}}',
+             ["UnexpectedTypeError@$.ship.Ship.zip.int", "RecordError@$.ship.Ship"]),
+            ("not json", ["UnexpectedJsonTypeError@$"]),
+        ]),
+        "flat": (FLAT, [
+            ('{"id": 1, "qty": 2, "status": "NEW"}', []),
+            ('{"id": "12", "qty": 5000000000, "status": "NOPE", "extra": 1}',
+             ["UnexpectedTypeError@$.id", "UnexpectedTypeError@$.qty",
+              "EnumError@$.status", "RecordError@$"]),
+            ("not json", ["UnexpectedJsonTypeError@$"]),
+        ]),
+    }
+
+    @pytest.mark.parametrize("path", ["nested", "flat"])
+    def test_permissive_and_strict_tags(self, spark, path):
+        import re
+
+        schema, cases = self.CASES[path]
+        df = spark.createDataFrame([(i, j) for i, (j, _) in enumerate(cases)], "i int, j string")
+        got = decode_json(df, "j", schema, mode="permissive").orderBy("i").collect()
+        assert [r["_errors"] for r in got] == [want for _, want in cases]
+
+        for i, (_, want) in enumerate(cases):
+            one = decode_json(df.where(f"i = {i}"), "j", schema, mode="strict")
+            if not want:
+                assert one.count() == 1
+                continue
+            with pytest.raises(Exception) as ei:
+                one.collect()
+            msg = re.search(r"anglerfish strict decode failed: (\S+)", str(ei.value))
+            assert msg is not None and msg.group(1) == ";".join(want), str(ei.value)[:400]
+
+
 class TestBpeEncode:
     """Unit semantics of the leftmost-min-rank BPE apply (q_bpe_encode)."""
 
@@ -866,3 +976,65 @@ class TestDecodeJsonExprCacheR14Opt:
                 decode_json(bad, "props", self.SCHEMA, mode="strict").collect()
             msgs.append("anglerfish strict decode failed" in str(ei.value))
         assert msgs == [True, True]
+
+    def test_lru_eviction_keeps_recent_hit(self, spark, monkeypatch):
+        from anglerfish_spark.codec import decoder as D
+
+        monkeypatch.setattr(D, "_DECODE_EXPR_CACHE_MAX", 2)
+        D._DECODE_EXPR_CACHE.clear()
+        df = spark.createDataFrame([('{"k": 1}',)], "props string")
+        a, b, c = (
+            '{"type":"record","name":"%s","fields":[{"name":"k","type":"long"}]}' % n
+            for n in "abc"
+        )
+        decode_json(df, "props", a)
+        decode_json(df, "props", b)
+        decode_json(df, "props", a)  # hit: a is now the most recent
+        decode_json(df, "props", c)  # evicts b, the least recently used
+        assert [k[0] for k in D._DECODE_EXPR_CACHE] == [a, c]
+
+    def test_concurrent_hits_and_evictions(self, spark, monkeypatch):
+        import sys
+        import threading
+
+        from anglerfish_spark.codec import decoder as D
+
+        monkeypatch.setattr(D, "_DECODE_EXPR_CACHE_MAX", 2)
+        D._DECODE_EXPR_CACHE.clear()
+        df = spark.createDataFrame([('{"k": 1}',)], "props string")
+        schemas = [
+            '{"type":"record","name":"s%d","fields":[{"name":"k","type":"long"}]}' % i
+            for i in range(3)
+        ]
+        failures: list[BaseException] = []
+
+        def work(i: int) -> None:
+            try:
+                for j in range(4):
+                    decode_json(df, "props", schemas[(i + j) % len(schemas)])
+            except BaseException as ex:  # noqa: BLE001 - reported below
+                failures.append(ex)
+
+        old = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            threads = [threading.Thread(target=work, args=(i,)) for i in range(6)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=120)
+        finally:
+            sys.setswitchinterval(old)
+        assert not any(t.is_alive() for t in threads)
+        assert failures == []
+        assert len(D._DECODE_EXPR_CACHE) <= 2
+
+    def test_key_holds_active_context(self, spark):
+        from anglerfish_spark.codec import decoder as D
+
+        D._DECODE_EXPR_CACHE.clear()
+        df = spark.createDataFrame([('{"k": 1}',)], "props string")
+        decode_json(df, "props", self.SCHEMA)
+        # trees built under another (e.g. stopped) context never match
+        ((schema, depth, sc),) = D._DECODE_EXPR_CACHE
+        assert (schema, depth) == (self.SCHEMA, 10) and sc is spark.sparkContext
