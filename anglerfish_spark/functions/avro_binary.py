@@ -14,8 +14,13 @@ prefixed unions) — implemented from the public Avro specification.
 The spark-avro connector is not on this classpath (pip pyspark ships
 avro-core only), so the UDF route is the supported path; on a cluster with
 spark-avro, ``sources.registry.avro_available`` gates the native
-``from_avro``/``to_avro`` instead.  The UDFs are Series→Series pandas UDFs
-(Arrow batches, not row-at-a-time Python).
+``from_avro``/``to_avro`` instead.  Every public codec function is one
+call into two pandas UDFs (Arrow batches, not row-at-a-time Python):
+``_encode_udf`` (Avro-JSON text → header + body) and ``_decode_udf``,
+which composes three choices — the *framing* (raw, single-object or
+Confluent), the *writer lookup* (the reader schema itself, a fingerprint
+list or id map, or a registry client) and the *output* (JSON text or the
+typed struct, strict or permissive).
 """
 
 from __future__ import annotations
@@ -25,7 +30,7 @@ import datetime as _dt
 import io
 import json
 import struct as _struct
-from functools import lru_cache
+from functools import lru_cache, partial
 from typing import Any
 
 import pandas as pd
@@ -936,53 +941,28 @@ def _cached_pydecoder(schema_json: str):
     return compile_decoder(ps.root, ps.env)
 
 
-def avro_encode_udf(schema_json: str):
-    """Series→Series pandas UDF: strict-decode Avro-JSON text and emit Avro
-    binary.  Schema is closed over (parsed once per executor)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.BinaryType())
-    def _encode(s: pd.Series) -> pd.Series:
-        codec = _cached_codec(schema_json)
-        dec_fn = _cached_pydecoder(schema_json)  # r14-opt: compiled, per-process
-        return s.map(lambda txt: codec.encode(dec_fn(json.loads(txt))))
-
-    return _encode
-
-
-def avro_decode_udf(schema_json: str):
-    """Series→Series pandas UDF: Avro binary → canonical JSON text of the
-    decoded representation."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.StringType())
-    def _decode(s: pd.Series) -> pd.Series:
-        codec = _cached_codec(schema_json)
-        json_view = _cached_json_view(schema_json)
-        return s.map(
-            lambda b: dumps_avro_json(json_view(codec.decode(bytes(b))))
-        )
-
-    return _decode
-
-
-def avro_encode(col: Column | str, schema_json: str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return avro_encode_udf(schema_json)(c)
-
-
-def avro_decode(col: Column | str, schema_json: str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return avro_decode_udf(schema_json)(c)
-
-
 # ---------------------------------------------------------------------------
-# single-object encoding (Avro spec: 0xC3 0x01 marker + CRC-64-AVRO
-# fingerprint, little-endian + binary body) — the framing schema registries
-# and message buses use to pair a datum with its schema identity
+# framing: how a message pairs an Avro binary body with its writer's identity
+#
+# * raw: the body alone; the reader schema is the writer.
+# * single-object (Avro spec): 0xC3 0x01 marker + CRC-64-AVRO fingerprint,
+#   little-endian + body — the framing schema registries and message buses
+#   use to pair a datum with its schema identity.
+# * Confluent Schema Registry wire format: magic byte 0x00 + 4-byte
+#   BIG-endian schema id + body — what every Kafka producer using
+#   Confluent's serializers emits.  The reference roadmap names
+#   "Schemaregistry support" (/root/reference/README.md:25); format per
+#   Confluent's public wire-format documentation.  Ids are registry-assigned
+#   Java ints; the consumer resolves id → writer schema via its id cache
+#   (a static map, or the registry client).
+#
+# Each ``_unframe_*`` splits a frame into (writer key, body) or raises
+# DatumError.
 # ---------------------------------------------------------------------------
 
 SINGLE_OBJECT_MAGIC = b"\xc3\x01"
+CONFLUENT_MAGIC = b"\x00"
+_INT32_MAX = 0x7FFFFFFF
 
 
 @lru_cache(maxsize=256)
@@ -992,100 +972,104 @@ def _single_object_header(schema_json: str) -> bytes:
     return SINGLE_OBJECT_MAGIC + schema_fingerprint(schema_json, "CRC-64-AVRO")
 
 
-def single_object_encode_udf(schema_json: str):
-    """Series→Series pandas UDF: Avro-JSON text → single-object-encoded
-    binary (10-byte header + Avro binary body)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.BinaryType())
-    def _encode(s: pd.Series) -> pd.Series:
-        codec = _cached_codec(schema_json)
-        header = _single_object_header(schema_json)
-        dec_fn = _cached_pydecoder(schema_json)  # r14-opt: compiled, per-process
-        return s.map(lambda txt: header + codec.encode(dec_fn(json.loads(txt))))
-
-    return _encode
+def confluent_header(schema_id: int) -> bytes:
+    """5-byte Confluent frame header: 0x00 + big-endian schema id."""
+    if not 0 <= schema_id <= _INT32_MAX:
+        raise DatumError(f"schema id {schema_id} out of int32 range")
+    return CONFLUENT_MAGIC + _struct.pack(">I", schema_id)
 
 
-def single_object_decode_udf(schema_json: str):
-    """Series→Series pandas UDF: single-object binary → canonical JSON text.
-
-    Validates the 2-byte marker and that the embedded fingerprint matches
-    ``schema_json`` (a mismatch means the message was written with a
-    different schema — surfacing it as :class:`DatumError` is the
-    single-schema reader's contract; a registry-backed reader would
-    dispatch on the fingerprint instead)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.StringType())
-    def _decode(s: pd.Series) -> pd.Series:
-        codec = _cached_codec(schema_json)
-        json_view = _cached_json_view(schema_json)
-        header = _single_object_header(schema_json)
-
-        def one(b) -> str:
-            buf = bytes(b)
-            if len(buf) < 10 or buf[:2] != SINGLE_OBJECT_MAGIC:
-                raise DatumError("not a single-object-encoded Avro message")
-            if buf[2:10] != header[2:]:
-                raise DatumError(
-                    f"schema fingerprint mismatch: message {buf[2:10].hex()}, "
-                    f"reader {header[2:].hex()}"
-                )
-            return dumps_avro_json(json_view(codec.decode(buf[10:])))
-
-        return s.map(one)
-
-    return _decode
+def _unframe_raw(buf: bytes) -> tuple[None, bytes]:
+    return None, buf
 
 
-def avro_decode_permissive_udf(schema_json: str):
-    """Series→Series pandas UDF: Avro binary → struct(value json, error).
+def _unframe_single_object(buf: bytes) -> tuple[bytes, bytes]:
+    if len(buf) < 10 or buf[:2] != SINGLE_OBJECT_MAGIC:
+        raise DatumError("not a single-object-encoded Avro message")
+    return buf[2:10], buf[10:]
 
-    The binary-path analogue of the JSON decoder's permissive mode: corrupt
-    wire input (truncated varints, overrun slices, bad union/enum indices —
-    all surfaced as :class:`DatumError` by the codec) lands in the error
-    channel instead of failing the job; trailing garbage after a complete
-    datum is likewise an error."""
-    from pyspark.sql.functions import pandas_udf
 
-    out_t = T.StructType(
-        [
-            T.StructField("value", T.StringType(), True),
-            T.StructField("error", T.StringType(), True),
-        ]
-    )
+def _unframe_confluent(buf: bytes) -> tuple[int, bytes]:
+    if len(buf) < 5 or buf[:1] != CONFLUENT_MAGIC:
+        raise DatumError("not a Confluent-framed message (magic byte != 0x00)")
+    sid = _struct.unpack(">I", buf[1:5])[0]
+    if sid > _INT32_MAX:
+        raise DatumError(f"schema id {sid} out of int32 range")
+    return sid, buf[5:]
 
-    @pandas_udf(out_t)
-    def _decode(s: pd.Series) -> pd.DataFrame:
-        codec = _cached_codec(schema_json)
-        json_view = _cached_json_view(schema_json)
-        values, errors = [], []
-        for b in s:
+
+# ---------------------------------------------------------------------------
+# writer lookup: ``get(key) -> (writer ParsedSchema or None, BinaryCodec)``;
+# None means the body was written with the reader schema itself.  Lookups
+# are built once per Arrow batch in the worker.
+# ---------------------------------------------------------------------------
+
+
+class _ReaderLookup:
+    """The reader schema is the only writer: the frame's key must be the
+    reader's own fingerprint (``None`` for raw frames, which carry none).
+    A mismatch means the message was written with a different schema —
+    a registry-backed reader would dispatch on it instead."""
+
+    def __init__(self, schema_json: str, fingerprint: bytes | None = None) -> None:
+        self._fingerprint = fingerprint
+        self._entry = (None, _cached_codec(schema_json))
+
+    def get(self, key):
+        if key != self._fingerprint:
+            raise DatumError(
+                f"schema fingerprint mismatch: message {key.hex()}, "
+                f"reader {self._fingerprint.hex()}"
+            )
+        return self._entry
+
+
+class _WriterTable:
+    """A static writer table (fingerprint list or id map): ``miss(key)``
+    is the DatumError text for a key it does not hold."""
+
+    def __init__(self, writers: dict, miss) -> None:
+        self._entries = {k: (_cached_schema(w), _cached_codec(w)) for k, w in writers.items()}
+        self._miss = miss
+
+    def get(self, key):
+        entry = self._entries.get(key)
+        if entry is None:
+            raise DatumError(self._miss(key))
+        return entry
+
+
+class _ClientIdResolver:
+    """id -> (ParsedSchema, BinaryCodec) through the process's
+    SchemaRegistryClient for ``base_url`` (LRU id cache, retries),
+    memoizing parsed schemas per batch (the client itself memoizes the
+    JSON per process).  Registry id-miss becomes DatumError so the
+    permissive path dead-letters it like any other poisoned frame; network
+    failures stay SchemaRegistryError — those must fail the batch (retry),
+    not silently dead-letter healthy messages."""
+
+    def __init__(self, base_url: str) -> None:
+        from ..sources.schema_registry import process_client
+
+        self._client = process_client(base_url)
+        self._cache: dict[int, tuple] = {}
+
+    def get(self, sid: int):
+        from ..sources.schema_registry import SchemaNotFoundError
+
+        entry = self._cache.get(sid)
+        if entry is None:
             try:
-                values.append(dumps_avro_json(json_view(codec.decode(bytes(b)))))
-                errors.append(None)
-            except DatumError as ex:
-                values.append(None)
-                errors.append(f"DatumError: {ex}")
-        return pd.DataFrame({"value": values, "error": errors})
-
-    return _decode
+                wjson = self._client.schema_by_id(sid)
+            except SchemaNotFoundError as ex:
+                raise DatumError(f"schema id {sid} not in registry") from ex
+            entry = self._cache[sid] = (_cached_schema(wjson), _cached_codec(wjson))
+        return entry
 
 
-def avro_decode_permissive(col: Column | str, schema_json: str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return avro_decode_permissive_udf(schema_json)(c)
-
-
-def single_object_encode(col: Column | str, schema_json: str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return single_object_encode_udf(schema_json)(c)
-
-
-def single_object_decode(col: Column | str, schema_json: str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return single_object_decode_udf(schema_json)(c)
+# ---------------------------------------------------------------------------
+# typed output: carrier-space values → the struct ``to_struct_type`` declares
+# ---------------------------------------------------------------------------
 
 
 def _lift_semantic(logical, x):
@@ -1167,490 +1151,253 @@ def _typed_frame(rows: list, field_names: list[str], out_t: T.StructType) -> pd.
     return df
 
 
-def single_object_decode_typed_udf(schema_json: str):
-    """Series→DataFrame pandas UDF: single-object binary → the TYPED
-    struct directly (one Arrow hop), skipping the JSON text round-trip of
-    :func:`single_object_decode_udf` + ``decode_json``.
-
-    Same validation contract as the JSON-hop path — framing marker and
-    embedded-fingerprint checks raise :class:`DatumError` — and the body
-    needs no re-validation: binary decode is schema-directed, so a
-    successfully decoded datum IS well-typed (the JSON hop merely
-    re-checked the codec's own output).  Use for the consumption hot
-    path; the JSON hop remains the route when downstream wants the
-    permissive error channel or text for auditing."""
-    from pyspark.sql.functions import pandas_udf
-
-    from ..schema.spark_convert import to_struct_type
-
-    _ps = parse_schema(schema_json)
-    # all-nullable copy: pandas→Arrow batches always carry nullable
-    # fields, and Spark 4 rejects the schema otherwise (nullability here
-    # is metadata — required-field enforcement happened at binary decode)
-    out_t = _nullable_type(to_struct_type(_ps.root, _ps.env))
-    if not isinstance(_ps.root, AvroRecord):
-        raise DatumError("typed decode requires a record root schema")
-    field_names = [f.name for f in _ps.root.fields]
-
-    @pandas_udf(out_t)
-    def _decode(s: pd.Series) -> pd.DataFrame:
-        codec = _cached_codec(schema_json)
-        semantic = _cached_semantic_view(schema_json)
-        header = _single_object_header(schema_json)
-        rows = []
-        for b in s:
-            buf = bytes(b)
-            if len(buf) < 10 or buf[:2] != SINGLE_OBJECT_MAGIC:
-                raise DatumError("not a single-object-encoded Avro message")
-            if buf[2:10] != header[2:]:
-                raise DatumError(
-                    f"schema fingerprint mismatch: message {buf[2:10].hex()}, "
-                    f"reader {header[2:].hex()}"
-                )
-            rows.append(semantic(codec.decode(buf[10:])))
-        return _typed_frame(rows, field_names, out_t)
-
-    return _decode
-
-
-def single_object_decode_typed(col: Column | str, schema_json: str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return single_object_decode_typed_udf(schema_json)(c)
-
-
-def single_object_decode_registry_typed_udf(writer_schemas: list[str], reader_schema: str):
-    """Typed variant of :func:`single_object_decode_registry_udf`: dispatch
-    each message to its writer schema by the embedded CRC-64-AVRO
-    fingerprint, resolve writer→reader (codec/evolve.resolve_datum), and
-    emit the reader-shaped TYPED struct straight from the Arrow batch —
-    the registry consumption hot path without the JSON round-trip.
-    Unknown fingerprints raise DatumError, as in the JSON-hop variant."""
-    from pyspark.sql.functions import pandas_udf
-
-    from ..schema.spark_convert import to_struct_type
-
-    _rps = parse_schema(reader_schema)
-    if not isinstance(_rps.root, AvroRecord):
-        raise DatumError("typed decode requires a record root schema")
-    out_t = _nullable_type(to_struct_type(_rps.root, _rps.env))
-    field_names = [f.name for f in _rps.root.fields]
-
-    @pandas_udf(out_t)
-    def _decode(s: pd.Series) -> pd.DataFrame:
-        from ..codec.evolve import resolve_datum
-
-        rps = _cached_schema(reader_schema)
-        semantic = _cached_semantic_view(reader_schema)
-        by_fp = {}
-        for wjson in writer_schemas:
-            by_fp[_single_object_header(wjson)[2:]] = (
-                _cached_schema(wjson),
-                _cached_codec(wjson),
-            )
-        rows = []
-        for b in s:
-            buf = bytes(b)
-            if len(buf) < 10 or buf[:2] != SINGLE_OBJECT_MAGIC:
-                raise DatumError("not a single-object-encoded Avro message")
-            entry = by_fp.get(buf[2:10])
-            if entry is None:
-                raise DatumError(f"unknown schema fingerprint {buf[2:10].hex()}")
-            wps, codec = entry
-            out = resolve_datum(codec.decode(buf[10:]), wps.root, rps.root, rps.env, wps.env)
-            rows.append(semantic(out))
-        return _typed_frame(rows, field_names, out_t)
-
-    return _decode
-
-
-def single_object_decode_registry_typed(
-    col: Column | str, writer_schemas: list[str], reader_schema: str
-) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return single_object_decode_registry_typed_udf(writer_schemas, reader_schema)(c)
-
-
-def confluent_decode_registry_typed_udf(schemas_by_id: dict[int, str], reader_schema: str):
-    """Typed variant of :func:`confluent_decode_registry_udf`: Confluent
-    5-byte framing (0x00 + BE id) dispatched by id, resolved writer→reader,
-    emitted as ``struct(schema_id int, value struct<reader>)`` — the id
-    stays a column for producer-version auditing, the body skips the JSON
-    round-trip."""
-    from pyspark.sql.functions import pandas_udf
-
-    from ..schema.spark_convert import to_struct_type
-
-    _rps = parse_schema(reader_schema)
-    if not isinstance(_rps.root, AvroRecord):
-        raise DatumError("typed decode requires a record root schema")
-    value_t = _nullable_type(to_struct_type(_rps.root, _rps.env))
-    out_t = T.StructType(
-        [
-            T.StructField("schema_id", T.IntegerType(), True),
-            T.StructField("value", value_t, True),
-        ]
-    )
-
-    @pandas_udf(out_t)
-    def _decode(s: pd.Series) -> pd.DataFrame:
-        from ..codec.evolve import resolve_datum
-
-        rps = _cached_schema(reader_schema)
-        semantic = _cached_semantic_view(reader_schema)
-        by_id = {}
-        for sid, wjson in schemas_by_id.items():
-            by_id[int(sid)] = (_cached_schema(wjson), _cached_codec(wjson))
-        ids, values = [], []
-        for b in s:
-            buf = bytes(b)
-            if len(buf) < 5 or buf[:1] != CONFLUENT_MAGIC:
-                raise DatumError("not a Confluent-framed message (magic byte != 0x00)")
-            sid = _struct.unpack(">I", buf[1:5])[0]
-            entry = by_id.get(sid)
-            if entry is None:
-                raise DatumError(f"schema id {sid} not in registry map")
-            wps, codec = entry
-            out = resolve_datum(codec.decode(buf[5:]), wps.root, rps.root, rps.env, wps.env)
-            ids.append(sid)
-            values.append(semantic(out))
-        return pd.DataFrame(
-            {"schema_id": pd.array(ids, dtype="Int32"), "value": values}
-        )
-
-    return _decode
-
-
-def confluent_decode_registry_typed(
-    col: Column | str, schemas_by_id: dict[int, str], reader_schema: str
-) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return confluent_decode_registry_typed_udf(schemas_by_id, reader_schema)(c)
-
-
-def single_object_decode_registry_udf(writer_schemas: list[str], reader_schema: str):
-    """Series→Series pandas UDF: single-object binary → reader-shaped JSON,
-    dispatching each message to its writer schema by the embedded
-    CRC-64-AVRO fingerprint — the full schema-registry consumption path
-    (a stream interleaving messages from several schema versions reads as
-    one uniform relation).  Unknown fingerprints raise DatumError."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.StringType())
-    def _decode(s: pd.Series) -> pd.Series:
-        from ..codec.evolve import resolve_datum
-
-        rps = _cached_schema(reader_schema)
-        json_view = _cached_json_view(reader_schema)
-        by_fp = {}
-        for wjson in writer_schemas:
-            by_fp[_single_object_header(wjson)[2:]] = (
-                _cached_schema(wjson),
-                _cached_codec(wjson),
-            )
-
-        def one(b) -> str:
-            buf = bytes(b)
-            if len(buf) < 10 or buf[:2] != SINGLE_OBJECT_MAGIC:
-                raise DatumError("not a single-object-encoded Avro message")
-            entry = by_fp.get(buf[2:10])
-            if entry is None:
-                raise DatumError(f"unknown schema fingerprint {buf[2:10].hex()}")
-            wps, codec = entry
-            v = codec.decode(buf[10:])
-            out = resolve_datum(v, wps.root, rps.root, rps.env, wps.env)
-            return dumps_avro_json(json_view(out))
-
-        return s.map(one)
-
-    return _decode
-
-
-def single_object_decode_registry(
-    col: Column | str, writer_schemas: list[str], reader_schema: str
-) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return single_object_decode_registry_udf(writer_schemas, reader_schema)(c)
-
-
-def single_object_decode_permissive_udf(schema_json: str):
-    """Series→Series pandas UDF: single-object binary → struct(value json,
-    error).  The dead-letter variant of :func:`single_object_decode_udf`:
-    framing defects (bad magic, short header, fingerprint mismatch) and
-    body defects (truncated varints, overruns, bad indices) land in the
-    error channel instead of failing the batch — the PERMISSIVE contract a
-    long-running stream consumer needs (one poisoned message must not kill
-    the query)."""
-    from pyspark.sql.functions import pandas_udf
-
-    out_t = T.StructType(
-        [
-            T.StructField("value", T.StringType(), True),
-            T.StructField("error", T.StringType(), True),
-        ]
-    )
-
-    @pandas_udf(out_t)
-    def _decode(s: pd.Series) -> pd.DataFrame:
-        codec = _cached_codec(schema_json)
-        json_view = _cached_json_view(schema_json)
-        header = _single_object_header(schema_json)
-        values, errors = [], []
-        for b in s:
-            try:
-                buf = bytes(b)
-                if len(buf) < 10 or buf[:2] != SINGLE_OBJECT_MAGIC:
-                    raise DatumError("not a single-object-encoded Avro message")
-                if buf[2:10] != header[2:]:
-                    raise DatumError(
-                        f"schema fingerprint mismatch: message {buf[2:10].hex()}, "
-                        f"reader {header[2:].hex()}"
-                    )
-                values.append(dumps_avro_json(json_view(codec.decode(buf[10:]))))
-                errors.append(None)
-            except DatumError as ex:
-                values.append(None)
-                errors.append(f"DatumError: {ex}")
-        return pd.DataFrame({"value": values, "error": errors})
-
-    return _decode
-
-
-def single_object_decode_permissive(col: Column | str, schema_json: str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return single_object_decode_permissive_udf(schema_json)(c)
-
-
 # ---------------------------------------------------------------------------
-# Confluent Schema Registry wire format: magic byte 0x00 + 4-byte BIG-endian
-# schema id + Avro binary body.  This is the framing every Kafka producer
-# using Confluent's serializers emits — distinct from the Avro spec's
-# single-object encoding above (0xC3 0x01 + little-endian CRC-64-AVRO
-# fingerprint).  The reference roadmap names "Schemaregistry support"
-# (/root/reference/README.md:25); format per Confluent's public wire-format
-# documentation.  Ids are registry-assigned integers; the consumer resolves
-# id → writer schema via its subject map (here: a closed-over dict standing
-# in for the registry client's id cache).
+# the two pandas UDFs every public codec function is built from
 # ---------------------------------------------------------------------------
 
-CONFLUENT_MAGIC = b"\x00"
 
+def _encode_udf(schema_json: str, header: bytes = b""):
+    """Avro-JSON text → ``header`` + Avro binary body.  The text is
+    strict-decoded against the schema first; the schema is parsed here,
+    on the driver, so a bad one fails at call time."""
+    _cached_schema(schema_json)
 
-def confluent_header(schema_id: int) -> bytes:
-    """5-byte Confluent frame header: 0x00 + big-endian uint32 schema id."""
-    if not 0 <= schema_id <= 0xFFFFFFFF:
-        raise DatumError(f"schema id {schema_id} out of uint32 range")
-    return CONFLUENT_MAGIC + _struct.pack(">I", schema_id)
-
-
-def confluent_encode_udf(schema_json: str, schema_id: int):
-    """Series→Series pandas UDF: Avro-JSON text → Confluent-framed binary
-    (5-byte header + Avro binary body), as a registry-registered producer
-    with the given id would emit."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.BinaryType())
+    @F.pandas_udf(T.BinaryType())
     def _encode(s: pd.Series) -> pd.Series:
         codec = _cached_codec(schema_json)
-        header = confluent_header(schema_id)
         dec_fn = _cached_pydecoder(schema_json)  # r14-opt: compiled, per-process
         return s.map(lambda txt: header + codec.encode(dec_fn(json.loads(txt))))
 
     return _encode
 
 
-def confluent_decode_registry_udf(schemas_by_id: dict[int, str], reader_schema: str):
-    """Series→Series pandas UDF: Confluent-framed binary →
-    struct(schema_id int, json string) under the reader schema.
+def _decode_udf(
+    unframe, writers, reader_schema: str, typed: bool = False, permissive: bool = False
+):
+    """Framed Avro binary → reader-shaped value.
 
-    Each message dispatches to its writer schema by the embedded 4-byte id
-    (the id cache a Confluent deserializer keeps after resolving ids against
-    the registry), then resolves writer→reader via the engine's schema
-    evolution (codec/evolve.py) — so a topic interleaving several registered
-    versions reads as one uniform reader-shaped relation, with the writer id
-    surfaced as a column (consumers routinely audit which producers are on
-    which version).  Unknown ids and bad magic raise DatumError — use
-    :func:`confluent_decode_registry_permissive_udf` for the dead-letter
-    variant."""
-    from pyspark.sql.functions import pandas_udf
+    ``unframe`` is one of the ``_unframe_*`` framings; ``writers()`` builds
+    the batch's writer lookup.  A body written with another schema is
+    resolved writer→reader (codec/evolve.py), so a stream interleaving
+    several writer versions reads as one uniform relation.  The value is
+    canonical JSON text, or with ``typed`` the reader's struct directly
+    (one Arrow hop, no JSON round-trip; a successfully decoded datum IS
+    well-typed, since binary decode is schema-directed).  It is returned
+    bare, or in a struct with a leading ``schema_id`` column for Confluent
+    frames (the value column is then ``json`` for text) and a trailing
+    ``error`` column when ``permissive``: framing, lookup and body defects
+    then dead-letter the row instead of failing the batch, and
+    ``schema_id`` is still surfaced when the header parsed.
 
-    out_t = T.StructType(
-        [
-            T.StructField("schema_id", T.IntegerType(), True),
-            T.StructField("json", T.StringType(), True),
-        ]
-    )
+    The schema is parsed, the record-root check made and the output type
+    built here, on the driver; the body only decodes."""
+    from ..schema.spark_convert import to_struct_type
 
-    @pandas_udf(out_t)
-    def _decode(s: pd.Series) -> pd.DataFrame:
-        from ..codec.evolve import resolve_datum
-
-        rps = _cached_schema(reader_schema)
-        json_view = _cached_json_view(reader_schema)
-        by_id = {}
-        for sid, wjson in schemas_by_id.items():
-            by_id[int(sid)] = (_cached_schema(wjson), _cached_codec(wjson))
-
-        ids, jsons = [], []
-        for b in s:
-            sid, txt = _confluent_one(bytes(b), by_id, rps, resolve_datum, json_view)
-            ids.append(sid)
-            jsons.append(txt)
-        return pd.DataFrame({"schema_id": pd.array(ids, dtype="Int32"), "json": jsons})
-
-    return _decode
-
-
-def _confluent_one(buf: bytes, by_id, rps, resolve_datum, json_view=None) -> tuple[int, str]:
-    """Decode one Confluent-framed message; shared by strict + permissive.
-    ``by_id`` is a dict (static id map) or any object with a dict-shaped
-    ``get`` whose miss may raise DatumError itself (the registry-client
-    resolver does, so an id unknown to the *registry* dead-letters with
-    the same contract as an id missing from a static map)."""
-    if len(buf) < 5 or buf[:1] != CONFLUENT_MAGIC:
-        raise DatumError("not a Confluent-framed message (magic byte != 0x00)")
-    sid = _struct.unpack(">I", buf[1:5])[0]
-    entry = by_id.get(sid)
-    if entry is None:
-        raise DatumError(f"schema id {sid} not in registry map")
-    wps, codec = entry
-    v = codec.decode(buf[5:])
-    out = resolve_datum(v, wps.root, rps.root, rps.env, wps.env)
-    if json_view is None:
-        return sid, dumps_avro_json(as_avro_json(rps.root, out, rps.env))
-    return sid, dumps_avro_json(json_view(out))
-
-
-class _ClientIdResolver:
-    """id -> (ParsedSchema, BinaryCodec) through a SchemaRegistryClient,
-    memoizing parsed schemas per UDF instance (the client itself memoizes
-    the JSON per process).  Registry id-miss becomes DatumError so the
-    permissive path dead-letters it like any other poisoned frame; network
-    failures stay SchemaRegistryError — those must fail the batch (retry),
-    not silently dead-letter healthy messages."""
-
-    def __init__(self, client) -> None:
-        self._client = client
-        self._cache: dict[int, tuple] = {}
-
-    def get(self, sid: int):
-        from ..sources.schema_registry import SchemaNotFoundError
-
-        entry = self._cache.get(sid)
-        if entry is None:
-            try:
-                wjson = self._client.schema_by_id(sid)
-            except SchemaNotFoundError as ex:
-                raise DatumError(f"schema id {sid} not in registry") from ex
-            entry = self._cache[sid] = (_cached_schema(wjson), _cached_codec(wjson))
-        return entry
-
-
-def confluent_decode_client_udf(base_url: str, reader_schema: str, permissive: bool = False):
-    """Registry-client-backed variant of the Confluent decode UDFs: writer
-    schemas resolve by id against the Schema Registry REST API
-    (sources/schema_registry.py — LRU id cache, retries) instead of a
-    static id map, which is what a long-lived consumer actually does when
-    a producer rolls a new version mid-stream.  One client per (process,
-    base_url) so the cache amortizes across Arrow batches and partitions.
-    ``permissive``: unknown-id / framing / body defects populate an
-    ``error`` column (dead-letter) instead of failing the batch."""
-    from pyspark.sql.functions import pandas_udf
-
-    fields = [
-        T.StructField("schema_id", T.IntegerType(), True),
-        T.StructField("json", T.StringType(), True),
-    ]
+    ps = _cached_schema(reader_schema)
+    field_names = None
+    if typed:
+        if not isinstance(ps.root, AvroRecord):
+            raise DatumError("typed decode requires a record root schema")
+        # all-nullable copy: pandas→Arrow batches always carry nullable
+        # fields, and Spark 4 rejects the schema otherwise (nullability here
+        # is metadata — required-field enforcement happened at binary decode)
+        value_t = _nullable_type(to_struct_type(ps.root, ps.env))
+        field_names = [f.name for f in ps.root.fields]
+    else:
+        value_t = T.StringType()
+    with_id = unframe is _unframe_confluent
+    value_col = "json" if with_id and not typed else "value"
+    fields = [T.StructField(value_col, value_t, True)]
+    if with_id:
+        fields.insert(0, T.StructField("schema_id", T.IntegerType(), True))
     if permissive:
         fields.append(T.StructField("error", T.StringType(), True))
-    out_t = T.StructType(fields)
+    bare = len(fields) == 1
 
-    @pandas_udf(out_t)
-    def _decode(s: pd.Series) -> pd.DataFrame:
+    def _decode(s: pd.Series):
         from ..codec.evolve import resolve_datum
-        from ..sources.schema_registry import process_client
 
         rps = _cached_schema(reader_schema)
-        json_view = _cached_json_view(reader_schema)
-        resolver = _ClientIdResolver(process_client(base_url))
-        ids, jsons, errors = [], [], []
-        for b in s:
-            buf = bytes(b)
-            sid = None
-            try:
-                if len(buf) >= 5 and buf[:1] == CONFLUENT_MAGIC:
-                    sid = _struct.unpack(">I", buf[1:5])[0]
-                sid, txt = _confluent_one(buf, resolver, rps, resolve_datum, json_view)
-                ids.append(sid)
-                jsons.append(txt)
-                errors.append(None)
-            except DatumError as ex:
-                if not permissive:
-                    raise
-                ids.append(sid)
-                jsons.append(None)
-                errors.append(f"DatumError: {ex}")
-        out = {"schema_id": pd.array(ids, dtype="Int32"), "json": jsons}
+        if typed:
+            emit = _cached_semantic_view(reader_schema)
+        else:
+            json_view = _cached_json_view(reader_schema)
+
+            def emit(v):
+                return dumps_avro_json(json_view(v))
+
+        get = writers().get
+
+        def read(key, body):
+            writer, codec = get(key)
+            v = codec.decode(body)
+            if writer is None:
+                return v
+            return resolve_datum(v, writer.root, rps.root, rps.env, writer.env)
+
+        if permissive:
+            keys, values, errors = [], [], []
+            for b in s:
+                key = None
+                try:
+                    key, body = unframe(bytes(b))
+                    values.append(emit(read(key, body)))
+                    errors.append(None)
+                except DatumError as ex:
+                    values.append(None)
+                    errors.append(f"DatumError: {ex}")
+                keys.append(key)
+        else:
+            frames = [unframe(bytes(b)) for b in s]
+            values = [emit(read(key, body)) for key, body in frames]
+        if bare:
+            return _typed_frame(values, field_names, value_t) if typed else pd.Series(values)
+        out = {value_col: values}
+        if with_id:
+            ids = keys if permissive else [key for key, _ in frames]
+            out = {"schema_id": pd.array(ids, dtype="Int32"), **out}
         if permissive:
             out["error"] = errors
         return pd.DataFrame(out)
 
-    return _decode
+    # Spark infers the UDF kind from the hints: a struct result needs a frame
+    _decode.__annotations__["return"] = pd.Series if bare and not typed else pd.DataFrame
+    return F.pandas_udf(value_t if bare else T.StructType(fields))(_decode)
+
+
+# ---------------------------------------------------------------------------
+# public Column functions
+# ---------------------------------------------------------------------------
+
+
+def avro_encode(col: Column | str, schema_json: str) -> Column:
+    """Avro-JSON text → Avro binary."""
+    return _encode_udf(schema_json)(col)
+
+
+def avro_decode(col: Column | str, schema_json: str) -> Column:
+    """Avro binary → canonical JSON text of the decoded representation."""
+    return _decode_udf(_unframe_raw, partial(_ReaderLookup, schema_json), schema_json)(col)
+
+
+def avro_decode_permissive(col: Column | str, schema_json: str) -> Column:
+    """Avro binary → struct(value json, error): the binary-path analogue of
+    the JSON decoder's permissive mode.  Corrupt wire input (truncated
+    varints, overrun slices, bad union/enum indices, trailing bytes) lands
+    in the error channel instead of failing the job."""
+    reader = partial(_ReaderLookup, schema_json)
+    return _decode_udf(_unframe_raw, reader, schema_json, permissive=True)(col)
+
+
+def single_object_encode(col: Column | str, schema_json: str) -> Column:
+    """Avro-JSON text → single-object-encoded binary (10-byte header +
+    Avro binary body)."""
+    return _encode_udf(schema_json, _single_object_header(schema_json))(col)
+
+
+def _single_object_reader(schema_json: str):
+    return partial(_ReaderLookup, schema_json, _single_object_header(schema_json)[2:])
+
+
+def single_object_decode(col: Column | str, schema_json: str) -> Column:
+    """Single-object binary → canonical JSON text.  The marker and the
+    embedded fingerprint must match ``schema_json`` (DatumError
+    otherwise)."""
+    reader = _single_object_reader(schema_json)
+    return _decode_udf(_unframe_single_object, reader, schema_json)(col)
+
+
+def single_object_decode_permissive(col: Column | str, schema_json: str) -> Column:
+    """Single-object binary → struct(value json, error), the dead-letter
+    variant of :func:`single_object_decode` a long-running stream consumer
+    needs (one poisoned message must not kill the query)."""
+    reader = _single_object_reader(schema_json)
+    return _decode_udf(_unframe_single_object, reader, schema_json, permissive=True)(col)
+
+
+def single_object_decode_typed(col: Column | str, schema_json: str) -> Column:
+    """Single-object binary → the TYPED struct directly, skipping the JSON
+    text round-trip of :func:`single_object_decode` + ``decode_json`` —
+    the consumption hot path, with the same framing checks."""
+    reader = _single_object_reader(schema_json)
+    return _decode_udf(_unframe_single_object, reader, schema_json, typed=True)(col)
+
+
+def _fingerprint_table(writer_schemas: list[str]):
+    by_fp = {_single_object_header(w)[2:]: w for w in writer_schemas}
+    return partial(_WriterTable, by_fp, lambda fp: f"unknown schema fingerprint {fp.hex()}")
+
+
+def single_object_decode_registry(
+    col: Column | str, writer_schemas: list[str], reader_schema: str
+) -> Column:
+    """Single-object binary → reader-shaped JSON, dispatching each message
+    to its writer schema by the embedded CRC-64-AVRO fingerprint.  Unknown
+    fingerprints raise DatumError."""
+    writers = _fingerprint_table(writer_schemas)
+    return _decode_udf(_unframe_single_object, writers, reader_schema)(col)
+
+
+def single_object_decode_registry_typed(
+    col: Column | str, writer_schemas: list[str], reader_schema: str
+) -> Column:
+    """Typed variant of :func:`single_object_decode_registry`."""
+    writers = _fingerprint_table(writer_schemas)
+    return _decode_udf(_unframe_single_object, writers, reader_schema, typed=True)(col)
+
+
+def confluent_encode(col: Column | str, schema_json: str, schema_id: int) -> Column:
+    """Avro-JSON text → Confluent-framed binary, as a producer registered
+    under ``schema_id`` would emit."""
+    return _encode_udf(schema_json, confluent_header(schema_id))(col)
+
+
+def _id_table(schemas_by_id: dict[int, str]):
+    by_id = {int(k): w for k, w in schemas_by_id.items()}
+    return partial(_WriterTable, by_id, lambda sid: f"schema id {sid} not in registry map")
+
+
+def confluent_decode_registry(
+    col: Column | str, schemas_by_id: dict[int, str], reader_schema: str
+) -> Column:
+    """Confluent-framed binary → struct(schema_id int, json string) under
+    the reader schema, each message dispatched to its writer by the
+    embedded id (the id cache a Confluent deserializer keeps).  The id
+    stays a column: consumers routinely audit which producers are on which
+    version.  Unknown ids and bad magic raise DatumError."""
+    return _decode_udf(_unframe_confluent, _id_table(schemas_by_id), reader_schema)(col)
+
+
+def confluent_decode_registry_permissive(
+    col: Column | str, schemas_by_id: dict[int, str], reader_schema: str
+) -> Column:
+    """Dead-letter variant of :func:`confluent_decode_registry`:
+    struct(schema_id, json, error)."""
+    writers = _id_table(schemas_by_id)
+    return _decode_udf(_unframe_confluent, writers, reader_schema, permissive=True)(col)
+
+
+def confluent_decode_registry_typed(
+    col: Column | str, schemas_by_id: dict[int, str], reader_schema: str
+) -> Column:
+    """Typed variant of :func:`confluent_decode_registry`:
+    struct(schema_id int, value struct<reader>)."""
+    writers = _id_table(schemas_by_id)
+    return _decode_udf(_unframe_confluent, writers, reader_schema, typed=True)(col)
 
 
 def confluent_decode_client(
     col: Column | str, base_url: str, reader_schema: str, permissive: bool = False
 ) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return confluent_decode_client_udf(base_url, reader_schema, permissive)(c)
-
-
-def confluent_decode_registry_permissive_udf(
-    schemas_by_id: dict[int, str], reader_schema: str
-):
-    """Dead-letter variant of :func:`confluent_decode_registry_udf`:
-    struct(schema_id, json, error) — framing/id/body defects populate
-    ``error`` instead of failing the batch (schema_id is still surfaced
-    when the header parsed, for routing poisoned messages by producer)."""
-    from pyspark.sql.functions import pandas_udf
-
-    out_t = T.StructType(
-        [
-            T.StructField("schema_id", T.IntegerType(), True),
-            T.StructField("json", T.StringType(), True),
-            T.StructField("error", T.StringType(), True),
-        ]
-    )
-
-    @pandas_udf(out_t)
-    def _decode(s: pd.Series) -> pd.DataFrame:
-        from ..codec.evolve import resolve_datum
-
-        rps = _cached_schema(reader_schema)
-        json_view = _cached_json_view(reader_schema)
-        by_id = {}
-        for sid, wjson in schemas_by_id.items():
-            by_id[int(sid)] = (_cached_schema(wjson), _cached_codec(wjson))
-
-        ids, jsons, errors = [], [], []
-        for b in s:
-            buf = bytes(b)
-            sid = None
-            try:
-                if len(buf) >= 5 and buf[:1] == CONFLUENT_MAGIC:
-                    sid = _struct.unpack(">I", buf[1:5])[0]
-                _, txt = _confluent_one(buf, by_id, rps, resolve_datum, json_view)
-                ids.append(sid)
-                jsons.append(txt)
-                errors.append(None)
-            except DatumError as ex:
-                ids.append(sid)
-                jsons.append(None)
-                errors.append(f"DatumError: {ex}")
-        return pd.DataFrame(
-            {"schema_id": pd.array(ids, dtype="Int32"), "json": jsons, "error": errors}
-        )
-
-    return _decode
+    """Registry-client-backed :func:`confluent_decode_registry`: writer
+    schemas resolve by id against the Schema Registry REST API
+    (sources/schema_registry.py) instead of a static id map — what a
+    long-lived consumer does when a producer rolls a new version
+    mid-stream.  One client per (process, base_url), so its cache
+    amortizes across batches.  ``permissive`` adds the ``error``
+    column."""
+    writers = partial(_ClientIdResolver, base_url)
+    return _decode_udf(_unframe_confluent, writers, reader_schema, permissive=permissive)(col)
 
 
 # ---------------------------------------------------------------------------
@@ -1704,7 +1451,7 @@ def avro_decode_typed(
     tmp = "_anglerfish_avro_json"
     return (
         decode_json(
-            df.withColumn(tmp, avro_decode_udf(schema_json)(c)),
+            df.withColumn(tmp, avro_decode(c, schema_json)),
             tmp,
             schema_json,
             output_col=output_col,
@@ -1747,25 +1494,4 @@ def avro_encode_typed(
 
         ps = parse_schema(schema_json)
         return df.withColumn(output_col, _to_avro(c, to_avsc(ps.root)))
-    return df.withColumn(
-        output_col, avro_encode_udf(schema_json)(F.to_json(c))
-    )
-
-
-def confluent_encode(col: Column | str, schema_json: str, schema_id: int) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return confluent_encode_udf(schema_json, schema_id)(c)
-
-
-def confluent_decode_registry(
-    col: Column | str, schemas_by_id: dict[int, str], reader_schema: str
-) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return confluent_decode_registry_udf(schemas_by_id, reader_schema)(c)
-
-
-def confluent_decode_registry_permissive(
-    col: Column | str, schemas_by_id: dict[int, str], reader_schema: str
-) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return confluent_decode_registry_permissive_udf(schemas_by_id, reader_schema)(c)
+    return df.withColumn(output_col, avro_encode(F.to_json(c), schema_json))

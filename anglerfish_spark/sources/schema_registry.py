@@ -3,8 +3,9 @@
 The reference roadmap names "Schemaregistry support" as the consumption
 surface it never built (/root/reference/README.md:25).  Round 4 added the
 *wire framing* (magic 0x00 + 4-byte big-endian schema id,
-``functions/avro_binary.py``) with a static id→schema map standing in for
-the consumer's cache; this module is the cache's real owner — the client
+``_unframe_confluent`` in ``functions/avro_binary.py``) with a static
+id→schema map (``confluent_decode_registry``) standing in for the
+consumer's cache; this module is the cache's real owner — the client
 layer a deserializer calls when an id misses:
 
 * ``schema_by_id`` — ``GET /schemas/ids/{id}``; ids are immutable in the

@@ -4,11 +4,11 @@ windowed aggregates.
 The reference's roadmap names Kafka + Schema Registry consumption as the
 target I/O surface (/root/reference/README.md:21-27, never implemented).
 The engine's decode API is already message-bus-shaped — spec single-object
-framing (0xC3 0x01 + CRC-64-AVRO fingerprint,
-functions/avro_binary.py:433-489) is exactly what a registry-aware Kafka
-consumer sees per record — so this module closes the loop: a source
-relation in Kafka's wire shape (``value binary, topic, partition,
-offset``) flows through ``single_object_decode`` → the expression decoder
+framing (0xC3 0x01 + CRC-64-AVRO fingerprint, ``_unframe_single_object``
+and ``single_object_decode`` in functions/avro_binary.py) is exactly what a
+registry-aware Kafka consumer sees per record — so this module closes the
+loop: a source relation in Kafka's wire shape (``value binary, topic,
+partition, offset``) flows through ``single_object_decode`` → the expression decoder
 → event-time windows, and the SAME pipeline function runs on a batch
 DataFrame (driver-checkable against a SQL oracle) or behind
 ``readStream`` (true streaming path, tests/test_streaming.py).

@@ -991,3 +991,372 @@ class TestCompiledCodecR13Opt:
 
         for v in bad_values:
             assert run(codec.encode, v) == run(codec.encode_interpreted, v), v
+
+
+# ---------------------------------------------------------------------------
+# public decoder surface: every wrapper's output type, good-frame values,
+# strict error text and permissive dead-letter rows, pinned exactly
+# ---------------------------------------------------------------------------
+
+_PIN = (
+    '{"type":"record","name":"pin","namespace":"t","fields":['
+    '{"name":"id","type":"long"},'
+    '{"name":"ts","type":{"type":"long","logicalType":"timestamp-micros"}},'
+    '{"name":"day","type":{"type":"int","logicalType":"date"}},'
+    '{"name":"tag","type":["null","string"],"default":null}]}'
+)
+#: older writer of ``_PIN``: int id, no tag (resolves via promotion + default)
+_PIN_V1 = (
+    '{"type":"record","name":"pin","namespace":"t","fields":['
+    '{"name":"id","type":"int"},'
+    '{"name":"ts","type":{"type":"long","logicalType":"timestamp-micros"}},'
+    '{"name":"day","type":{"type":"int","logicalType":"date"}}]}'
+)
+_PIN_OTHER = '{"type":"record","name":"other","fields":[{"name":"x","type":"int"}]}'
+
+
+def _pin_frames() -> tuple[dict, dict]:
+    """(good frames per framing, bad frames per framing and case).  Writer
+    ids 1 (``_PIN_V1``) and 2 (``_PIN``) are the id map's and the fake
+    registry's (registered in that order)."""
+    from anglerfish_spark.functions.avro_binary import _single_object_header, confluent_header
+
+    def enc(schema, datum):
+        ps = parse_schema(schema)
+        return BinaryCodec(ps).encode(decode_datum(ps.root, datum, ps.env))
+
+    a = enc(_PIN, {"id": 5, "ts": 1_700_000_000_000_001, "day": 19700, "tag": {"string": "a"}})
+    b = enc(_PIN, {"id": -2, "ts": 0, "day": 0, "tag": None})
+    w = enc(_PIN_V1, {"id": 7, "ts": 5, "day": 1})
+    so, so_v1 = _single_object_header(_PIN), _single_object_header(_PIN_V1)
+    good = {
+        "raw": [a, b],
+        "so": [so + a, so + b],
+        "so_mixed": [so_v1 + w, so + a],
+        "cf": [confluent_header(1) + w, confluent_header(2) + a],
+    }
+    so_bad = {
+        "empty": b"",
+        "wrong_magic": b"\xc3\x02" + so[2:] + a,
+        "short_header": so[:6],
+        "foreign_writer": _single_object_header(_PIN_OTHER) + a,
+        "truncated_body": so + a[:-1],
+        "trailing_bytes": so + a + b"\x00",
+    }
+    cf_bad = {
+        "empty": b"",
+        "wrong_magic": b"\x01" + confluent_header(2)[1:] + a,
+        "short_header": b"\x00\x00\x02",
+        "foreign_writer": confluent_header(77) + a,
+        "truncated_body": confluent_header(2) + a[:-1],
+        "trailing_bytes": confluent_header(2) + a + b"\x00",
+    }
+    bad = {
+        "raw": {"empty": b"", "truncated_body": a[:-1], "trailing_bytes": a + b"\x00"},
+        "so": so_bad,
+        "so_mixed": so_bad,
+        "cf": cf_bad,
+    }
+    return good, bad
+
+
+def _pin_decoders(url: str) -> dict:
+    """name → (framing, strict?, column builder) for every public decoder."""
+    from anglerfish_spark.functions import avro_binary as ab
+
+    ids = {1: _PIN_V1, 2: _PIN}
+    writers = [_PIN_V1, _PIN]
+    return {
+        "avro_decode": ("raw", True, lambda c: ab.avro_decode(c, _PIN)),
+        "avro_decode_permissive": ("raw", False, lambda c: ab.avro_decode_permissive(c, _PIN)),
+        "single_object_decode": ("so", True, lambda c: ab.single_object_decode(c, _PIN)),
+        "single_object_decode_permissive": (
+            "so", False, lambda c: ab.single_object_decode_permissive(c, _PIN)
+        ),
+        "single_object_decode_typed": (
+            "so", True, lambda c: ab.single_object_decode_typed(c, _PIN)
+        ),
+        "single_object_decode_registry": (
+            "so_mixed", True, lambda c: ab.single_object_decode_registry(c, writers, _PIN)
+        ),
+        "single_object_decode_registry_typed": (
+            "so_mixed", True, lambda c: ab.single_object_decode_registry_typed(c, writers, _PIN)
+        ),
+        "confluent_decode_registry": (
+            "cf", True, lambda c: ab.confluent_decode_registry(c, ids, _PIN)
+        ),
+        "confluent_decode_registry_permissive": (
+            "cf", False, lambda c: ab.confluent_decode_registry_permissive(c, ids, _PIN)
+        ),
+        "confluent_decode_registry_typed": (
+            "cf", True, lambda c: ab.confluent_decode_registry_typed(c, ids, _PIN)
+        ),
+        "confluent_decode_client": (
+            "cf", True, lambda c: ab.confluent_decode_client(c, url, _PIN)
+        ),
+        "confluent_decode_client_permissive": (
+            "cf", False, lambda c: ab.confluent_decode_client(c, url, _PIN, permissive=True)
+        ),
+    }
+
+
+def _udf_body(make_column):
+    """The Python function a public wrapper hands to ``pandas_udf`` — the
+    batch body, callable in-process on a ``pd.Series`` (no Spark job)."""
+    import pytest
+    import pyspark.sql.functions as psf
+
+    bodies = []
+    real = psf.pandas_udf
+
+    def recording(*args, **kwargs):
+        wrap = real(*args, **kwargs)
+        return lambda f: (bodies.append(f), wrap(f))[1]
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(psf, "pandas_udf", recording)
+        make_column("m")
+    (body,) = bodies
+    return body
+
+
+class TestPublicDecoderSurface:
+    """Every public decoder × (good frames; empty; wrong magic; short
+    header; foreign writer — fingerprint mismatch, unknown fingerprint or
+    unknown id; truncated body; trailing bytes): output type, decoded
+    values (cast to string, so timestamps render in the session's UTC),
+    strict DatumError text from the batch body in-process, and permissive
+    dead-letter rows from one select."""
+
+    TYPES = {
+        "avro_decode": "string",
+        "avro_decode_permissive": "struct<value:string,error:string>",
+        "confluent_decode_client": "struct<schema_id:int,json:string>",
+        "confluent_decode_client_permissive": "struct<schema_id:int,json:string,error:string>",
+        "confluent_decode_registry": "struct<schema_id:int,json:string>",
+        "confluent_decode_registry_permissive": "struct<schema_id:int,json:string,error:string>",
+        "confluent_decode_registry_typed": "struct<schema_id:int,value:struct<id:bigint,ts:timestamp,day:date,tag:string>>",
+        "single_object_decode": "string",
+        "single_object_decode_permissive": "struct<value:string,error:string>",
+        "single_object_decode_registry": "string",
+        "single_object_decode_registry_typed": "struct<id:bigint,ts:timestamp,day:date,tag:string>",
+        "single_object_decode_typed": "struct<id:bigint,ts:timestamp,day:date,tag:string>",
+    }
+    GOOD = [
+        (
+            '{"id": 5, "ts": 1700000000000001, "day": 19700, "tag": {"string": "a"}}',
+            '{{"id": 5, "ts": 1700000000000001, "day": 19700, "tag": {"string": "a"}}, null}',
+            '{"id": 5, "ts": 1700000000000001, "day": 19700, "tag": {"string": "a"}}',
+            '{{"id": 5, "ts": 1700000000000001, "day": 19700, "tag": {"string": "a"}}, null}',
+            "{5, 2023-11-14 22:13:20.000001, 2023-12-09, a}",
+            '{"id": 7, "ts": 5, "day": 1, "tag": null}',
+            "{7, 1970-01-01 00:00:00.000005, 1970-01-02, null}",
+            '{1, {"id": 7, "ts": 5, "day": 1, "tag": null}}',
+            '{1, {"id": 7, "ts": 5, "day": 1, "tag": null}, null}',
+            "{1, {7, 1970-01-01 00:00:00.000005, 1970-01-02, null}}",
+            '{1, {"id": 7, "ts": 5, "day": 1, "tag": null}}',
+            '{1, {"id": 7, "ts": 5, "day": 1, "tag": null}, null}',
+        ),
+        (
+            '{"id": -2, "ts": 0, "day": 0, "tag": null}',
+            '{{"id": -2, "ts": 0, "day": 0, "tag": null}, null}',
+            '{"id": -2, "ts": 0, "day": 0, "tag": null}',
+            '{{"id": -2, "ts": 0, "day": 0, "tag": null}, null}',
+            "{-2, 1970-01-01 00:00:00, 1970-01-01, null}",
+            '{"id": 5, "ts": 1700000000000001, "day": 19700, "tag": {"string": "a"}}',
+            "{5, 2023-11-14 22:13:20.000001, 2023-12-09, a}",
+            '{2, {"id": 5, "ts": 1700000000000001, "day": 19700, "tag": {"string": "a"}}}',
+            '{2, {"id": 5, "ts": 1700000000000001, "day": 19700, "tag": {"string": "a"}}, null}',
+            "{2, {5, 2023-11-14 22:13:20.000001, 2023-12-09, a}}",
+            '{2, {"id": 5, "ts": 1700000000000001, "day": 19700, "tag": {"string": "a"}}}',
+            '{2, {"id": 5, "ts": 1700000000000001, "day": 19700, "tag": {"string": "a"}}, null}',
+        ),
+    ]
+    # strict DatumError text, per decoder and bad-frame case
+    BODY_ERRORS = {
+        "truncated_body": "DatumError: length 1 at offset 14 overruns buffer of 14",
+        "trailing_bytes": "DatumError: trailing bytes after decode: 1",
+    }
+    NOT_SO = "DatumError: not a single-object-encoded Avro message"
+    SO_ERRORS = {**BODY_ERRORS, "empty": NOT_SO, "wrong_magic": NOT_SO, "short_header": NOT_SO}
+    NOT_CF = "DatumError: not a Confluent-framed message (magic byte != 0x00)"
+    CF_ERRORS = {**BODY_ERRORS, "empty": NOT_CF, "wrong_magic": NOT_CF, "short_header": NOT_CF}
+    MISMATCH = (
+        "DatumError: schema fingerprint mismatch: message d1d6da1fdb7f5ad2, reader f9692a1a60bd3c55"
+    )
+    UNKNOWN_FP = "DatumError: unknown schema fingerprint d1d6da1fdb7f5ad2"
+    UNKNOWN_ID = "DatumError: schema id 77 not in registry map"
+    STRICT = {
+        "avro_decode": {**BODY_ERRORS, "empty": "DatumError: truncated varint at offset 0"},
+        "single_object_decode": {**SO_ERRORS, "foreign_writer": MISMATCH},
+        "single_object_decode_typed": {**SO_ERRORS, "foreign_writer": MISMATCH},
+        "single_object_decode_registry": {**SO_ERRORS, "foreign_writer": UNKNOWN_FP},
+        "single_object_decode_registry_typed": {**SO_ERRORS, "foreign_writer": UNKNOWN_FP},
+        "confluent_decode_registry": {**CF_ERRORS, "foreign_writer": UNKNOWN_ID},
+        "confluent_decode_registry_typed": {**CF_ERRORS, "foreign_writer": UNKNOWN_ID},
+        "confluent_decode_client": {
+            **CF_ERRORS,
+            "foreign_writer": "DatumError: schema id 77 not in registry",
+        },
+    }
+    PERMISSIVE = {
+        "empty": (
+            "{null, DatumError: truncated varint at offset 0}",
+            "{null, DatumError: not a single-object-encoded Avro message}",
+            "{null, null, DatumError: not a Confluent-framed message (magic byte != 0x00)}",
+            "{null, null, DatumError: not a Confluent-framed message (magic byte != 0x00)}",
+        ),
+        "foreign_writer": (
+            "{null, DatumError: union branch index 45 out of range}",
+            "{null, DatumError: schema fingerprint mismatch: message d1d6da1fdb7f5ad2, reader f9692a1a60bd3c55}",
+            "{77, null, DatumError: schema id 77 not in registry map}",
+            "{77, null, DatumError: schema id 77 not in registry}",
+        ),
+        "short_header": (
+            "{null, DatumError: union branch index 13 out of range}",
+            "{null, DatumError: not a single-object-encoded Avro message}",
+            "{null, null, DatumError: not a Confluent-framed message (magic byte != 0x00)}",
+            "{null, null, DatumError: not a Confluent-framed message (magic byte != 0x00)}",
+        ),
+        "trailing_bytes": (
+            "{null, DatumError: trailing bytes after decode: 1}",
+            "{null, DatumError: trailing bytes after decode: 1}",
+            "{2, null, DatumError: trailing bytes after decode: 1}",
+            "{2, null, DatumError: trailing bytes after decode: 1}",
+        ),
+        "truncated_body": (
+            "{null, DatumError: length 1 at offset 14 overruns buffer of 14}",
+            "{null, DatumError: length 1 at offset 14 overruns buffer of 14}",
+            "{2, null, DatumError: length 1 at offset 14 overruns buffer of 14}",
+            "{2, null, DatumError: length 1 at offset 14 overruns buffer of 14}",
+        ),
+        "wrong_magic": (
+            "{null, DatumError: union branch index 13 out of range}",
+            "{null, DatumError: not a single-object-encoded Avro message}",
+            "{null, null, DatumError: not a Confluent-framed message (magic byte != 0x00)}",
+            "{null, null, DatumError: not a Confluent-framed message (magic byte != 0x00)}",
+        ),
+    }
+
+    def _registry(self):
+        from tests.fake_schema_registry import fake_registry
+
+        return fake_registry()
+
+    def _register(self, state):
+        assert state.register("pin-value", _PIN_V1) == 1
+        assert state.register("pin-value", _PIN) == 2
+
+    def test_types_and_good_frames(self, spark):
+        from pyspark.sql import functions as F
+
+        good, _ = _pin_frames()
+        framings = list(good)
+        df = spark.createDataFrame(
+            [tuple(good[f][i] for f in framings) for i in range(2)],
+            ", ".join(f"{f} binary" for f in framings),
+        )
+        with self._registry() as (url, state):
+            self._register(state)
+            out = df.select(
+                *(make(fr).alias(name) for name, (fr, _, make) in _pin_decoders(url).items())
+            )
+            types = {f.name: f.dataType.simpleString() for f in out.schema.fields}
+            as_text = out.select(*(F.col(c).cast("string") for c in out.columns))
+            rows = [tuple(r) for r in as_text.collect()]
+        assert types == self.TYPES
+        assert rows == self.GOOD
+
+    def test_strict_messages(self, spark):
+        import pandas as pd
+        import pytest
+
+        from anglerfish_spark.errors import DatumError
+
+        _, bad = _pin_frames()
+        got = {}
+        with self._registry() as (url, state):
+            self._register(state)
+            for name, (framing, strict, make) in _pin_decoders(url).items():
+                if not strict:
+                    continue
+                body = _udf_body(make)
+                got[name] = {}
+                for case, frame in bad[framing].items():
+                    with pytest.raises(DatumError) as ei:
+                        body(pd.Series([frame]))
+                    got[name][case] = f"{type(ei.value).__name__}: {ei.value}"
+        assert got == self.STRICT
+
+    def test_permissive_rows(self, spark):
+        from pyspark.sql import functions as F
+
+        _, bad = _pin_frames()
+        cases = list(bad["cf"])
+        framings = ["raw", "so", "cf"]
+        # raw has no header: its header cases decode the single-object frame
+        df = spark.createDataFrame(
+            [(case, *(bad[f].get(case, bad["so"][case]) for f in framings)) for case in cases],
+            "case string, " + ", ".join(f"{f} binary" for f in framings),
+        )
+        with self._registry() as (url, state):
+            self._register(state)
+            decs = {
+                name: make(framing)
+                for name, (framing, strict, make) in _pin_decoders(url).items()
+                if not strict
+            }
+            out = df.select("case", *(col.cast("string").alias(n) for n, col in decs.items()))
+            rows = {r["case"]: tuple(r)[1:] for r in out.collect()}
+        assert rows == self.PERMISSIVE
+
+
+class TestWireCodecEdges:
+    """Driver-side validation and the Confluent id range."""
+
+    def test_schema_id_beyond_int32_dead_letters(self, spark):
+        import pandas as pd
+        import pytest
+
+        from anglerfish_spark.errors import DatumError
+        from anglerfish_spark.functions import avro_binary as ab
+        from tests.fake_schema_registry import fake_registry
+
+        frame = b"\x00\xff\xff\xff\xff\x02"
+        msg = "schema id 4294967295 out of int32 range"
+        ids = {3: _PIN}
+        out = _udf_body(lambda c: ab.confluent_decode_registry_permissive(c, ids, _PIN))(
+            pd.Series([frame])
+        )
+        assert out["schema_id"].isna().all() and out["json"].isna().all()
+        assert list(out["error"]) == [f"DatumError: {msg}"]
+        with pytest.raises(DatumError, match=msg):
+            _udf_body(lambda c: ab.confluent_decode_registry(c, ids, _PIN))(pd.Series([frame]))
+        # the registry client never sees the id
+        with fake_registry() as (url, state):
+            body = _udf_body(lambda c: ab.confluent_decode_client(c, url, _PIN, permissive=True))
+            out = body(pd.Series([frame]))
+            assert state.requests == 0
+        assert list(out["error"]) == [f"DatumError: {msg}"]
+        # producer side: ids are Java ints
+        assert ab.confluent_header(0x7FFFFFFF) == b"\x00\x7f\xff\xff\xff"
+        with pytest.raises(DatumError, match="out of int32 range"):
+            ab.confluent_header(1 << 31)
+
+    def test_bad_reader_schema_fails_at_call_time(self, spark):
+        import pytest
+
+        from anglerfish_spark.errors import SchemaError
+        from anglerfish_spark.functions.avro_binary import single_object_decode
+
+        with pytest.raises(SchemaError):
+            single_object_decode("v", "{not json")
+
+    def test_bad_schema_id_fails_at_call_time(self, spark):
+        import pytest
+
+        from anglerfish_spark.errors import DatumError
+        from anglerfish_spark.functions.avro_binary import confluent_encode
+
+        with pytest.raises(DatumError, match="schema id -1"):
+            confluent_encode("j", _PIN, -1)
