@@ -60,8 +60,6 @@ column and never raises.
 from __future__ import annotations
 
 import json
-import threading
-from collections import OrderedDict
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame
@@ -69,6 +67,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..errors import InvalidParserStateError
+from ..memo import Memo
 from ..schema.model import (
     AvroArray,
     AvroEnum,
@@ -844,9 +843,7 @@ def _is_null_default(f: AvroField) -> bool:
 #: SparkContext in the key keeps trees built under a stopped session (or a
 #: relaunched gateway) from ever being reused.  Columns are immutable
 #: expression trees, safe to embed in any number of plans.
-_DECODE_EXPR_CACHE: OrderedDict[tuple, tuple] = OrderedDict()
-_DECODE_EXPR_CACHE_MAX = 256
-_DECODE_EXPR_LOCK = threading.Lock()
+_DECODE_EXPR_CACHE = Memo(256)
 
 # fixed internal stage-column names: the cached trees reference them
 _RAW = "_anglerfish_raw"
@@ -930,19 +927,7 @@ def decode_json(
     cache_key = (
         (schema, max_depth, df.sparkSession.sparkContext) if isinstance(schema, str) else None
     )
-    cached = None
-    if cache_key is not None:
-        with _DECODE_EXPR_LOCK:  # callers may run on several driver threads
-            cached = _DECODE_EXPR_CACHE.get(cache_key)
-            if cached is not None:
-                _DECODE_EXPR_CACHE.move_to_end(cache_key)
-    if cached is None:
-        cached = _build_trees(schema, max_depth)
-        if cache_key is not None:
-            with _DECODE_EXPR_LOCK:
-                _DECODE_EXPR_CACHE[cache_key] = cached
-                if len(_DECODE_EXPR_CACHE) > _DECODE_EXPR_CACHE_MAX:
-                    _DECODE_EXPR_CACHE.popitem(last=False)
+    cached = _DECODE_EXPR_CACHE.get_or(cache_key, lambda: _build_trees(schema, max_depth))
     wire_t, flat, needs_vprobe, view_stages, value, errs = cached
 
     # Each stage below is ONE select over column lists kept in Python

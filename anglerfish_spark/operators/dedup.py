@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..errors import ConvergenceError
+from ..memo import scratch_dir
 from ..registry import query
 from ..session import prepare
 from ..sources.registry import load_table
@@ -1012,8 +1013,6 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: 100 TB this is sized so one bucket ≈ one comfortable task input)
 INDEX_BUCKETS = 8
 
-_INDEX_DIR: str | None = None
-
 
 def dedup_index_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Persist the incremental-dedup index the way the 100 TB steady state
@@ -1026,11 +1025,7 @@ def dedup_index_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     ``q_join_bucketed``'s asserted shape (relational_ext.py).
     """
     import os
-    import tempfile
 
-    global _INDEX_DIR
-    if _INDEX_DIR is None:
-        _INDEX_DIR = tempfile.mkdtemp(prefix="anglerfish_dedup_idx_")
     tag = f"{abs(hash(sf_dir)) % 10**8}"
     names = (f"ang_dedup_fp_{tag}", f"ang_dedup_band_{tag}")
 
@@ -1049,7 +1044,7 @@ def dedup_index_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         if not spark.catalog.tableExists(name):
             (
                 df.write.mode("overwrite")
-                .option("path", os.path.join(_INDEX_DIR, name))
+                .option("path", os.path.join(scratch_dir("anglerfish_dedup_idx_"), name))
                 .bucketBy(INDEX_BUCKETS, *keys)
                 .sortBy(*keys)
                 .saveAsTable(name)
@@ -1091,11 +1086,7 @@ def dedup_index_compact(
     import os
     import uuid
 
-    global _INDEX_DIR
-    if _INDEX_DIR is None:
-        import tempfile
-
-        _INDEX_DIR = tempfile.mkdtemp(prefix="anglerfish_dedup_idx_")
+    root = scratch_dir("anglerfish_dedup_idx_")
     if tombstones is None:
         if tombstone_table is None:
             raise ValueError("need tombstone_table or tombstones")
@@ -1109,7 +1100,7 @@ def dedup_index_compact(
         )
         (
             live.write.mode("overwrite")
-            .option("path", os.path.join(_INDEX_DIR, f"{name}_{uuid.uuid4().hex[:8]}"))
+            .option("path", os.path.join(root, f"{name}_{uuid.uuid4().hex[:8]}"))
             .bucketBy(INDEX_BUCKETS, *keys)
             .sortBy(*keys)
             .saveAsTable(name)
@@ -1118,7 +1109,7 @@ def dedup_index_compact(
         empty = spark.table(tombstone_table).limit(0).localCheckpoint(eager=True)
         empty.write.mode("overwrite").option(
             "path",
-            os.path.join(_INDEX_DIR, f"{tombstone_table}_{uuid.uuid4().hex[:8]}"),
+            os.path.join(root, f"{tombstone_table}_{uuid.uuid4().hex[:8]}"),
         ).saveAsTable(tombstone_table)
 
 

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..memo import scratch_dir
 from ..registry import query
 from ..session import prepare
 from ..sources.registry import Catalog, load_table
@@ -635,7 +636,6 @@ def q_join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 N_BUCKETS = 8
-_BUCKET_DIR = None  # lazily-created scratch root for bucketed table data
 
 
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
@@ -645,11 +645,7 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     co-located buckets and needs NO exchange — at 100 TB this removes the
     dominant fact⋈fact shuffle entirely, paid once at ingest."""
     import os
-    import tempfile
 
-    global _BUCKET_DIR
-    if _BUCKET_DIR is None:
-        _BUCKET_DIR = tempfile.mkdtemp(prefix="anglerfish_buckets_")
     tag = f"{abs(hash(sf_dir)) % 10**8}"
     names = (f"ang_orders_b{tag}", f"ang_lineitem_b{tag}")
     c = Catalog(spark, sf_dir)
@@ -661,7 +657,7 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         if not spark.catalog.tableExists(name):
             (
                 df.write.mode("overwrite")
-                .option("path", os.path.join(_BUCKET_DIR, name))
+                .option("path", os.path.join(scratch_dir("anglerfish_buckets_"), name))
                 .bucketBy(N_BUCKETS, key)
                 .sortBy(key)
                 .saveAsTable(name)

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from ..localdata import local_df
+from ..memo import Memo, file_stamp
 from ..registry import query
 from ..session import prepare
 from ..sources.registry import load_table, read_parquet
@@ -572,29 +573,35 @@ N_CENTROIDS = 8
 N_PROBE = 2
 
 
-#: (sf_dir → centroid list): the coarse quantizer is immutable per dataset,
-#: so the one-off driver collect runs once per (process, sf_dir), not once
-#: per query invocation — repeat calls plan with zero extra Spark jobs.
-_CENTROID_CACHE: dict[str, list[tuple[int, list[float]]]] = {}
+#: embeddings-file stamp -> centroid list: the coarse quantizer is a pure
+#: function of the file, so the one-off driver collect runs once per file
+#: state, not once per query invocation — repeat calls plan with zero
+#: extra Spark jobs, and a rewrite at the same path re-collects.
+_CENTROID_CACHE = Memo(16)
 
 
-def _centroids(e: DataFrame, cache_key: str | None = None) -> list[tuple[int, list[float]]]:
+def _quantizer_key(sf_dir: str | None) -> tuple | None:
+    """Stamp of ``sf_dir``'s embeddings file; None (uncached) without one."""
+    return file_stamp(os.path.join(sf_dir, "embeddings.parquet")) if sf_dir else None
+
+
+def _centroids(e: DataFrame, sf_dir: str | None = None) -> list[tuple[int, list[float]]]:
     """Coarse-quantizer centroids: the vectors with vec_id < N_CENTROIDS.
 
     Collected to the driver at plan-build time — centroids are
     metadata-scale (k rows, like an MLlib KMeans model), which is what lets
     cell assignment compile to a pure map over the corpus instead of a
     join+shuffle.  (A trained k-means would be collected the same way.)
+    ``sf_dir``, the directory ``e`` was loaded from, keys the cache.
     """
-    if cache_key is not None and cache_key in _CENTROID_CACHE:
-        return _CENTROID_CACHE[cache_key]
-    rows = (
-        e.where(F.col("vec_id") < N_CENTROIDS).select("vec_id", "embedding").collect()
-    )
-    out = sorted((r.vec_id, [float(x) for x in r.embedding]) for r in rows)
-    if cache_key is not None:
-        _CENTROID_CACHE[cache_key] = out
-    return out
+
+    def collect() -> list[tuple[int, list[float]]]:
+        rows = (
+            e.where(F.col("vec_id") < N_CENTROIDS).select("vec_id", "embedding").collect()
+        )
+        return sorted((r.vec_id, [float(x) for x in r.embedding]) for r in rows)
+
+    return _CENTROID_CACHE.get_or(_quantizer_key(sf_dir), collect)
 
 
 def _cell_ranking(vec: Column, cents: list[tuple[int, list[float]]]) -> Column:
@@ -608,23 +615,11 @@ def _cell_ranking(vec: Column, cents: list[tuple[int, list[float]]]) -> Column:
     return F.array_sort(F.array(*items))
 
 
-def _ivf_ranking(spark: SparkSession, sf_dir: str, e: DataFrame) -> Column:
-    """Centroid-cell ranking expression for this sf_dir's cached quantizer.
-    mtime in the cache key: a regenerated embeddings file invalidates the
-    cached centroids instead of silently planning against stale vectors."""
-    try:
-        mtime = os.path.getmtime(os.path.join(sf_dir, "embeddings.parquet"))
-    except OSError:
-        mtime = 0.0
-    cents = _centroids(e, cache_key=f"{sf_dir}@{mtime}")
-    return _cell_ranking(F.col("embedding"), cents)
-
-
 def ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every vector with its nearest-centroid cell — the IVF index relation.
     Pure map over the corpus (literal-centroid expression, codegen)."""
     e = load_table(spark, sf_dir, "embeddings", fanout=True)
-    ranking = _ivf_ranking(spark, sf_dir, e)
+    ranking = _cell_ranking(F.col("embedding"), _centroids(e, sf_dir))
     best = F.element_at(ranking, -1)
     return e.select("vec_id", "label", "embedding", (best["nc"] * -1).alias("cell"))
 
@@ -676,10 +671,8 @@ def ivf_probe_persisted(
     # centroids, the |Q|-row probe relation, the probe-cell collect); the
     # heavy side is the pruned read of the persisted cell partitions
     e = load_table(spark, sf_dir, "embeddings")
-    ranking = (
-        _cell_ranking(F.col("embedding"), centroids)
-        if centroids is not None
-        else _ivf_ranking(spark, sf_dir, e)
+    ranking = _cell_ranking(
+        F.col("embedding"), centroids if centroids is not None else _centroids(e, sf_dir)
     )
     probe_cells = F.array(
         *[(F.element_at(ranking, -1 - i)["nc"] * -1) for i in range(N_PROBE)]
@@ -744,7 +737,7 @@ def ivf_index_append(
     prepare(spark)
     path = cells_path or ivf_persisted_cells(spark, sf_dir)
     cents = centroids if centroids is not None else _centroids(
-        load_table(spark, sf_dir, "embeddings", fanout=True)
+        load_table(spark, sf_dir, "embeddings", fanout=True), sf_dir
     )
     best = F.element_at(_cell_ranking(F.col("embedding"), cents), -1)
     assigned = new_vectors.select(
@@ -869,7 +862,7 @@ def q_similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     prepare(spark)
     e = load_table(spark, sf_dir, "embeddings", fanout=True)
-    ranking = _ivf_ranking(spark, sf_dir, e)
+    ranking = _cell_ranking(F.col("embedding"), _centroids(e, sf_dir))
     best = F.element_at(ranking, -1)
     assigned = e.select(
         "vec_id", "label", "embedding", (best["nc"] * -1).alias("cell")
@@ -1081,24 +1074,24 @@ def q_pca_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: against 256 bytes of float32 -- 32x)
 PQ_SUBSPACES, PQ_SUB_DIM, PQ_K = 8, 8, 16
 
-_PQ_CB_CACHE: dict[str, "np.ndarray"] = {}
+#: embeddings-file stamp -> PQ codebook (same keying as _CENTROID_CACHE)
+_PQ_CB_CACHE = Memo(16)
 
 
-def _pq_codebook(e: DataFrame, cache_key: str | None = None) -> "np.ndarray":
+def _pq_codebook(e: DataFrame, sf_dir: str | None = None) -> "np.ndarray":
     """(PQ_K, DIM) float64 codebook: the subspace slices of the vectors
     with vec_id < PQ_K — deterministic "training sample", collected to
     the driver at plan-build time like the IVF centroids (metadata-scale;
     a k-means-trained codebook would be collected the same way)."""
-    if cache_key is not None and cache_key in _PQ_CB_CACHE:
-        return _PQ_CB_CACHE[cache_key]
-    rows = e.where(F.col("vec_id") < PQ_K).select("vec_id", "embedding").collect()
-    cb = np.array(
-        [v for _, v in sorted((r.vec_id, [float(x) for x in r.embedding]) for r in rows)],
-        dtype=np.float64,
-    )
-    if cache_key is not None:
-        _PQ_CB_CACHE[cache_key] = cb
-    return cb
+
+    def collect() -> "np.ndarray":
+        rows = e.where(F.col("vec_id") < PQ_K).select("vec_id", "embedding").collect()
+        return np.array(
+            [v for _, v in sorted((r.vec_id, [float(x) for x in r.embedding]) for r in rows)],
+            dtype=np.float64,
+        )
+
+    return _PQ_CB_CACHE.get_or(_quantizer_key(sf_dir), collect)
 
 
 _PQ_SQL_D2 = f"""
@@ -1155,7 +1148,7 @@ def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
 
     e = load_table(spark, sf_dir, "embeddings", fanout=True)
-    cb = _pq_codebook(e, cache_key=sf_dir)
+    cb = _pq_codebook(e, sf_dir)
 
     out_t = T.StructType(
         [
@@ -1267,7 +1260,7 @@ def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(F.col("adc_dist").asc(), "vec_id")
     return (
         _pq_adc_scores(
-            spark, e, sf_dir, queries_src=load_table(spark, sf_dir, "embeddings")
+            spark, e, _pq_codebook(e, sf_dir), load_table(spark, sf_dir, "embeddings")
         )
         .withColumn("rank", F.row_number().over(w).cast("int"))
         .where(F.col("rank") <= TOP_K)
@@ -1279,7 +1272,7 @@ def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pq_adc_scores(
     spark: SparkSession,
     e: DataFrame,
-    sf_dir: str,
+    cb: "np.ndarray",
     queries_src: DataFrame | None = None,
 ) -> DataFrame:
     """(query_id, vec_id, adc_dist) for every query x candidate: the ADC
@@ -1288,8 +1281,7 @@ def _pq_adc_scores(
     the relation the |Q| query vectors are COLLECTED from — pass a plain
     (un-fanned) load when ``e`` carries a small-input fan-out
     repartition, so the metadata-scale collect skips the round-robin
-    exchange; defaults to ``e``."""
-    cb = _pq_codebook(e, cache_key=sf_dir)
+    exchange; defaults to ``e``.  ``cb`` is the codebook (:func:`_pq_codebook`)."""
     if queries_src is None:
         queries_src = e
 
@@ -1436,7 +1428,7 @@ def q_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     prepare(spark)
     e = load_table(spark, sf_dir, "embeddings", fanout=True)
     eq = load_table(spark, sf_dir, "embeddings")
-    adc = _pq_adc_scores(spark, e, sf_dir, queries_src=eq)
+    adc = _pq_adc_scores(spark, e, _pq_codebook(e, sf_dir), queries_src=eq)
     w_short = Window.partitionBy("query_id").orderBy(F.col("adc_dist").asc(), "vec_id")
     short = (
         adc.withColumn("srn", F.row_number().over(w_short))

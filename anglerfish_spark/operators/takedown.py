@@ -1198,7 +1198,7 @@ def _corpus_assets(spark: SparkSession, sf_dir: str) -> tuple[str, str, list]:
     corpus = docs.join(
         emb.select(F.col("vec_id").alias("doc_id"), "embedding"), "doc_id"
     )
-    cents = _centroids(emb, cache_key=f"corpus:{sf_dir}")
+    cents = _centroids(emb, sf_dir)
     t = tempfile.mkdtemp(prefix="anglerfish_corpus_")
     corpus_index_bootstrap(spark, name)
     cells_path = tempfile.mkdtemp(prefix="anglerfish_corpus_cells_") + "/cells"

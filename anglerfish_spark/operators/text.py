@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..memo import scratch_dir
 from ..registry import query
 from ..session import prepare
 from ..sources.registry import load_table
@@ -721,8 +722,6 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: one comfortable task input, like operators/dedup.INDEX_BUCKETS)
 INVIDX_BUCKETS = 8
 
-_INVIDX_DIR: str | None = None
-
 
 def _invidx_side_names(name: str) -> tuple[str, str]:
     """``(doclen_table, consts_table)`` for a persisted index ``name``."""
@@ -836,7 +835,7 @@ def _write_index_side_tables(
     dl_name, cs_name = _invidx_side_names(name)
     w = dl.withColumn("src", F.lit(src)).write.mode(mode).partitionBy("src")
     if mode == "overwrite":
-        w = w.option("path", os.path.join(_INVIDX_DIR, dl_name))
+        w = w.option("path", os.path.join(scratch_dir("anglerfish_invidx_"), dl_name))
     w.saveAsTable(dl_name)
     consts = dl.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -845,7 +844,7 @@ def _write_index_side_tables(
              F.lit(src).alias("src"))
     w = consts.write.mode(mode).partitionBy("src")
     if mode == "overwrite":
-        w = w.option("path", os.path.join(_INVIDX_DIR, cs_name))
+        w = w.option("path", os.path.join(scratch_dir("anglerfish_invidx_"), cs_name))
     w.saveAsTable(cs_name)
 
 
@@ -856,11 +855,6 @@ def build_persisted_index(spark: SparkSession, docs: DataFrame, name: str) -> st
     ``term``, ``{name}_dl`` doc lengths, ``{name}_cs`` summable consts.
     No-op if ``name`` already exists."""
     import os
-    import tempfile
-
-    global _INVIDX_DIR
-    if _INVIDX_DIR is None:
-        _INVIDX_DIR = tempfile.mkdtemp(prefix="anglerfish_invidx_")
     if not spark.catalog.tableExists(name):
         # positional postings (r8): strictly more information in the same
         # bucket layout — tf probes read p.doc_id/p.tf as before, phrase
@@ -879,7 +873,7 @@ def build_persisted_index(spark: SparkSession, docs: DataFrame, name: str) -> st
         )
         (
             idx.write.mode("overwrite")
-            .option("path", os.path.join(_INVIDX_DIR, name))
+            .option("path", os.path.join(scratch_dir("anglerfish_invidx_"), name))
             .partitionBy("src")
             .bucketBy(INVIDX_BUCKETS, "term")
             .sortBy("term")
@@ -1216,12 +1210,9 @@ def inverted_index_compact(spark: SparkSession, name: str) -> None:
     results are identical before and after (tests/test_takedown.py
     pins boolean, phrase, and BM25 probes across the fold)."""
     import os
-    import tempfile
     import uuid
 
-    global _INVIDX_DIR
-    if _INVIDX_DIR is None:
-        _INVIDX_DIR = tempfile.mkdtemp(prefix="anglerfish_invidx_")
+    root = scratch_dir("anglerfish_invidx_")
     ts_name = invidx_tombstone_table(name)
     has_ts = spark.catalog.tableExists(ts_name)
     # per-doc NEWEST tombstone generation (r13): the fold keeps rows
@@ -1256,7 +1247,7 @@ def inverted_index_compact(spark: SparkSession, name: str) -> None:
     )  # break lineage before overwriting the source
     (
         merged.write.mode("overwrite")
-        .option("path", os.path.join(_INVIDX_DIR, f"{name}_{uuid.uuid4().hex[:8]}"))
+        .option("path", os.path.join(root, f"{name}_{uuid.uuid4().hex[:8]}"))
         .partitionBy("src")
         .bucketBy(INVIDX_BUCKETS, "term")
         .sortBy("term")
@@ -1270,7 +1261,7 @@ def inverted_index_compact(spark: SparkSession, name: str) -> None:
     ).localCheckpoint(eager=True)
     (
         dl.write.mode("overwrite")
-        .option("path", os.path.join(_INVIDX_DIR, f"{dl_name}_{uuid.uuid4().hex[:8]}"))
+        .option("path", os.path.join(root, f"{dl_name}_{uuid.uuid4().hex[:8]}"))
         .partitionBy("src")
         .saveAsTable(dl_name)
     )
@@ -1283,7 +1274,7 @@ def inverted_index_compact(spark: SparkSession, name: str) -> None:
     ).localCheckpoint(eager=True)
     (
         consts.write.mode("overwrite")
-        .option("path", os.path.join(_INVIDX_DIR, f"{cs_name}_{uuid.uuid4().hex[:8]}"))
+        .option("path", os.path.join(root, f"{cs_name}_{uuid.uuid4().hex[:8]}"))
         .partitionBy("src")
         .saveAsTable(cs_name)
     )
@@ -1293,7 +1284,7 @@ def inverted_index_compact(spark: SparkSession, name: str) -> None:
         # (checkpointed: an overwrite must not read the table it replaces)
         empty = spark.table(ts_name).limit(0).localCheckpoint(eager=True)
         empty.write.mode("overwrite").option(
-            "path", os.path.join(_INVIDX_DIR, f"{ts_name}_{uuid.uuid4().hex[:8]}")
+            "path", os.path.join(root, f"{ts_name}_{uuid.uuid4().hex[:8]}")
         ).partitionBy("src").saveAsTable(ts_name)
 
 
@@ -1370,11 +1361,6 @@ def _incremental_index(spark: SparkSession, sf_dir: str) -> str:
     if name in _INVIDX_INCR_BUILT and spark.catalog.tableExists(name):
         return name
     import os
-    import tempfile
-
-    global _INVIDX_DIR
-    if _INVIDX_DIR is None:
-        _INVIDX_DIR = tempfile.mkdtemp(prefix="anglerfish_invidx_")
     d = load_table(spark, sf_dir, "documents")
     is_new = F.pmod(F.col("doc_id"), F.lit(10)) == 0
     if not spark.catalog.tableExists(name):
@@ -1383,7 +1369,7 @@ def _incremental_index(spark: SparkSession, sf_dir: str) -> str:
             .withColumn("gen", F.lit(0).cast("bigint"))
             .withColumn("src", F.lit("base"))
             .write.mode("overwrite")
-            .option("path", os.path.join(_INVIDX_DIR, name))
+            .option("path", os.path.join(scratch_dir("anglerfish_invidx_"), name))
             .partitionBy("src")
             .bucketBy(INVIDX_BUCKETS, "term")
             .sortBy("term")

@@ -67,6 +67,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..errors import AnglerfishError
+from ..memo import Memo
 from ..registry import query
 from ..session import prepare
 from .registry import read_parquet
@@ -214,21 +215,18 @@ def _write_segment(table: str, payload: dict) -> tuple[str, int]:
     return rel, len(blob)
 
 
-#: segment chunks are immutable (content-addressed), so a tiny in-process
-#: cache makes repeated reads of the same snapshot list-only
-_SEG_CACHE: dict[tuple[str, str], dict] = {}
+#: segment chunks are immutable (content-addressed names), so the path is
+#: everything a parsed chunk depends on: repeated reads of the same
+#: snapshot are list-only
+_SEG_CACHE = Memo(1024)
 
 
 def _load_segment(table: str, rel: str) -> dict:
-    key = (os.path.abspath(table), rel)
-    seg = _SEG_CACHE.get(key)
-    if seg is None:
+    def load() -> dict:
         with open(os.path.join(table, rel)) as f:
-            seg = json.load(f)
-        if len(_SEG_CACHE) >= 1024:
-            _SEG_CACHE.clear()
-        _SEG_CACHE[key] = seg
-    return seg
+            return json.load(f)
+
+    return _SEG_CACHE.get_or((os.path.abspath(table), rel), load)
 
 
 def _chunk_bounds(chunk_stats: dict, n_files: int) -> dict | None:

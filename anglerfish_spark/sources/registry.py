@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..memo import Memo, file_stamp
+
 #: tables the driver materializes per scale factor (TESTDATA.md)
 TABLES = (
     "region",
@@ -43,39 +45,17 @@ _FANOUT_MIN_BYTES = 256 << 10
 _FANOUT_MAX_BYTES = 256 << 20
 
 #: per-process parquet schema cache keyed on file-state METADATA (path,
-#: mtime_ns, size per file — plus each directory's direct entries — and
-#: the nanosAsLong conf), never data: the first read of a file set infers
-#: the schema once and every later read passes it explicitly, skipping the
-#: JVM-side footer read + schema merge that `spark.read.parquet` otherwise
-#: repeats per invocation (measured 73-119 ms -> 13-20 ms per single-file
-#: read at sf0.1; guide §6 — production jobs read with an explicit
-#: schema/metastore for the same reason, so this is the 100 TB shape, not
-#: a local tune).  The scan still reads the parquet data at every action;
-#: a rewritten/extended file set changes the stat key and re-infers.
-#: Bounded like the codec compile caches.
-_SCHEMA_CACHE: dict[tuple, T.StructType] = {}
-_SCHEMA_CACHE_MAX = 1024
-
-
-def _paths_key(spark: SparkSession, paths: tuple[str, ...]) -> tuple | None:
-    """File-state cache key for a parquet read, or None when unknowable."""
-    try:
-        legacy = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
-        parts: list[tuple] = [(legacy,)]
-        for p in paths:
-            st = os.stat(p)
-            parts.append((p, st.st_mtime_ns, st.st_size))
-            if os.path.isdir(p):
-                # a file rewritten IN PLACE inside a dir leaves the dir
-                # stat unchanged — key on the direct entries too (all our
-                # directory layouts are flat writes + renames)
-                with os.scandir(p) as it:
-                    for e in sorted(it, key=lambda e: e.name):
-                        est = e.stat()
-                        parts.append((e.name, est.st_mtime_ns, est.st_size))
-        return tuple(parts)
-    except OSError:
-        return None
+#: mtime_ns, size per file — plus every file below a directory at any
+#: depth — and the nanosAsLong conf), never data: the first read of a file
+#: set infers the schema once and every later read passes it explicitly,
+#: skipping the JVM-side footer read + schema merge that
+#: `spark.read.parquet` otherwise repeats per invocation (measured 73-119
+#: ms -> 13-20 ms per single-file read at sf0.1; guide §6 — production
+#: jobs read with an explicit schema/metastore for the same reason, so
+#: this is the 100 TB shape, not a local tune).  The scan still reads the
+#: parquet data at every action; a rewritten/extended file set changes
+#: the stamp and re-infers.
+_SCHEMA_CACHE = Memo(1024)
 
 
 def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
@@ -83,17 +63,17 @@ def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
     first read of a given file state infers (and records) the schema; every
     later read of the SAME state passes it explicitly, producing an
     identical analyzed plan without re-paying inference."""
-    key = _paths_key(spark, paths)
-    if key is None:
-        return spark.read.parquet(*paths)
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        df = spark.read.parquet(*paths)
-        if len(_SCHEMA_CACHE) >= _SCHEMA_CACHE_MAX:
-            _SCHEMA_CACHE.clear()
-        _SCHEMA_CACHE[key] = df.schema
-        return df
-    return spark.read.schema(schema).parquet(*paths)
+    stamp = file_stamp(*paths)
+    key = stamp and (stamp, spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"))
+    inferred: list[DataFrame] = []
+
+    def infer() -> T.StructType:
+        inferred.append(spark.read.parquet(*paths))
+        return inferred[0].schema
+
+    schema = _SCHEMA_CACHE.get_or(key, infer)
+    # a miss returns the inferring frame itself: one inference read, not two
+    return inferred[0] if inferred else spark.read.schema(schema).parquet(*paths)
 
 
 def _scan_parallelism(path: str) -> int | None:

@@ -33,11 +33,11 @@ import json
 import time
 import urllib.error
 import urllib.request
-from collections import OrderedDict
 from dataclasses import dataclass
 from typing import Callable
 
 from ..errors import AnglerfishError
+from ..memo import Memo
 from ..schema.model import (
     AvroArray,
     AvroEnum,
@@ -100,7 +100,7 @@ class SchemaRegistryClient:
         self.subject_ttl = subject_ttl
         self._sleep = _sleep
         self._clock = _clock
-        self._ids: OrderedDict[int, str] = OrderedDict()
+        self._ids = Memo(id_cache_size)
         self._subjects: dict[str, tuple[float, RegisteredSchema]] = {}
         self.stats = {"hits": 0, "misses": 0, "evictions": 0, "requests": 0}
 
@@ -139,16 +139,13 @@ class SchemaRegistryClient:
     def schema_by_id(self, schema_id: int) -> str:
         """Writer schema JSON for a registry-assigned id (cached forever —
         registry ids are immutable — under an LRU entry-count bound)."""
-        cached = self._ids.get(schema_id)
-        if cached is not None:
-            self.stats["hits"] += 1
-            self._ids.move_to_end(schema_id)
-            return cached
-        self.stats["misses"] += 1
-        schema = self._request("GET", f"/schemas/ids/{schema_id}")["schema"]
-        self._ids[schema_id] = schema
-        if len(self._ids) > self.id_cache_size:
-            self._ids.popitem(last=False)
+        hit = schema_id in self._ids
+        self.stats["hits" if hit else "misses"] += 1
+        n = len(self._ids)
+        schema = self._ids.get_or(
+            schema_id, lambda: self._request("GET", f"/schemas/ids/{schema_id}")["schema"]
+        )
+        if not hit and len(self._ids) == n:
             self.stats["evictions"] += 1
         return schema
 
@@ -172,7 +169,7 @@ class SchemaRegistryClient:
         )
         self._subjects[subject] = (now + self.subject_ttl, rs)
         # the id mapping is free knowledge — seed the id cache
-        self._ids.setdefault(rs.schema_id, rs.schema_json)
+        self._ids.get_or(rs.schema_id, lambda: rs.schema_json)
         return rs
 
     # producer side -----------------------------------------------------------

@@ -980,7 +980,7 @@ class TestDecodeJsonExprCacheR14Opt:
     def test_lru_eviction_keeps_recent_hit(self, spark, monkeypatch):
         from anglerfish_spark.codec import decoder as D
 
-        monkeypatch.setattr(D, "_DECODE_EXPR_CACHE_MAX", 2)
+        monkeypatch.setattr(D._DECODE_EXPR_CACHE, "maxsize", 2)
         D._DECODE_EXPR_CACHE.clear()
         df = spark.createDataFrame([('{"k": 1}',)], "props string")
         a, b, c = (
@@ -999,7 +999,7 @@ class TestDecodeJsonExprCacheR14Opt:
 
         from anglerfish_spark.codec import decoder as D
 
-        monkeypatch.setattr(D, "_DECODE_EXPR_CACHE_MAX", 2)
+        monkeypatch.setattr(D._DECODE_EXPR_CACHE, "maxsize", 2)
         D._DECODE_EXPR_CACHE.clear()
         df = spark.createDataFrame([('{"k": 1}',)], "props string")
         schemas = [

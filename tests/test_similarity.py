@@ -163,7 +163,7 @@ class TestNullEmbeddings:
                 F.col("embedding")
             ).alias("embedding"),
         )
-        cb = sim._pq_codebook(e, cache_key=f"{sf_dir}-nulltest")
+        cb = sim._pq_codebook(e)
         # reuse the registered query's internals by calling it over a temp
         # view is heavyweight; instead assert via the public query on clean
         # data plus a direct probe that nulls don't raise:
@@ -322,7 +322,7 @@ class TestClusteredRecall:
         )
 
         e = clustered_embeddings(spark)
-        cents = _centroids(e, cache_key="clustered-ci")
+        cents = _centroids(e)
         best = F.element_at(_cell_ranking(F.col("embedding"), cents), -1)
         path = str(tmp_path / "cells")
         e.select(
@@ -349,13 +349,13 @@ class TestClusteredRecall:
             "PartitionFilters" in ln and "cell" in ln for ln in plan.splitlines()
         ), plan
 
-        _pq_codebook(e, cache_key="clustered-ci")
+        cb = _pq_codebook(e)
         e_pipe = (
             e.where(F.col("vec_id") < N_QUERIES)
             .unionByName(pruned.select("vec_id", "label", "embedding"))
             .dropDuplicates(["vec_id"])
         )
-        adc = _pq_adc_scores(spark, e_pipe, "clustered-ci")
+        adc = _pq_adc_scores(spark, e_pipe, cb)
         w_short = Window.partitionBy("query_id").orderBy(
             F.col("adc_dist").asc(), "vec_id"
         )
@@ -394,3 +394,51 @@ class TestClusteredRecall:
         mean = sum(recalls) / len(recalls)
         # the CI gate: measured 1.0 on this relation; 0.8 is the floor
         assert mean >= 0.8, (mean, recalls)
+
+
+class TestQuantizerCacheFollowsRewrite:
+    """The centroid and PQ-codebook caches key on the embeddings file's
+    state, not on the directory name: a file rewritten at the same path
+    is re-collected instead of serving the old quantizer."""
+
+    @staticmethod
+    def _write(path, scale: float) -> list[list[float]]:
+        import time
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        vecs = [[scale * (i + j) for j in range(8)] for i in range(40)]
+        time.sleep(0.05)  # a distinct mtime_ns on coarse-clock filesystems
+        pq.write_table(
+            pa.table(
+                {
+                    "vec_id": pa.array(range(40), pa.int64()),
+                    "embedding": pa.array(vecs, pa.list_(pa.float32())),
+                    "label": pa.array([i % 3 for i in range(40)], pa.int32()),
+                }
+            ),
+            str(path / "embeddings.parquet"),
+        )
+        return vecs
+
+    def test_rewrite_at_same_path_misses(self, spark, tmp_path):
+        from anglerfish_spark.operators.similarity import (
+            N_CENTROIDS,
+            PQ_K,
+            _centroids,
+            _pq_codebook,
+        )
+        from anglerfish_spark.sources.registry import load_table
+
+        sf = str(tmp_path)
+        for scale in (1.0, 2.0):
+            vecs = self._write(tmp_path, scale)
+            e = load_table(spark, sf, "embeddings")
+            cb = _pq_codebook(e, sf)
+            cents = _centroids(e, sf)
+            assert cb.tolist() == vecs[:PQ_K], "codebook follows rewrite"
+            assert [c for _, c in cents] == vecs[:N_CENTROIDS], "centroids follow rewrite"
+            # same file state: served from the caches, not re-collected
+            assert _pq_codebook(e.limit(0), sf) is cb
+            assert _centroids(e.limit(0), sf) is cents

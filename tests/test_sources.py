@@ -275,6 +275,39 @@ class TestReadParquetSchemaCacheR14Opt:
         pq.write_table(pa.table({"a": pa.array([2], pa.int64())}), str(d / "2.parquet"))
         assert read_parquet(spark, str(d)).count() == 2
 
+    def test_deep_partition_rewrite_and_conf_flip_miss(self, spark, tmp_path):
+        """A file replaced in place two partition levels down (root and
+        _SUCCESS untouched) re-infers; so does a flip of the one inference
+        conf in the key."""
+        import os
+        import time as _t
+
+        from anglerfish_spark.sources import registry as R
+
+        d = str(tmp_path / "t")
+        spark.createDataFrame([(1, "x", 10)], "p1 int, p2 string, v bigint").write.partitionBy(
+            "p1", "p2"
+        ).parquet(d)
+        assert R.read_parquet(spark, d).columns == ["v", "p1", "p2"]
+        leaf = os.path.join(d, "p1=1", "p2=x")
+        (part,) = [f for f in os.listdir(leaf) if f.endswith(".parquet")]
+        _t.sleep(0.05)
+        # in place, and drop Hadoop's now-stale checksum of the old bytes
+        pq.write_table(pa.table({"v": [10], "w": ["new"]}), os.path.join(leaf, part))
+        os.remove(os.path.join(leaf, f".{part}.crc"))
+        assert R.read_parquet(spark, d).columns == ["v", "w", "p1", "p2"]
+
+        conf = "spark.sql.legacy.parquet.nanosAsLong"
+        old = spark.conf.get(conf, "false")
+        R._SCHEMA_CACHE.clear()
+        R.read_parquet(spark, d)
+        spark.conf.set(conf, "false" if old == "true" else "true")
+        try:
+            R.read_parquet(spark, d)
+        finally:
+            spark.conf.set(conf, old)
+        assert len(R._SCHEMA_CACHE) == 2
+
     def test_data_never_cached(self, spark, tmp_path):
         """Same file state, different CONTENT bytes is impossible without a
         stat change on a real write path; what matters is that the action

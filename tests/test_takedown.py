@@ -1059,7 +1059,7 @@ class TestCorpusFeed:
         corpus = docs.join(
             emb.select(F.col("vec_id").alias("doc_id"), "embedding"), "doc_id"
         )
-        cents = _centroids(emb, cache_key=f"test:{sf_dir}")
+        cents = _centroids(emb, sf_dir)
         name = f"ang_corpustest_{uuid.uuid4().hex[:8]}"
         corpus_index_bootstrap(spark, name)
         t = str(tmp_path / "corpus")
