@@ -1,15 +1,29 @@
-"""The engine's one policy for process-lifetime state: every module-level
-``*_CACHE`` is a :class:`Memo` keyed by everything its value depends on —
-a :func:`file_stamp` for file-derived values, the confs that change the
-value, and the SparkContext for values holding JVM objects."""
+"""The engine's one policy for process-lifetime state.
+
+* Every module-level cache is a :class:`Memo` keyed by everything its
+  value depends on — a :func:`file_stamp` for file-derived values, the
+  confs that change the value, and the SparkContext for values holding
+  JVM objects.
+* Every build-once asset (a demo table, a persisted index, a stand-in for
+  an external source such as a Kafka topic or an OCF drop) goes through
+  :func:`materialize_once`: built once per ``(key, sf_dir)`` per process,
+  served again only while its ``ready`` check holds, rebuilt at a fresh
+  path otherwise.  The builders are deterministic functions of the
+  sf_dir tables, so a re-read is observationally identical to a rebuild.
+* Every built path and every :func:`scratch_dir` lives under one
+  per-process root directory that is removed when the process exits.
+"""
 
 from __future__ import annotations
 
+import atexit
 import functools
 import os
+import shutil
 import stat
 import tempfile
 import threading
+import time
 from collections import OrderedDict
 from typing import Callable, Hashable
 
@@ -22,17 +36,27 @@ class Memo(OrderedDict):
         self.maxsize = maxsize
         self._lock = threading.Lock()
 
-    def get_or(self, key: Hashable | None, compute: Callable[[], object]):
+    def get_or(
+        self,
+        key: Hashable | None,
+        compute: Callable[[], object],
+        valid: Callable[[object], bool] | None = None,
+    ):
         """The value stored under ``key``, else ``compute()`` stored under it.
         ``compute`` runs outside the lock (it may run Spark jobs), so racing
         misses each compute and the last store wins.  A ``None`` key is
-        uncacheable: the value is computed and never stored."""
+        uncacheable: the value is computed and never stored.  A stored value
+        for which ``valid(value)`` is false (checked outside the lock) is
+        recomputed."""
         if key is None:
             return compute()
         with self._lock:
-            if key in self:
+            hit = key in self
+            if hit:
                 self.move_to_end(key)
-                return self[key]
+                value = self[key]
+        if hit and (valid is None or valid(value)):
+            return value
         value = compute()
         with self._lock:
             self[key] = value
@@ -62,6 +86,48 @@ def file_stamp(*paths: str) -> tuple | None:
 
 
 @functools.lru_cache(maxsize=None)
+def _root() -> str:
+    """The per-process directory holding every built path and scratch dir,
+    removed at exit."""
+    root = tempfile.mkdtemp(prefix="anglerfish_run_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+@functools.lru_cache(maxsize=None)
 def scratch_dir(prefix: str) -> str:
     """One scratch directory per ``prefix`` for the life of the process."""
-    return tempfile.mkdtemp(prefix=prefix)
+    return tempfile.mkdtemp(prefix=prefix, dir=_root())
+
+
+#: asset key -> seconds spent building it in this process; bench.py
+#: reports this as "setup_sec", so build cost is visible but not timed as
+#: part of the queries that read the asset
+SETUP_SECONDS: dict[str, float] = {}
+
+#: (key, sf_dir) -> built path
+_BUILT = Memo(256)
+
+
+def materialize_once(
+    key: str,
+    sf_dir: str,
+    build: Callable[[str], None],
+    ready: Callable[[str], bool] = os.path.isdir,
+) -> str:
+    """The path holding asset ``key`` built from ``sf_dir``.  ``build(path)``
+    runs on the first call, and again at a fresh path whenever
+    ``ready(path)`` fails on the stored one (the default checks that the
+    directory still exists; catalog-backed assets also check their
+    tables).  A ``build`` that raises stores nothing."""
+
+    def make() -> str:
+        path = os.path.join(tempfile.mkdtemp(dir=_root()), key)
+        t0 = time.perf_counter()
+        build(path)
+        SETUP_SECONDS[key] = round(
+            SETUP_SECONDS.get(key, 0.0) + time.perf_counter() - t0, 3
+        )
+        return path
+
+    return _BUILT.get_or((key, sf_dir), make, ready)

@@ -32,11 +32,6 @@ def dsum_compact(col: Column) -> Column:
     return F.sum(col.cast("decimal(18,10)")).cast("double")
 
 
-def davg(col: Column) -> Column:
-    """Deterministic mean: exact decimal sum cast to double, over count."""
-    return dsum(col) / F.count(col)
-
-
 def dsum_sql(expr: str) -> str:
     # the VARCHAR hop matters: DuckDB's DECIMAL→DOUBLE cast double-rounds
     # (hugeint→double then ÷10^scale), while Spark's BigDecimal→double is

@@ -2061,7 +2061,7 @@ def _fp_pos(fp: Column, i: int, m: int) -> Column:
 BLOOM_WORD_BITS = 64
 #: filters up to this many bits ride the plan as a BINARY literal
 #: (codegen byte tests); larger filters go through the broadcast +
-#: Arrow-probe path.  Env-overridable so tests can force either path.
+#: Arrow-probe path.  Tests patch it to force either path.
 BLOOM_LITERAL_MAX_BITS = 1 << 20
 
 
@@ -2122,11 +2122,8 @@ def bloom_probe(spark: SparkSession, fp: Column, filter_bits: bytes,
     BLOOM_LITERAL_MAX_BITS are shipped ONCE per executor as a broadcast
     variable and probed by an Arrow-batched numpy UDF — the 100 TB path,
     where a ~1.25 GB filter cannot be a task-binary literal."""
-    import os
-
     m = len(filter_bits)
-    limit = int(os.environ.get("ANGLERFISH_BLOOM_LITERAL_MAX", BLOOM_LITERAL_MAX_BITS))
-    if m <= limit:
+    if m <= BLOOM_LITERAL_MAX_BITS:
         # one literal Column reused across the k probes: the filter bytes
         # cross the py4j socket ONCE instead of k times (r14-opt; the JVM
         # expression tree shares the node, the plan is unchanged)

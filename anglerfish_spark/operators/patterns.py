@@ -272,15 +272,6 @@ class PatternMachine:
         )
 
 
-def match_pattern_reference(types: list, pattern: PatternSpec) -> tuple:
-    """Pure-Python oracle for the fuzz differential: run the automaton
-    over an in-memory event list.  Returns (n, tot, mx)."""
-    m = PatternMachine(pattern)
-    for et in types:
-        m.feed(et)
-    return (m.n, m.tot, m.mx)
-
-
 def make_stateful_pattern_fn(pattern: PatternSpec, key_field: str = "user_id"):
     """Build the ``applyInPandasWithState`` function for a spec: sorts the
     whole micro-batch once (ADVICE r5), resumes the automaton from the

@@ -630,7 +630,7 @@ def ivf_persisted_cells(spark: SparkSession, sf_dir: str) -> str:
     so probe-time reads PRUNE partitions at scan time — a query touching
     N_PROBE cells reads N_PROBE/K of the corpus bytes, verified by a plan
     assertion in tests/test_scale_paths.py."""
-    from ..sources.standin import materialize_once
+    from ..memo import materialize_once
 
     def build(path: str) -> None:
         ivf_assigned(spark, sf_dir).write.partitionBy("cell").parquet(path)

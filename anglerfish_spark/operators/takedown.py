@@ -54,9 +54,10 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..memo import materialize_once
 from ..registry import query
 from ..session import prepare
-from ..sources.manifest_table import _MANIFEST_DIR, delete_keys, snapshot, upsert
+from ..sources.manifest_table import delete_keys, snapshot, upsert
 from ..sources.read_path import table_changes
 from ..sources.registry import load_table, read_parquet
 from .dedup import _FP_SQL, _PAIRS_CTE, dedup_index_tables, lsh_bands
@@ -72,7 +73,6 @@ from .text import (
     BM25_TOP_K,
     build_persisted_index,
     inverted_index_append,
-    inverted_index_compact,
     inverted_index_takedown,
     inverted_index_takedown_masked,
     invidx_tombstone_table,
@@ -101,9 +101,6 @@ def _stable_tag(prefix: str, *parts: str) -> str:
     return f"{prefix}{h}"
 
 
-_TDN_ASSETS: dict[str, tuple[str, str]] = {}
-
-
 def _takedown_assets(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """``(corpus_table, invidx_name)`` built once per process per
     sf_dir, with the takedown ALREADY APPLIED (the steady state the
@@ -112,34 +109,28 @@ def _takedown_assets(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     takedown commit; maintenance then consumes the v1→v2 change feed's
     delete images — asserting the feed took the 'logged' path, i.e. the
     maintenance read O(deleted rows), never a snapshot diff."""
-    cached = _TDN_ASSETS.get(sf_dir)
     name = f"ang_invidx_tdn_{abs(hash(sf_dir)) % 10**8}"
-    if (
-        cached
-        and os.path.isdir(os.path.join(cached[0], _MANIFEST_DIR))
-        and spark.catalog.tableExists(invidx_tombstone_table(name))
-    ):
-        return cached
-    t = tempfile.mkdtemp(prefix="anglerfish_takedown_")
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    idx_docs = docs.where(F.pmod(F.col("doc_id"), F.lit(10)) != 0)
-    upsert(spark, t, idx_docs, ["doc_id"], txn_id="tdn-v1")
-    if not spark.catalog.tableExists(name):
-        build_persisted_index(spark, snapshot(spark, t, 1), name)
-    doomed = idx_docs.where(F.col("doc_id") % 7 == 0).select("doc_id")
-    delete_keys(spark, t, "doc_id", doomed, txn_id="tdn-v2")
-    if not spark.catalog.tableExists(invidx_tombstone_table(name)):
-        feed, mode = table_changes(spark, t, 1, 2, net=True)
-        assert mode == "logged", mode  # maintenance must be O(deleted rows)
-        deleted = feed.where(F.col("_change_type") == "delete").select(
-            "doc_id", "text"
-        )
-        inverted_index_takedown(spark, name, deleted)
-    _TDN_ASSETS[sf_dir] = (t, name)
-    return t, name
 
+    def build(t: str) -> None:
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        idx_docs = docs.where(F.pmod(F.col("doc_id"), F.lit(10)) != 0)
+        upsert(spark, t, idx_docs, ["doc_id"], txn_id="tdn-v1")
+        if not spark.catalog.tableExists(name):
+            build_persisted_index(spark, snapshot(spark, t, 1), name)
+        doomed = idx_docs.where(F.col("doc_id") % 7 == 0).select("doc_id")
+        delete_keys(spark, t, "doc_id", doomed, txn_id="tdn-v2")
+        if not spark.catalog.tableExists(invidx_tombstone_table(name)):
+            feed, mode = table_changes(spark, t, 1, 2, net=True)
+            assert mode == "logged", mode  # maintenance must be O(deleted rows)
+            deleted = feed.where(F.col("_change_type") == "delete").select(
+                "doc_id", "text"
+            )
+            inverted_index_takedown(spark, name, deleted)
 
-_ANN_TDN_ASSETS: dict[str, tuple[str, str]] = {}
+    def ready(t: str) -> bool:
+        return os.path.isdir(t) and spark.catalog.tableExists(invidx_tombstone_table(name))
+
+    return materialize_once("takedown", sf_dir, build, ready), name
 
 
 def _ann_takedown_assets(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
@@ -151,26 +142,23 @@ def _ann_takedown_assets(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     the identical CDC composition as the text-index takedown, applied to
     the third persisted index family (the IVF cell index)."""
     name = f"ang_ivf_ts_{abs(hash(sf_dir)) % 10**8}"
-    cached = _ANN_TDN_ASSETS.get(sf_dir)
-    if (
-        cached
-        and os.path.isdir(os.path.join(cached[0], _MANIFEST_DIR))
-        and spark.catalog.tableExists(name)
-    ):
-        return cached
-    t = tempfile.mkdtemp(prefix="anglerfish_ann_takedown_")
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
-    upsert(spark, t, e, ["vec_id"], txn_id="atdn-v1")
-    doomed = e.where(F.col("vec_id") % 9 == 0).select("vec_id")
-    delete_keys(spark, t, "vec_id", doomed, txn_id="atdn-v2")
-    if not spark.catalog.tableExists(name):
-        feed, mode = table_changes(spark, t, 1, 2, net=True)
-        assert mode == "logged", mode  # maintenance reads O(deleted rows)
-        feed.where(F.col("_change_type") == "delete").select(
-            "vec_id"
-        ).write.mode("append").saveAsTable(name)
-    _ANN_TDN_ASSETS[sf_dir] = (t, name)
-    return t, name
+
+    def build(t: str) -> None:
+        e = load_table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
+        upsert(spark, t, e, ["vec_id"], txn_id="atdn-v1")
+        doomed = e.where(F.col("vec_id") % 9 == 0).select("vec_id")
+        delete_keys(spark, t, "vec_id", doomed, txn_id="atdn-v2")
+        if not spark.catalog.tableExists(name):
+            feed, mode = table_changes(spark, t, 1, 2, net=True)
+            assert mode == "logged", mode  # maintenance reads O(deleted rows)
+            feed.where(F.col("_change_type") == "delete").select(
+                "vec_id"
+            ).write.mode("append").saveAsTable(name)
+
+    def ready(t: str) -> bool:
+        return os.path.isdir(t) and spark.catalog.tableExists(name)
+
+    return materialize_once("ann_takedown", sf_dir, build, ready), name
 
 
 def _ann_takedown_oracle() -> str:
@@ -677,9 +665,6 @@ def start_index_maintenance_feed(
     )
 
 
-_MAINT_ASSETS: dict[str, str] = {}
-
-
 def _maintenance_assets(spark: SparkSession, sf_dir: str) -> str:
     """A persisted index built and maintained ENTIRELY by the change
     feed (once per process per sf_dir), exercising the whole lifecycle
@@ -705,52 +690,53 @@ def _maintenance_assets(spark: SparkSession, sf_dir: str) -> str:
     maintained index is score-exact over the current corpus BEFORE any
     fold (VERDICT r12 #1's done-bar); the compaction-equality pin lives
     in tests/test_takedown.py."""
-    cached = _MAINT_ASSETS.get(sf_dir)
     name = f"ang_invidx_maint_{abs(hash(sf_dir)) % 10**8}"
-    if cached and spark.catalog.tableExists(name):
-        return name
     import pyspark.sql.types as T
 
     from ..streaming.stateful import await_or_fail
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    t = tempfile.mkdtemp(prefix="anglerfish_maint_")
-    empty = spark.createDataFrame(
-        [], T.StructType([
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]),
-    )
-    build_persisted_index(spark, empty, name)  # schema-only bootstrap
-    ckpt = tempfile.mkdtemp(prefix="anglerfish_maint_ckpt_")
-
-    def drain() -> None:
-        # ADVICE r12 #4: fail loudly on a hung drain instead of caching
-        # a half-built index
-        await_or_fail(
-            start_index_maintenance_feed(spark, t, name, ckpt, starting_version=0),
-            300,
+    def build(root: str) -> None:
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        t = os.path.join(root, "table")
+        empty = spark.createDataFrame(
+            [], T.StructType([
+                T.StructField("doc_id", T.LongType()),
+                T.StructField("text", T.StringType()),
+            ]),
         )
+        build_persisted_index(spark, empty, name)  # schema-only bootstrap
+        ckpt = os.path.join(root, "ckpt")
 
-    upsert(
-        spark, t, docs.where(F.pmod(F.col("doc_id"), F.lit(10)) != 0),
-        ["doc_id"], txn_id="m-v1",
+        def drain() -> None:
+            # ADVICE r12 #4: fail loudly on a hung drain instead of caching
+            # a half-built index
+            await_or_fail(
+                start_index_maintenance_feed(spark, t, name, ckpt, starting_version=0),
+                300,
+            )
+
+        upsert(
+            spark, t, docs.where(F.pmod(F.col("doc_id"), F.lit(10)) != 0),
+            ["doc_id"], txn_id="m-v1",
+        )
+        drain()
+        v2 = docs.where(F.pmod(F.col("doc_id"), F.lit(10)) == 0).unionByName(
+            docs.where(
+                (F.pmod(F.col("doc_id"), F.lit(13)) == 0)
+                & (F.pmod(F.col("doc_id"), F.lit(10)) != 0)
+            ).select("doc_id", F.concat(F.lit("updated "), F.col("text")).alias("text"))
+        )
+        upsert(spark, t, v2, ["doc_id"], txn_id="m-v2")
+        drain()
+        delete_keys(
+            spark, t, "doc_id",
+            docs.where(F.col("doc_id") % 7 == 0).select("doc_id"), txn_id="m-v3",
+        )
+        drain()
+
+    materialize_once(
+        "maint", sf_dir, build, lambda _root: spark.catalog.tableExists(name)
     )
-    drain()
-    v2 = docs.where(F.pmod(F.col("doc_id"), F.lit(10)) == 0).unionByName(
-        docs.where(
-            (F.pmod(F.col("doc_id"), F.lit(13)) == 0)
-            & (F.pmod(F.col("doc_id"), F.lit(10)) != 0)
-        ).select("doc_id", F.concat(F.lit("updated "), F.col("text")).alias("text"))
-    )
-    upsert(spark, t, v2, ["doc_id"], txn_id="m-v2")
-    drain()
-    delete_keys(
-        spark, t, "doc_id",
-        docs.where(F.col("doc_id") % 7 == 0).select("doc_id"), txn_id="m-v3",
-    )
-    drain()
-    _MAINT_ASSETS[sf_dir] = name
     return name
 
 
@@ -1167,9 +1153,6 @@ def corpus_dedup_probe(
     return exact, near
 
 
-_CORPUS_ASSETS: dict[str, tuple[str, str, list]] = {}
-
-
 def _corpus_assets(spark: SparkSession, sf_dir: str) -> tuple[str, str, list]:
     """``(index_name, cells_path, centroids)`` for the unified-feed
     lifecycle (once per process per sf_dir): all three families
@@ -1186,55 +1169,57 @@ def _corpus_assets(spark: SparkSession, sf_dir: str) -> tuple[str, str, list]:
 
     NO compaction follows — probes read the live LSM state through the
     shared generation-stamped tombstones."""
-    cached = _CORPUS_ASSETS.get(sf_dir)
     name = f"ang_corpusidx_{abs(hash(sf_dir)) % 10**8}"
-    if cached and spark.catalog.tableExists(name):
-        return cached
     from ..streaming.stateful import await_or_fail
     from .similarity import _centroids
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     emb = load_table(spark, sf_dir, "embeddings")
-    corpus = docs.join(
-        emb.select(F.col("vec_id").alias("doc_id"), "embedding"), "doc_id"
-    )
     cents = _centroids(emb, sf_dir)
-    t = tempfile.mkdtemp(prefix="anglerfish_corpus_")
-    corpus_index_bootstrap(spark, name)
-    cells_path = tempfile.mkdtemp(prefix="anglerfish_corpus_cells_") + "/cells"
-    ckpt = tempfile.mkdtemp(prefix="anglerfish_corpus_ckpt_")
 
-    def drain() -> None:
-        await_or_fail(
-            start_corpus_maintenance_feed(
-                spark, t, name, cells_path, cents, ckpt, starting_version=0
-            ),
-            300,
+    def build(root: str) -> None:
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        corpus = docs.join(
+            emb.select(F.col("vec_id").alias("doc_id"), "embedding"), "doc_id"
         )
+        t = os.path.join(root, "table")
+        corpus_index_bootstrap(spark, name)
+        cells_path = os.path.join(root, "cells")
+        ckpt = os.path.join(root, "ckpt")
 
-    upsert(
-        spark, t, corpus.where(F.pmod(F.col("doc_id"), F.lit(10)) != 0),
-        ["doc_id"], txn_id="c-v1",
+        def drain() -> None:
+            await_or_fail(
+                start_corpus_maintenance_feed(
+                    spark, t, name, cells_path, cents, ckpt, starting_version=0
+                ),
+                300,
+            )
+
+        upsert(
+            spark, t, corpus.where(F.pmod(F.col("doc_id"), F.lit(10)) != 0),
+            ["doc_id"], txn_id="c-v1",
+        )
+        drain()
+        updated = corpus.where(
+            (F.pmod(F.col("doc_id"), F.lit(13)) == 0)
+            & (F.pmod(F.col("doc_id"), F.lit(10)) != 0)
+        ).select(
+            "doc_id",
+            F.concat(F.lit("updated "), F.col("text")).alias("text"),
+            F.transform("embedding", lambda x: -x).alias("embedding"),
+        )
+        v2 = corpus.where(F.pmod(F.col("doc_id"), F.lit(10)) == 0).unionByName(updated)
+        upsert(spark, t, v2, ["doc_id"], txn_id="c-v2")
+        drain()
+        delete_keys(
+            spark, t, "doc_id",
+            corpus.where(F.col("doc_id") % 7 == 0).select("doc_id"), txn_id="c-v3",
+        )
+        drain()
+
+    root = materialize_once(
+        "corpus", sf_dir, build, lambda _root: spark.catalog.tableExists(name)
     )
-    drain()
-    updated = corpus.where(
-        (F.pmod(F.col("doc_id"), F.lit(13)) == 0)
-        & (F.pmod(F.col("doc_id"), F.lit(10)) != 0)
-    ).select(
-        "doc_id",
-        F.concat(F.lit("updated "), F.col("text")).alias("text"),
-        F.transform("embedding", lambda x: -x).alias("embedding"),
-    )
-    v2 = corpus.where(F.pmod(F.col("doc_id"), F.lit(10)) == 0).unionByName(updated)
-    upsert(spark, t, v2, ["doc_id"], txn_id="c-v2")
-    drain()
-    delete_keys(
-        spark, t, "doc_id",
-        corpus.where(F.col("doc_id") % 7 == 0).select("doc_id"), txn_id="c-v3",
-    )
-    drain()
-    _CORPUS_ASSETS[sf_dir] = (name, cells_path, cents)
-    return name, cells_path, cents
+    return name, os.path.join(root, "cells"), cents
 
 
 def _bands_cte_sql(src: str, p: str) -> str:

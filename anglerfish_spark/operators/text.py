@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..memo import scratch_dir
+from ..memo import materialize_once, scratch_dir
 from ..registry import query
 from ..session import prepare
 from ..sources.registry import load_table
@@ -1233,7 +1233,7 @@ def inverted_index_compact(spark: SparkSession, name: str) -> None:
                 F.col("p.tf").alias("tf"), F.col("p.positions").alias("positions"))
     )
     posts = _mask_retired(posts, ts)
-    shard = F.floor(F.col("doc_id") / F.lit(_shard_docs())).cast("bigint")
+    shard = F.floor(F.col("doc_id") / F.lit(POSTINGS_SHARD_DOCS)).cast("bigint")
     merged = posts.withColumn("shard", shard).groupBy("term", "shard").agg(
         F.count(F.lit(1)).cast("bigint").alias("df"),
         F.sort_array(F.collect_list(F.struct("doc_id", "tf", "positions"))).alias(
@@ -1351,33 +1351,33 @@ def _probe_boolean(idx: DataFrame) -> DataFrame:
     return boolean_search(idx, _SEARCH_TERMS[:2], _SEARCH_TERMS[2:])
 
 
-_INVIDX_INCR_BUILT: set[str] = set()
-
-
 def _incremental_index(spark: SparkSession, sf_dir: str) -> str:
     """Two-ingest index (once per process per sf_dir): 90% of the corpus
     at 'initial load', the doc_id % 10 == 0 batch appended after."""
     name = f"ang_invidx_incr_p3_{abs(hash(sf_dir)) % 10**8}"
-    if name in _INVIDX_INCR_BUILT and spark.catalog.tableExists(name):
-        return name
     import os
-    d = load_table(spark, sf_dir, "documents")
-    is_new = F.pmod(F.col("doc_id"), F.lit(10)) == 0
-    if not spark.catalog.tableExists(name):
-        (
-            build_positional_index(d.where(~is_new), sharded=True)
-            .withColumn("gen", F.lit(0).cast("bigint"))
-            .withColumn("src", F.lit("base"))
-            .write.mode("overwrite")
-            .option("path", os.path.join(scratch_dir("anglerfish_invidx_"), name))
-            .partitionBy("src")
-            .bucketBy(INVIDX_BUCKETS, "term")
-            .sortBy("term")
-            .saveAsTable(name)
-        )
-        _write_index_side_tables(spark, name, d.where(~is_new), "overwrite", src="base")
-        inverted_index_append(spark, name, d.where(is_new))
-    _INVIDX_INCR_BUILT.add(name)
+
+    def build(_path: str) -> None:
+        d = load_table(spark, sf_dir, "documents")
+        is_new = F.pmod(F.col("doc_id"), F.lit(10)) == 0
+        if not spark.catalog.tableExists(name):
+            (
+                build_positional_index(d.where(~is_new), sharded=True)
+                .withColumn("gen", F.lit(0).cast("bigint"))
+                .withColumn("src", F.lit("base"))
+                .write.mode("overwrite")
+                .option("path", os.path.join(scratch_dir("anglerfish_invidx_"), name))
+                .partitionBy("src")
+                .bucketBy(INVIDX_BUCKETS, "term")
+                .sortBy("term")
+                .saveAsTable(name)
+            )
+            _write_index_side_tables(spark, name, d.where(~is_new), "overwrite", src="base")
+            inverted_index_append(spark, name, d.where(is_new))
+
+    materialize_once(
+        "invidx_incr", sf_dir, build, lambda _path: spark.catalog.tableExists(name)
+    )
     return name
 
 
@@ -1471,15 +1471,6 @@ def q_inverted_search_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
 # ---------------------------------------------------------------------------
 
 
-def _shard_docs() -> int:
-    """Per-shard doc-range width of the persisted postings layout
-    (env-overridable so soaks/tests can force multi-shard behavior on
-    small corpora)."""
-    import os
-
-    return int(os.environ.get("ANGLERFISH_INVIDX_SHARD_DOCS", str(POSTINGS_SHARD_DOCS)))
-
-
 #: doc-id range width of one postings SHARD in the persisted layout
 #: (VERDICT r11 #1): a (term, shard) row holds at most this many posting
 #: entries — one per doc in the range — so a stop-word-frequency term can
@@ -1527,7 +1518,7 @@ def build_positional_index(d: DataFrame, sharded: bool = False) -> DataFrame:
                 "postings"
             ),
         )
-    shard = F.floor(F.col("doc_id") / F.lit(_shard_docs())).cast("bigint")
+    shard = F.floor(F.col("doc_id") / F.lit(POSTINGS_SHARD_DOCS)).cast("bigint")
     return (
         pairs.withColumn("shard", shard)
         .groupBy("term", "shard")

@@ -67,7 +67,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..errors import AnglerfishError
-from ..memo import Memo
+from ..memo import Memo, materialize_once
 from ..registry import query
 from ..session import prepare
 from .registry import read_parquet
@@ -113,9 +113,9 @@ _FORMAT = 3
 #: Target files per fileset segment chunk.  A fileset larger than this
 #: splits into a deterministic power-of-two number of hash-of-path
 #: buckets, so removing k files rewrites only the k buckets they hash
-#: into (Iceberg bounds manifest size the same way).  Env-overridable so
-#: the metadata soak can exercise multi-chunk tables at sandbox scale.
-_SEG_TARGET_FILES = int(os.environ.get("ANGLERFISH_SEG_TARGET_FILES", "512"))
+#: into (Iceberg bounds manifest size the same way).  The metadata soak
+#: patches it to exercise multi-chunk tables at sandbox scale.
+_SEG_TARGET_FILES = 512
 
 
 def _manifest_path(table: str, version: int) -> str:
@@ -1483,8 +1483,6 @@ def start_manifest_upsert_sink(
 # driver's oracle gate
 # ---------------------------------------------------------------------------
 
-_ASOF_TABLES: dict[str, str] = {}
-
 
 def _asof_table(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per process per sf_dir) a two-snapshot manifest table
@@ -1497,28 +1495,23 @@ def _asof_table(spark: SparkSession, sf_dir: str) -> str:
 
     from ..sources.registry import load_table
 
-    t = _ASOF_TABLES.get(sf_dir)
-    if t and os.path.isdir(os.path.join(t, _MANIFEST_DIR)):
-        return t
-    import tempfile
-
-    t = tempfile.mkdtemp(prefix="anglerfish_asof_")
-    orders = load_table(spark, sf_dir, "orders")
-    cols = ["o_orderkey", "o_totalprice", "o_orderpriority"]
-    base = orders.where(F.col("o_orderkey") % 3 == 0).select(*cols)
-    upsert(spark, t, base, ["o_orderkey"], txn_id="asof-v1")
-    updates = (
-        orders.where(F.col("o_orderkey") % 6 == 0)
-        .select(
-            "o_orderkey",
-            (F.col("o_totalprice") + F.lit(1000.0)).alias("o_totalprice"),
-            "o_orderpriority",
+    def build(t: str) -> None:
+        orders = load_table(spark, sf_dir, "orders")
+        cols = ["o_orderkey", "o_totalprice", "o_orderpriority"]
+        base = orders.where(F.col("o_orderkey") % 3 == 0).select(*cols)
+        upsert(spark, t, base, ["o_orderkey"], txn_id="asof-v1")
+        updates = (
+            orders.where(F.col("o_orderkey") % 6 == 0)
+            .select(
+                "o_orderkey",
+                (F.col("o_totalprice") + F.lit(1000.0)).alias("o_totalprice"),
+                "o_orderpriority",
+            )
+            .unionByName(orders.where(F.col("o_orderkey") % 3 == 1).select(*cols))
         )
-        .unionByName(orders.where(F.col("o_orderkey") % 3 == 1).select(*cols))
-    )
-    upsert(spark, t, updates, ["o_orderkey"], txn_id="asof-v2")
-    _ASOF_TABLES[sf_dir] = t
-    return t
+        upsert(spark, t, updates, ["o_orderkey"], txn_id="asof-v2")
+
+    return materialize_once("asof", sf_dir, build)
 
 
 @query(
@@ -1909,8 +1902,6 @@ def snapshot_evolved(
     return df
 
 
-_EVOLVED_TABLES: dict[str, str] = {}
-
 _ORDERS_V1_SCHEMA = """
 {"type":"record","name":"orders_snap","fields":[
   {"name":"o_orderkey","type":"long"},
@@ -1939,29 +1930,24 @@ def _evolved_table(spark: SparkSession, sf_dir: str) -> str:
 
     from ..sources.registry import load_table
 
-    t = _EVOLVED_TABLES.get(sf_dir)
-    if t and os.path.isdir(os.path.join(t, _MANIFEST_DIR)):
-        return t
-    import tempfile
+    def build(t: str) -> None:
+        orders = load_table(spark, sf_dir, "orders")
+        v1 = orders.where(F.col("o_orderkey") % 4 == 0).select(
+            F.col("o_orderkey").cast("long").alias("o_orderkey"),
+            F.col("o_totalprice").cast("double").alias("total"),
+        )
+        append_evolved(spark, t, v1, _ORDERS_V1_SCHEMA, txn_id="evolved-v1")
+        v2 = orders.where(F.col("o_orderkey") % 4 == 1).select(
+            F.col("o_orderkey").cast("long").alias("o_orderkey"),
+            (F.col("o_totalprice") + 500.0).cast("double").alias("price"),
+            F.lit("live").alias("status"),
+        )
+        append_evolved(
+            spark, t, v2, _ORDERS_V2_SCHEMA, reader_schema=_ORDERS_V2_SCHEMA,
+            txn_id="evolved-v2",
+        )
 
-    t = tempfile.mkdtemp(prefix="anglerfish_evolved_")
-    orders = load_table(spark, sf_dir, "orders")
-    v1 = orders.where(F.col("o_orderkey") % 4 == 0).select(
-        F.col("o_orderkey").cast("long").alias("o_orderkey"),
-        F.col("o_totalprice").cast("double").alias("total"),
-    )
-    append_evolved(spark, t, v1, _ORDERS_V1_SCHEMA, txn_id="evolved-v1")
-    v2 = orders.where(F.col("o_orderkey") % 4 == 1).select(
-        F.col("o_orderkey").cast("long").alias("o_orderkey"),
-        (F.col("o_totalprice") + 500.0).cast("double").alias("price"),
-        F.lit("live").alias("status"),
-    )
-    append_evolved(
-        spark, t, v2, _ORDERS_V2_SCHEMA, reader_schema=_ORDERS_V2_SCHEMA,
-        txn_id="evolved-v2",
-    )
-    _EVOLVED_TABLES[sf_dir] = t
-    return t
+    return materialize_once("evolved", sf_dir, build)
 
 
 _DSUM_SQL = "CAST(CAST(SUM(CAST({x} AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE)"
@@ -2164,8 +2150,6 @@ def delete_where(
     )
 
 
-_POSDEL_TABLES: dict[str, str] = {}
-
 #: the predicate threshold both engines apply (absolute: the TPC-H-ish
 #: o_totalprice domain is sf-independent)
 _POSDEL_PRICE = 200_000.0
@@ -2180,24 +2164,19 @@ def _posdel_table(spark: SparkSession, sf_dir: str) -> str:
     process per sf_dir): v1 inserts the %3==0 keys; v2 runs
     ``delete_where(o_totalprice > _POSDEL_PRICE)`` — a predicate DELETE
     recorded as (file, row_index) pairs, data files untouched."""
-    t = _POSDEL_TABLES.get(sf_dir)
-    if t and os.path.isdir(os.path.join(t, _MANIFEST_DIR)):
-        return t
-    import tempfile
-
     from ..sources.registry import load_table
 
-    t = tempfile.mkdtemp(prefix="anglerfish_posdel_")
-    orders = load_table(spark, sf_dir, "orders")
-    base = orders.where(F.col("o_orderkey") % 3 == 0).select(
-        "o_orderkey", "o_totalprice", "o_orderpriority"
-    )
-    upsert(spark, t, base, ["o_orderkey"], txn_id="posdel-v1")
-    delete_where(
-        spark, t, F.col("o_totalprice") > _POSDEL_PRICE, txn_id="posdel-v2"
-    )
-    _POSDEL_TABLES[sf_dir] = t
-    return t
+    def build(t: str) -> None:
+        orders = load_table(spark, sf_dir, "orders")
+        base = orders.where(F.col("o_orderkey") % 3 == 0).select(
+            "o_orderkey", "o_totalprice", "o_orderpriority"
+        )
+        upsert(spark, t, base, ["o_orderkey"], txn_id="posdel-v1")
+        delete_where(
+            spark, t, F.col("o_totalprice") > _POSDEL_PRICE, txn_id="posdel-v2"
+        )
+
+    return materialize_once("posdel", sf_dir, build)
 
 
 @query(
@@ -2242,34 +2221,26 @@ def q_table_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     return summarize(1).unionByName(summarize(2)).orderBy("version")
 
 
-_DELETE_TABLES: dict[str, str] = {}
-
-
 def _deletes_table(spark: SparkSession, sf_dir: str) -> str:
     """Three-snapshot delete demo over ``orders`` (once per process per
     sf_dir): v1 inserts keys %3 ∈ {0, 1}; v2 equality-deletes the
     %6 == 1 keys (merge-on-read: data files untouched — asserted in
     tests); v3 compacts (copy-on-write: deletes folded in, delete list
     cleared)."""
-    t = _DELETE_TABLES.get(sf_dir)
-    if t and os.path.isdir(os.path.join(t, _MANIFEST_DIR)):
-        return t
-    import tempfile
-
     from ..sources.registry import load_table
 
-    t = tempfile.mkdtemp(prefix="anglerfish_mor_")
-    orders = load_table(spark, sf_dir, "orders")
-    k = F.col("o_orderkey")
-    base = orders.where(k % 3 < 2).select(
-        "o_orderkey", "o_totalprice", "o_orderpriority"
-    )
-    upsert(spark, t, base, ["o_orderkey"], txn_id="mor-v1")
-    doomed = orders.where(k % 6 == 1).select("o_orderkey")
-    delete_keys(spark, t, "o_orderkey", doomed, txn_id="mor-v2")
-    compact_table(spark, t)
-    _DELETE_TABLES[sf_dir] = t
-    return t
+    def build(t: str) -> None:
+        orders = load_table(spark, sf_dir, "orders")
+        k = F.col("o_orderkey")
+        base = orders.where(k % 3 < 2).select(
+            "o_orderkey", "o_totalprice", "o_orderpriority"
+        )
+        upsert(spark, t, base, ["o_orderkey"], txn_id="mor-v1")
+        doomed = orders.where(k % 6 == 1).select("o_orderkey")
+        delete_keys(spark, t, "o_orderkey", doomed, txn_id="mor-v2")
+        compact_table(spark, t)
+
+    return materialize_once("mor", sf_dir, build)
 
 
 _MOR_DSUM = "CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE)"
@@ -2391,9 +2362,6 @@ def q_table_asof_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CDEL_TABLES: dict[str, str] = {}
-
-
 def _cdel_table(spark: SparkSession, sf_dir: str) -> str:
     """Four-snapshot targeted-compaction demo over ``orders`` (once per
     process per sf_dir): v1 inserts the %3==0 keys range-clustered into
@@ -2401,28 +2369,23 @@ def _cdel_table(spark: SparkSession, sf_dir: str) -> str:
     deletes ``o_totalprice > _POSDEL_PRICE``; v4 runs
     :func:`compact_deletes` — only the files the two delete kinds touch
     are rewritten, the rest are committed verbatim."""
-    t = _CDEL_TABLES.get(sf_dir)
-    if t and os.path.isdir(os.path.join(t, _MANIFEST_DIR)):
-        return t
-    import tempfile
-
     from ..sources.registry import load_table
 
-    t = tempfile.mkdtemp(prefix="anglerfish_cdel_")
-    orders = load_table(spark, sf_dir, "orders")
-    k = F.col("o_orderkey")
-    base = (
-        orders.where(k % 3 == 0)
-        .select("o_orderkey", "o_totalprice", "o_orderpriority")
-        .repartitionByRange(4, "o_orderkey")
-    )
-    upsert(spark, t, base, ["o_orderkey"], txn_id="cdel-v1")
-    doomed = orders.where(k % 15 == 0).select("o_orderkey")
-    delete_keys(spark, t, "o_orderkey", doomed, txn_id="cdel-v2")
-    delete_where(spark, t, F.col("o_totalprice") > _POSDEL_PRICE, txn_id="cdel-v3")
-    compact_deletes(spark, t)
-    _CDEL_TABLES[sf_dir] = t
-    return t
+    def build(t: str) -> None:
+        orders = load_table(spark, sf_dir, "orders")
+        k = F.col("o_orderkey")
+        base = (
+            orders.where(k % 3 == 0)
+            .select("o_orderkey", "o_totalprice", "o_orderpriority")
+            .repartitionByRange(4, "o_orderkey")
+        )
+        upsert(spark, t, base, ["o_orderkey"], txn_id="cdel-v1")
+        doomed = orders.where(k % 15 == 0).select("o_orderkey")
+        delete_keys(spark, t, "o_orderkey", doomed, txn_id="cdel-v2")
+        delete_where(spark, t, F.col("o_totalprice") > _POSDEL_PRICE, txn_id="cdel-v3")
+        compact_deletes(spark, t)
+
+    return materialize_once("cdel", sf_dir, build)
 
 
 _CDEL_PRED = (
@@ -2594,35 +2557,27 @@ def restore_table(
     )
 
 
-_RESTORE_TABLES: dict[str, str] = {}
-
-
 def _restore_demo_table(spark: SparkSession, sf_dir: str) -> str:
     """Three-version restore demo (once per process per sf_dir): v1 =
     the %3==0 orders; v2 = an upsert that re-prices the %6==0 keys
     (+1000) AND inserts the %3==1 keys; v3 = ``restore_table(v1)`` with
     exact change images."""
-    import tempfile
-
     from .registry import load_table
 
-    t = _RESTORE_TABLES.get(sf_dir)
-    if t and os.path.isdir(os.path.join(t, _MANIFEST_DIR)):
-        return t
-    t = tempfile.mkdtemp(prefix="anglerfish_restore_")
-    orders = load_table(spark, sf_dir, "orders")
-    cols = ["o_orderkey", "o_totalprice", "o_orderpriority"]
-    base = orders.where(F.col("o_orderkey") % 3 == 0).select(*cols)
-    upsert(spark, t, base, ["o_orderkey"], txn_id="rst-v1")
-    batch = orders.where(F.col("o_orderkey") % 6 == 0).select(
-        "o_orderkey",
-        (F.col("o_totalprice") + F.lit(1000.0)).alias("o_totalprice"),
-        "o_orderpriority",
-    ).unionByName(orders.where(F.col("o_orderkey") % 3 == 1).select(*cols))
-    upsert(spark, t, batch, ["o_orderkey"], txn_id="rst-v2")
-    restore_table(spark, t, 1, txn_id="rst-v3")
-    _RESTORE_TABLES[sf_dir] = t
-    return t
+    def build(t: str) -> None:
+        orders = load_table(spark, sf_dir, "orders")
+        cols = ["o_orderkey", "o_totalprice", "o_orderpriority"]
+        base = orders.where(F.col("o_orderkey") % 3 == 0).select(*cols)
+        upsert(spark, t, base, ["o_orderkey"], txn_id="rst-v1")
+        batch = orders.where(F.col("o_orderkey") % 6 == 0).select(
+            "o_orderkey",
+            (F.col("o_totalprice") + F.lit(1000.0)).alias("o_totalprice"),
+            "o_orderpriority",
+        ).unionByName(orders.where(F.col("o_orderkey") % 3 == 1).select(*cols))
+        upsert(spark, t, batch, ["o_orderkey"], txn_id="rst-v2")
+        restore_table(spark, t, 1, txn_id="rst-v3")
+
+    return materialize_once("restore", sf_dir, build)
 
 
 _RESTORE_DSUM = "CAST(CAST(SUM(CAST(p AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE)"

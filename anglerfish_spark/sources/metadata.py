@@ -34,6 +34,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..memo import materialize_once
 from ..registry import query
 from ..session import prepare
 from .manifest_table import (
@@ -196,47 +197,39 @@ def table_files(spark: SparkSession, table: str, version: int | None = None) -> 
     return src.mapInPandas(expand, schema)
 
 
-_HISTORY_TABLES: dict[str, str] = {}
-
-
 def _history_demo_table(spark: SparkSession, sf_dir: str) -> str:
     """A four-version lifecycle over ``orders`` (once per process per
     sf_dir): v1 append (the %3==0 keys), v2 three-clause MERGE (the
     ``q_table_merge`` history), v3 ``delete_where(key%5==0)``, v4
     ``compact_table`` — one commit of each operation class."""
-    import tempfile
-
-    from .manifest_table import _MANIFEST_DIR, compact_table, delete_where, upsert
+    from .manifest_table import compact_table, delete_where, upsert
     from .merge import merge_into
     from .registry import load_table
 
-    t = _HISTORY_TABLES.get(sf_dir)
-    if t and os.path.isdir(os.path.join(t, _MANIFEST_DIR)):
-        return t
-    t = tempfile.mkdtemp(prefix="anglerfish_history_")
-    orders = load_table(spark, sf_dir, "orders")
-    cols = ["o_orderkey", "o_totalprice", "o_orderpriority"]
-    base = orders.where(F.col("o_orderkey") % 3 == 0).select(*cols)
-    upsert(spark, t, base, ["o_orderkey"], txn_id="hist-v1")
-    src = orders.where(F.col("o_orderkey") % 4 == 0).select(
-        "o_orderkey",
-        (F.col("o_totalprice") + F.lit(500.0)).alias("o_totalprice"),
-        "o_orderpriority",
-    )
-    merge_into(
-        spark,
-        t,
-        src,
-        ["o_orderkey"],
-        when_matched_update={"o_totalprice": "s.o_totalprice"},
-        when_matched_delete="s.o_orderpriority = '1-URGENT'",
-        insert_not_matched=True,
-        txn_id="hist-v2",
-    )
-    delete_where(spark, t, F.col("o_orderkey") % 5 == 0, txn_id="hist-v3")
-    compact_table(spark, t)
-    _HISTORY_TABLES[sf_dir] = t
-    return t
+    def build(t: str) -> None:
+        orders = load_table(spark, sf_dir, "orders")
+        cols = ["o_orderkey", "o_totalprice", "o_orderpriority"]
+        base = orders.where(F.col("o_orderkey") % 3 == 0).select(*cols)
+        upsert(spark, t, base, ["o_orderkey"], txn_id="hist-v1")
+        src = orders.where(F.col("o_orderkey") % 4 == 0).select(
+            "o_orderkey",
+            (F.col("o_totalprice") + F.lit(500.0)).alias("o_totalprice"),
+            "o_orderpriority",
+        )
+        merge_into(
+            spark,
+            t,
+            src,
+            ["o_orderkey"],
+            when_matched_update={"o_totalprice": "s.o_totalprice"},
+            when_matched_delete="s.o_orderpriority = '1-URGENT'",
+            insert_not_matched=True,
+            txn_id="hist-v2",
+        )
+        delete_where(spark, t, F.col("o_orderkey") % 5 == 0, txn_id="hist-v3")
+        compact_table(spark, t)
+
+    return materialize_once("history", sf_dir, build)
 
 
 @query(

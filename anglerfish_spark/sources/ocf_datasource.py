@@ -417,9 +417,9 @@ def avro_ocf_datasource(spark, sf_dir):
     inference + one task per OCF file."""
     from pyspark.sql import functions as F
 
+    from ..memo import materialize_once
     from ..session import prepare
     from .registry import load_table
-    from .standin import materialize_once
 
     prepare(spark)
     register(spark)

@@ -202,14 +202,11 @@ class SchemaRegistryClient:
 
 #: process-wide client pool: executors (pandas UDFs) share one client per
 #: registry URL so the id cache actually amortizes across batches
-_POOL: dict[str, SchemaRegistryClient] = {}
+_POOL = Memo(64)
 
 
-def process_client(base_url: str, **kwargs) -> SchemaRegistryClient:
-    c = _POOL.get(base_url)
-    if c is None:
-        c = _POOL[base_url] = SchemaRegistryClient(base_url, **kwargs)
-    return c
+def process_client(base_url: str) -> SchemaRegistryClient:
+    return _POOL.get_or(base_url, lambda: SchemaRegistryClient(base_url))
 
 
 # ---------------------------------------------------------------------------

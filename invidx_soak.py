@@ -14,8 +14,9 @@ At N and 5N docs it builds the sharded persisted index and reports:
   stay flat as the hot term's postings grow;
 * ``compact_sec``    — takedown of ~2% of docs + full physical fold.
 
-Prints one JSON line per scale.  ANGLERFISH_INVIDX_SHARD_DOCS is pinned
-to 4096 so the 5N corpus really exercises multi-shard hot terms.
+Prints one JSON line per scale.  ``text.POSTINGS_SHARD_DOCS`` is pinned
+to SHARD_DOCS = 4096 so the 5N corpus really exercises multi-shard hot
+terms.
 """
 
 from __future__ import annotations
@@ -27,7 +28,8 @@ import time
 import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-os.environ.setdefault("ANGLERFISH_INVIDX_SHARD_DOCS", "4096")
+#: postings shard width for the soak (the engine default is 8192)
+SHARD_DOCS = 4096
 
 N_BASE = int(os.environ.get("ANGLERFISH_SOAK_DOCS", "20000"))
 
@@ -90,7 +92,7 @@ def run(spark, n: int) -> dict:
     inverted_index_compact(spark, name)
     compact_sec = time.perf_counter() - t0
     idx = spark.table(name)
-    shard_bound = int(os.environ["ANGLERFISH_INVIDX_SHARD_DOCS"])
+    shard_bound = SHARD_DOCS
     post_max = idx.select(F.max(F.size("postings"))).first()[0]
     assert post_max <= shard_bound, (post_max, shard_bound)
     dup = idx.groupBy("term", "shard").count().where("count > 1").count()
@@ -111,7 +113,10 @@ def run(spark, n: int) -> dict:
 
 
 def main() -> None:
+    from anglerfish_spark.operators import text
     from anglerfish_spark.session import get_spark
+
+    text.POSTINGS_SHARD_DOCS = SHARD_DOCS
 
     spark = get_spark("anglerfish-invidx-soak")
     for n in (N_BASE, 5 * N_BASE):

@@ -7,8 +7,9 @@ F and 10F data files and recording bytes written under ``_manifests``
 the segment loads a point read plans with.
 
 Usage: python meta_soak.py [out_json]
-Env:   META_SOAK_FILES (default "500,5000"), ANGLERFISH_SEG_TARGET_FILES
-       (default 64 here so chunking engages at sandbox file counts).
+Env:   META_SOAK_FILES (default "500,5000").  The segment chunk target
+       (``manifest_table._SEG_TARGET_FILES``) is set to SEG_TARGET = 64
+       so chunking engages at sandbox file counts.
 """
 
 from __future__ import annotations
@@ -18,7 +19,8 @@ import os
 import sys
 import time
 
-os.environ.setdefault("ANGLERFISH_SEG_TARGET_FILES", "64")
+#: files per manifest segment chunk for the soak (the engine default is 512)
+SEG_TARGET = 64
 
 
 def _meta_files(table: str) -> dict[str, int]:
@@ -130,6 +132,9 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    from anglerfish_spark.sources import manifest_table as mt
+
+    mt._SEG_TARGET_FILES = SEG_TARGET
     spark = (
         SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
         .config("spark.sql.shuffle.partitions", "32")
@@ -139,7 +144,7 @@ def main() -> None:
     tmp = tempfile.mkdtemp(prefix="anglerfish_metasoak_")
     sizes = [int(x) for x in os.environ.get("META_SOAK_FILES", "500,5000").split(",")]
     results = [measure(spark, n, tmp) for n in sizes]
-    out = {"seg_target": int(os.environ["ANGLERFISH_SEG_TARGET_FILES"]), "runs": results}
+    out = {"seg_target": SEG_TARGET, "runs": results}
     print(json.dumps(out, indent=1))
     if len(sys.argv) > 1:
         with open(sys.argv[1], "w") as f:

@@ -240,7 +240,7 @@ class TestBloomBuild:
         bits = bloom_build(idx, m)
         lit = probes.select("fp", bloom_probe(spark, F.col("fp"), bits).alias("maybe"))
         lit_rows = {(r["fp"], r["maybe"]) for r in lit.collect()}
-        monkeypatch.setenv("ANGLERFISH_BLOOM_LITERAL_MAX", "1")
+        monkeypatch.setattr("anglerfish_spark.operators.dedup.BLOOM_LITERAL_MAX_BITS", 1)
         bc = probes.select("fp", bloom_probe(spark, F.col("fp"), bits).alias("maybe"))
         assert {(r["fp"], r["maybe"]) for r in bc.collect()} == lit_rows
         # contract: every true member is bloom-positive on both paths
@@ -420,7 +420,7 @@ class TestBloomProbeHexR13Opt:
     """r13-opt: the broadcast-path Bloom probe parses fingerprints with
     a vectorized hex decode — pin it against per-row int(f, 16) through
     the REAL query path by forcing the broadcast path with
-    ANGLERFISH_BLOOM_LITERAL_MAX=0 and comparing to the literal path."""
+    BLOOM_LITERAL_MAX_BITS=0 and comparing to the literal path."""
 
     def test_broadcast_path_matches_literal_path(self, spark, monkeypatch):
         import hashlib
@@ -445,7 +445,7 @@ class TestBloomProbeHexR13Opt:
                 "fp", bloom_probe(spark, F.col("fp"), filt).alias("hit")
             ).collect()
         }
-        monkeypatch.setenv("ANGLERFISH_BLOOM_LITERAL_MAX", "0")
+        monkeypatch.setattr("anglerfish_spark.operators.dedup.BLOOM_LITERAL_MAX_BITS", 0)
         bc_rows = {
             r["fp"]: r["hit"]
             for r in df.select(

@@ -29,6 +29,15 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def test_asof_demo_table_is_built_once_under_the_root(spark, sf_dir):
+    from anglerfish_spark import memo
+    from anglerfish_spark.sources.manifest_table import _asof_table
+
+    t = _asof_table(spark, sf_dir)
+    assert t.startswith(memo._root() + os.sep) and current_version(t) == 2
+    assert _asof_table(spark, sf_dir) == t
+
+
 class TestCommitProtocol:
     def test_staged_files_invisible_until_commit(self, spark, tmp_path):
         t = str(tmp_path / "t")

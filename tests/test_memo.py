@@ -1,16 +1,23 @@
 """The engine's one cache policy (anglerfish_spark/memo.py): the bounded
 LRU every process-global cache uses, the file-state stamp that keys the
-file-derived ones, and a guard that keeps any other cache shape out."""
+file-derived ones, the build-once helper every demo table and index goes
+through, and a guard that keeps any other cache shape out."""
 
 from __future__ import annotations
 
 import ast
 import os
 import pathlib
+import shutil
+import subprocess
 import sys
 import threading
+import uuid
 
-from anglerfish_spark.memo import Memo, file_stamp, scratch_dir
+import pytest
+
+from anglerfish_spark import memo
+from anglerfish_spark.memo import Memo, file_stamp, materialize_once, scratch_dir
 
 
 class TestMemo:
@@ -77,6 +84,74 @@ class TestFileStamp:
         assert file_stamp(str(tmp_path / "absent")) is None
 
 
+class TestMaterializeOnce:
+    @staticmethod
+    def _builder(calls: list):
+        def build(path: str) -> None:
+            calls.append(path)
+            os.makedirs(path)
+
+        return build
+
+    def test_repeat_call_does_not_build_again(self):
+        calls: list[str] = []
+        sf = f"sf-{uuid.uuid4().hex}"
+        first = materialize_once("memo_test", sf, self._builder(calls))
+        assert materialize_once("memo_test", sf, self._builder(calls)) == first
+        assert calls == [first]
+        assert first.startswith(memo._root() + os.sep)
+        assert memo.SETUP_SECONDS["memo_test"] >= 0
+
+    def test_removed_directory_is_rebuilt_at_a_fresh_path(self):
+        calls: list[str] = []
+        sf = f"sf-{uuid.uuid4().hex}"
+        first = materialize_once("memo_test", sf, self._builder(calls))
+        shutil.rmtree(first)
+        second = materialize_once("memo_test", sf, self._builder(calls))
+        assert second != first and os.path.isdir(second)
+        assert calls == [first, second]
+
+    def test_ready_false_triggers_a_rebuild(self):
+        calls: list[str] = []
+        sf = f"sf-{uuid.uuid4().hex}"
+        first = materialize_once("memo_test", sf, self._builder(calls))
+        second = materialize_once(
+            "memo_test", sf, self._builder(calls), ready=lambda _p: False
+        )
+        assert second != first and calls == [first, second]
+        assert materialize_once("memo_test", sf, self._builder(calls)) == second
+
+    def test_build_that_raises_stores_nothing(self):
+        sf = f"sf-{uuid.uuid4().hex}"
+
+        def broken(path: str) -> None:
+            raise RuntimeError("build failed")
+
+        with pytest.raises(RuntimeError, match="build failed"):
+            materialize_once("memo_test", sf, broken)
+        calls: list[str] = []
+        path = materialize_once("memo_test", sf, self._builder(calls))
+        assert calls == [path]
+
+    def test_process_exit_removes_the_root(self):
+        script = (
+            "import os\n"
+            "from anglerfish_spark import memo\n"
+            "built = [memo.materialize_once('k', sf, os.makedirs) for sf in 'ab']\n"
+            "scratch = memo.scratch_dir('anglerfish_exit_test_')\n"
+            "for p in built + [scratch]:\n"
+            "    assert os.path.isdir(p) and p.startswith(memo._root() + os.sep)\n"
+            "print(memo._root())\n"
+        )
+        repo = pathlib.Path(__file__).resolve().parent.parent
+        out = subprocess.run(
+            [sys.executable, "-c", script], cwd=repo, check=True,
+            capture_output=True, text=True, timeout=60,
+        )
+        root = out.stdout.strip()
+        assert root.startswith(os.sep) and not os.path.exists(root)
+
+
 def test_scratch_dir_is_one_per_prefix():
     a, b = scratch_dir("anglerfish_memo_test_a_"), scratch_dir("anglerfish_memo_test_b_")
     assert scratch_dir("anglerfish_memo_test_a_") == a != b
@@ -84,12 +159,42 @@ def test_scratch_dir_is_one_per_prefix():
     os.rmdir(b)
 
 
+#: module-level empty containers that are not caches: the query registry,
+#: and the three stage-timer dicts that job labelling is to replace
+_NOT_CACHES = {
+    "registry.QUERIES",
+    "operators.dedup.CURATION_STAGE_SECONDS",
+    "streaming.table_feed.FEED_STAGE_SECONDS",
+    "memo.SETUP_SECONDS",
+}
+
+
+def _is_empty_container(value: ast.expr | None) -> bool:
+    if isinstance(value, ast.Dict):
+        return not value.keys
+    if isinstance(value, ast.List):
+        return not value.elts
+    return (
+        isinstance(value, ast.Call)
+        and isinstance(value.func, ast.Name)
+        and value.func.id in ("dict", "set")
+        and not value.args
+        and not value.keywords
+    )
+
+
 def test_every_module_cache_is_a_memo():
-    """A module-level ``*_CACHE`` must be built by ``Memo(...)``, so every
-    process-global cache shares one eviction, locking and key policy."""
+    """Two rules over every module-level name in ``anglerfish_spark/``:
+    a ``*_CACHE`` must be built by ``Memo(...)``, and no name may start out
+    as an empty ``{}``, ``dict()``, ``set()`` or ``[]`` (the shape of a
+    hand-rolled cache or build-once registry) unless it is named in
+    ``_NOT_CACHES``. Caches are :class:`Memo` instances and build-once
+    assets go through :func:`materialize_once`, so they share one
+    eviction, locking and cleanup policy."""
     root = pathlib.Path(__file__).resolve().parent.parent / "anglerfish_spark"
-    found, bad = [], []
+    caches, seen, bad = [], set(), []
     for path in sorted(root.rglob("*.py")):
+        module = ".".join(path.relative_to(root).with_suffix("").parts)
         for node in ast.parse(path.read_text()).body:
             if isinstance(node, ast.Assign):
                 targets, value = node.targets, node.value
@@ -97,16 +202,24 @@ def test_every_module_cache_is_a_memo():
                 targets, value = [node.target], node.value
             else:
                 continue
+            is_memo = (
+                isinstance(value, ast.Call)
+                and isinstance(value.func, ast.Name)
+                and value.func.id == "Memo"
+            )
+            empty = _is_empty_container(value)
             for t in targets:
-                if isinstance(t, ast.Name) and t.id.endswith("_CACHE"):
-                    where = f"{path.relative_to(root)}:{node.lineno} {t.id}"
-                    found.append(where)
-                    is_memo = (
-                        isinstance(value, ast.Call)
-                        and isinstance(value.func, ast.Name)
-                        and value.func.id == "Memo"
-                    )
+                if not isinstance(t, ast.Name):
+                    continue
+                name = f"{module}.{t.id} (line {node.lineno})"
+                if t.id.endswith("_CACHE"):
+                    caches.append(name)
                     if not is_memo:
-                        bad.append(where)
-    assert len(found) >= 5, found
+                        bad.append(name)
+                if empty:
+                    seen.add(f"{module}.{t.id}")
+                    if f"{module}.{t.id}" not in _NOT_CACHES:
+                        bad.append(name)
+    assert len(caches) >= 5, caches
     assert bad == []
+    assert seen == _NOT_CACHES  # a stale allowlist entry fails too

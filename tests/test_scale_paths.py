@@ -364,10 +364,10 @@ class TestPostingsSharding:
         )
 
         docs = self._docs(spark)
-        monkeypatch.setenv("ANGLERFISH_INVIDX_SHARD_DOCS", "16")
+        monkeypatch.setattr("anglerfish_spark.operators.text.POSTINGS_SHARD_DOCS", 16)
         name = f"ang_shardidx_{uuid.uuid4().hex[:8]}"
         build_persisted_index(spark, docs, name)
-        monkeypatch.setenv("ANGLERFISH_INVIDX_SHARD_DOCS", "1000000")
+        monkeypatch.setattr("anglerfish_spark.operators.text.POSTINGS_SHARD_DOCS", 1000000)
         wide = f"ang_wideidx_{uuid.uuid4().hex[:8]}"
         build_persisted_index(spark, docs, wide)
 
@@ -405,7 +405,7 @@ class TestPostingsSharding:
             invidx_tombstone_table,
         )
 
-        monkeypatch.setenv("ANGLERFISH_INVIDX_SHARD_DOCS", "16")
+        monkeypatch.setattr("anglerfish_spark.operators.text.POSTINGS_SHARD_DOCS", 16)
         docs = self._docs(spark)
         name = f"ang_shardlife_{uuid.uuid4().hex[:8]}"
         build_persisted_index(spark, docs.where("doc_id < 70"), name)

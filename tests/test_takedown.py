@@ -5,8 +5,11 @@ batch-sized, and the probe plans keep their scale shapes."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
+from anglerfish_spark import memo
 from anglerfish_spark.operators.takedown import _takedown_assets
 from anglerfish_spark.operators.text import (
     _bm25_from_persisted,
@@ -30,6 +33,9 @@ class TestTakedownCorrectness:
         from anglerfish_spark.sources.registry import load_table
 
         t, inv, ts = _assets(spark, sf_dir)
+        # built once, under the per-process root; the second call is a hit
+        assert t.startswith(memo._root() + os.sep)
+        assert _takedown_assets(spark, sf_dir) == (t, inv)
         docs = load_table(spark, sf_dir, "documents", fanout=True)
         fp = F.md5(
             F.concat_ws(" ", F.array_sort(F.array_distinct(tokens()))).cast("binary")
