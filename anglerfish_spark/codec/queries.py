@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..localdata import local_df
+from ..memo import fresh_dir
 from ..registry import query
 from ..schema import from_struct_type, parse_schema, to_avsc, to_json
 from ..session import prepare
@@ -669,11 +670,9 @@ def q_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned by returnflag) → re-read → aggregate.  Exercises the
     write path incl. hive-style partitioning; the oracle aggregates the
     original table, so any loss/duplication in the sink shows up."""
-    import tempfile
-
     prepare(spark)
     li = load_table(spark, sf_dir, "lineitem").where(F.col("l_quantity") > 25)
-    out_dir = tempfile.mkdtemp(prefix="anglerfish_sink_")
+    out_dir = fresh_dir("anglerfish_sink_")
     li.write.mode("overwrite").partitionBy("l_returnflag").parquet(out_dir)
     back = spark.read.parquet(out_dir)
     return (
@@ -698,13 +697,11 @@ def avro_ocf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     per partition, executor-side) → distributed binaryFile read → typed
     decode → aggregate.  The reference's unimplemented 'Avro file
     read/write' roadmap item (README.md:23-27), Spark-native."""
-    import tempfile
-
     from ..sources.avro_ocf import read_avro_ocf, write_avro_ocf
 
     prepare(spark)
     ev = load_table(spark, sf_dir, "events", fanout=True)
-    out_dir = tempfile.mkdtemp(prefix="anglerfish_ocf_")
+    out_dir = fresh_dir("anglerfish_ocf_")
     write_avro_ocf(ev, "props", _EVENTS_SCHEMA, out_dir)
     back = read_avro_ocf(spark, out_dir)
     typed = decode_json(back, "value", _EVENTS_SCHEMA, mode="strict")
@@ -742,13 +739,11 @@ def q_source_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents → write each format → read back with explicit schemas
     (inference would be an extra full pass at scale) → identical
     aggregates per format."""
-    import tempfile
-
     from ..sources import registry as R
 
     prepare(spark)
     d = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    base = tempfile.mkdtemp(prefix="anglerfish_fmt_")
+    base = fresh_dir("anglerfish_fmt_")
     R.write(d, "csv", f"{base}/csv", mode="overwrite", header="true")
     R.write(d, "json", f"{base}/json", mode="overwrite")
     R.write(d, "orc", f"{base}/orc", mode="overwrite")
@@ -987,8 +982,6 @@ def avro_ocf_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
     lifted back to native Catalyst types.  The ``df.write.format("avro")``
     equivalent without the spark-avro connector, exercising logical types
     at the file-format level (beyond-reference — AvroData.scala:17 TODO)."""
-    import tempfile
-
     from ..sources.avro_ocf import read_avro_ocf_typed, write_avro_ocf_typed
 
     prepare(spark)
@@ -1012,7 +1005,7 @@ def avro_ocf_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("amt"),
         )
     )
-    out_dir = tempfile.mkdtemp(prefix="anglerfish_ocf_typed_")
+    out_dir = fresh_dir("anglerfish_ocf_typed_")
     schema_json = write_avro_ocf_typed(o, out_dir, name="orders_slice")
     back = read_avro_ocf_typed(spark, out_dir, schema_json)
     # amt round-trips as DECIMAL (the logical type under test); project it
@@ -1052,8 +1045,6 @@ def avro_ocf_native_interop(spark: SparkSession, sf_dir: str) -> DataFrame:
     JVM Avro classes exist at all, both directions degrade to
     engine→engine (documented, still a valid round-trip against the
     oracle)."""
-    import tempfile
-
     from ..sources.avro_ocf import read_avro_ocf_typed, write_avro_ocf_typed
     from ..sources.ocf_datasource import FORMAT_NAME, register
     from ..sources.registry import avro_format_provider
@@ -1070,7 +1061,7 @@ def avro_ocf_native_interop(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_totalprice").cast("double").alias("price"),
         )
     )
-    base = tempfile.mkdtemp(prefix="anglerfish_native_interop_")
+    base = fresh_dir("anglerfish_native_interop_")
 
     # engine writer → native reader
     schema_json = write_avro_ocf_typed(o, f"{base}/en", name="orders_slice")

@@ -10,13 +10,19 @@
   served again only while its ``ready`` check holds, rebuilt at a fresh
   path otherwise.  The builders are deterministic functions of the
   sf_dir tables, so a re-read is observationally identical to a rebuild.
-* Every built path and every :func:`scratch_dir` lives under one
-  per-process root directory that is removed when the process exits.
+* Every built path, every :func:`scratch_dir` and every per-call
+  :func:`fresh_dir` lives under one per-process root directory that is
+  removed when the process exits.
+* Every stage timing goes through :func:`timed` into
+  :data:`STAGE_SECONDS`: asset builds under scope ``"setup"``
+  (accumulated over the process), query stages under the query's own
+  scope, which the query clears at entry so it holds the last run.
 """
 
 from __future__ import annotations
 
 import atexit
+import contextlib
 import functools
 import os
 import shutil
@@ -94,16 +100,35 @@ def _root() -> str:
     return root
 
 
-@functools.lru_cache(maxsize=None)
-def scratch_dir(prefix: str) -> str:
-    """One scratch directory per ``prefix`` for the life of the process."""
+def fresh_dir(prefix: str) -> str:
+    """A new directory under the per-process root."""
     return tempfile.mkdtemp(prefix=prefix, dir=_root())
 
 
-#: asset key -> seconds spent building it in this process; bench.py
-#: reports this as "setup_sec", so build cost is visible but not timed as
-#: part of the queries that read the asset
-SETUP_SECONDS: dict[str, float] = {}
+@functools.lru_cache(maxsize=None)
+def scratch_dir(prefix: str) -> str:
+    """One scratch directory per ``prefix`` for the life of the process."""
+    return fresh_dir(prefix)
+
+
+#: scope -> stage -> wall seconds; bench.py reports scope "setup" as
+#: "setup_sec" (so build cost is visible but not timed as part of the
+#: queries that read the asset) and the query scopes as "stages_sec"
+STAGE_SECONDS: dict[str, dict[str, float]] = {}
+_STAGE_LOCK = threading.Lock()
+
+
+@contextlib.contextmanager
+def timed(scope: str, stage: str):
+    """Add the block's wall time to ``STAGE_SECONDS[scope][stage]``; a
+    block that raises records nothing."""
+    t0 = time.perf_counter()
+    yield
+    seconds = time.perf_counter() - t0
+    with _STAGE_LOCK:
+        stages = STAGE_SECONDS.setdefault(scope, {})
+        stages[stage] = round(stages.get(stage, 0.0) + seconds, 3)
+
 
 #: (key, sf_dir) -> built path
 _BUILT = Memo(256)
@@ -122,12 +147,9 @@ def materialize_once(
     tables).  A ``build`` that raises stores nothing."""
 
     def make() -> str:
-        path = os.path.join(tempfile.mkdtemp(dir=_root()), key)
-        t0 = time.perf_counter()
-        build(path)
-        SETUP_SECONDS[key] = round(
-            SETUP_SECONDS.get(key, 0.0) + time.perf_counter() - t0, 3
-        )
+        path = os.path.join(fresh_dir(f"{key}_"), key)
+        with timed("setup", key):
+            build(path)
         return path
 
     return _BUILT.get_or((key, sf_dir), make, ready)

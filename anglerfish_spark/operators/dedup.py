@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..errors import ConvergenceError
-from ..memo import scratch_dir
+from ..memo import STAGE_SECONDS, scratch_dir, timed
 from ..registry import query
 from ..session import prepare
 from ..sources.registry import load_table
@@ -1606,11 +1606,6 @@ def q_dedup_substrings(spark: SparkSession, sf_dir: str) -> DataFrame:
 CURATION_SEM_TAU = 0.45
 
 
-#: per-stage wall seconds of the last instrumented q_curation_full run
-#: (ANGLERFISH_CURATION_STAGES=1); bench.py surfaces it as stages_sec
-CURATION_STAGE_SECONDS: dict = {}
-
-
 def _curation_oracle() -> str:
     from .similarity import cosine_sql
 
@@ -1791,35 +1786,18 @@ def q_curation_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (corpus-cardinality keys, bytes per row), so lazy localCheckpoints
     # are effectively free: with the norm-precompute below, measured
     # 9.1 -> 7.0 s at sf0.1 (quiet session, min-of-4).
-    # Stage instrumentation (VERDICT r5 #8): with
-    # ANGLERFISH_CURATION_STAGES=1 each stage's checkpoints materialize
-    # EAGERLY and their wall time accumulates into CURATION_STAGE_SECONDS
-    # — bench.py reports the breakdown as `stages_sec.curation` so a
-    # future regression points at a stage, not the composite.  (Eager
-    # checkpoints change scheduling slightly, so the instrumented pass is
-    # separate from the headline best-of-N timing.)
-    import os as _os
-    import time as _time
+    # Each stage's wall time lands in memo.STAGE_SECONDS["curation"] so
+    # a regression points at a stage, not the composite.
+    STAGE_SECONDS.pop("curation", None)
 
-    timing = _os.environ.get("ANGLERFISH_CURATION_STAGES") == "1"
-    if timing:
-        CURATION_STAGE_SECONDS.clear()
-
-    def ckpt(df, stage=None):
+    def ckpt(df, stage):
         # EAGER always (r13-opt): with lazy checkpoints the whole
         # pipeline collapses into one action in which Catalyst/AQE
         # cannot reuse a checkpoint that materializes mid-job, so every
         # multiply-referenced stage output re-ran its lineage anyway —
         # measured 8.2 s lazy vs 6.6 s eager at sf0.1 on this shape.
-        # Eager also makes the instrumented stage breakdown time the
-        # SAME scheduling the headline number sees.
-        t0 = _time.perf_counter()
-        out = df.localCheckpoint(eager=True)
-        if timing and stage:
-            CURATION_STAGE_SECONDS[stage] = round(
-                CURATION_STAGE_SECONDS.get(stage, 0.0) + _time.perf_counter() - t0, 3
-            )
-        return out
+        with timed("curation", stage):
+            return df.localCheckpoint(eager=True)
 
     # ONE tokenize+fingerprint pass, ONE fp-window pass, and ONE eager
     # checkpoint for the whole exact stage (r14-opt merge): the ranked

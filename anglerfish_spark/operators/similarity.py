@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from ..localdata import local_df
-from ..memo import Memo, file_stamp
+from ..memo import Memo, file_stamp, fresh_dir
 from ..registry import query
 from ..session import prepare
 from ..sources.registry import load_table, read_parquet
@@ -802,9 +802,8 @@ def ivf_index_maintain(
         live = live.select(
             "vec_id", "label", "embedding", (best["nc"] * -1).alias("cell")
         )
-    import tempfile
 
-    out = tempfile.mkdtemp(prefix="anglerfish_ivf_maint_") + "/cells"
+    out = fresh_dir("anglerfish_ivf_maint_") + "/cells"
     live.write.partitionBy("cell").parquet(out)
     return out, cents
 

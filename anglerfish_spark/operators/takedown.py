@@ -49,12 +49,11 @@ fragment growth.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..memo import materialize_once
+from ..memo import fresh_dir, materialize_once
 from ..registry import query
 from ..session import prepare
 from ..sources.manifest_table import delete_keys, snapshot, upsert
@@ -879,7 +878,7 @@ def corpus_index_bootstrap(spark: SparkSession, name: str) -> None:
     )
     build_persisted_index(spark, empty_docs, name)
     fp_t, band_t = corpus_family_names(name)
-    root = tempfile.mkdtemp(prefix="anglerfish_corpusidx_")
+    root = fresh_dir("anglerfish_corpusidx_")
     specs = (
         (fp_t, "doc_id long, fp string, gen long, src string", ("fp",)),
         (

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from .registry import read_parquet
 
 from ..errors import AnglerfishError
+from ..memo import fresh_dir
 from ..registry import query
 from ..session import prepare
 from .manifest_table import (
@@ -276,8 +277,6 @@ def q_table_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
     caching a published table would erase the distinction this query
     exists to pin."""
     prepare(spark)
-    import tempfile
-
     from ..operators.common import dsum
     from .manifest_table import upsert
     from .registry import load_table
@@ -289,7 +288,7 @@ def q_table_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
             dsum(F.col("o_totalprice")).alias("total"),
         )
 
-    t = tempfile.mkdtemp(prefix="anglerfish_wap_")
+    t = fresh_dir("anglerfish_wap_")
     orders = load_table(spark, sf_dir, "orders")
     cols = ["o_orderkey", "o_totalprice", "o_orderpriority"]
     upsert(spark, t, orders.where(F.col("o_orderkey") % 3 == 0).select(*cols),

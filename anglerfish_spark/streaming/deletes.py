@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..memo import fresh_dir
 from ..registry import query
 from ..session import prepare
 from ..sources.manifest_table import (
@@ -108,15 +109,13 @@ def q_stream_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch, data files untouched; the final read is one scan + broadcast
     anti-join."""
     prepare(spark)
-    import tempfile
-
     from ..operators.common import dsum
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
     k = F.col("o_orderkey")
-    table = tempfile.mkdtemp(prefix="anglerfish_cdc_")
+    table = fresh_dir("anglerfish_cdc_")
     base = orders.where(k % 3 == 0)
     commit(table, stage_files(base, table), expected_version=0, txn_id="cdc-init")
 

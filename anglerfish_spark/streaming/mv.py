@@ -37,6 +37,7 @@ from ..operators.history import (
     mv_merge,
     orders_changelog,
 )
+from ..memo import fresh_dir
 from ..registry import query
 from ..session import prepare
 from ..sources.manifest_table import (
@@ -101,13 +102,11 @@ def q_stream_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     not idempotent, so the manifest txn guard is doing real work).
     """
     prepare(spark)
-    import tempfile
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
     chg = orders_changelog(orders)
-    mv_table = tempfile.mkdtemp(prefix="anglerfish_mv_")
+    mv_table = fresh_dir("anglerfish_mv_")
     files = stage_files(mv_build(orders.where(F.col("o_orderkey") % 4 != 3)), mv_table)
     commit(mv_table, files, expected_version=0, txn_id="mv-init")
     with chronological_segments(spark, chg, ts_col="o_orderkey", n=3) as stream:

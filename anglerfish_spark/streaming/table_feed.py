@@ -87,6 +87,7 @@ from pyspark.sql.types import (
 )
 
 from ..errors import AnglerfishError
+from ..memo import STAGE_SECONDS, fresh_dir, timed
 from ..registry import query
 from ..session import prepare
 
@@ -263,7 +264,7 @@ def _plan_field(rf, wfields: dict, wenv: dict, renv: dict, depth: int) -> dict:
     raise _VectorRefusal(rf.name)
 
 
-def _plan_resolution(writer_str: str, reader_str: str, forced: bool = False) -> dict:
+def _plan_resolution(writer_str: str, reader_str: str) -> dict:
     """Driver-side resolution plan for a change entry logged under
     ``writer_str``, consumed under ``reader_str``:
 
@@ -278,11 +279,6 @@ def _plan_resolution(writer_str: str, reader_str: str, forced: bool = False) -> 
       (VERDICT r9 #3 — the pre-r10 loud refusal), pre-validated here
       with the structural compat checker so an illegal evolution
       refuses at PLANNING time.
-
-    ``forced=True`` (the ``forcePydatum`` measurement option of
-    :class:`ManifestFeedDataSource`, used by ``feed_vector_soak.py``)
-    routes every resolvable entry through the fallback so the two
-    paths' costs can be compared on identical data.
     """
     from ..schema.parser import parse_schema
     from ..sources.schema_registry import can_read
@@ -290,8 +286,6 @@ def _plan_resolution(writer_str: str, reader_str: str, forced: bool = False) -> 
     pw, pr = parse_schema(writer_str), parse_schema(reader_str)
     wfields = {f.name: f for f in pw.root.fields}
     try:
-        if forced:
-            raise _VectorRefusal("forced")
         fields = [
             _plan_field(rf, wfields, pw.env, pr.env, depth=0)
             for rf in pr.root.fields
@@ -357,12 +351,6 @@ class ManifestFeedStreamReader(DataSourceStreamReader):
         self._reader_schema_str = _manifest(
             self._table, _current_version(self._table)
         ).get("schema")
-        # measurement knob (feed_vector_soak.py): force the value-space
-        # fallback for every resolvable entry — options are the one seam
-        # that reaches the python worker the planner runs in
-        self._force_pydatum = (
-            str(options.get("forcepydatum", "")).lower() == "true"
-        )
 
     def initialOffset(self) -> dict:
         return {"version": self._start}
@@ -400,9 +388,7 @@ class ManifestFeedStreamReader(DataSourceStreamReader):
                         # rebuild vectorize; genuinely changed exotic
                         # shapes route through the value-space fallback
                         # (carrier-bridged for logical types since r10)
-                        spec = _plan_resolution(
-                            entry_schema, reader, forced=self._force_pydatum
-                        )
+                        spec = _plan_resolution(entry_schema, reader)
                     parts.extend(
                         _ChangePartition(
                             self._table, f, ctype, v, m.get("committed_at_ms"), spec
@@ -565,14 +551,6 @@ def read_table_feed(
 
 _DSUM = "CAST(CAST(SUM(CAST(p AS DECIMAL(38,10))) AS VARCHAR) AS DOUBLE)"
 
-#: last q_stream_table_feed invocation's phase wall-times (construct /
-#: start / drain / agg) — recorded unconditionally (plain perf_counter
-#: marks around naturally-sequential phases, no scheduling change) so
-#: bench.py can report the split without an extra instrumented pass
-#: (VERDICT r13 #2)
-FEED_STAGE_SECONDS: dict[str, float] = {}
-
-
 @query(
     "q_stream_table_feed",
     oracle=f"""
@@ -631,17 +609,16 @@ def q_stream_table_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     exists to measure — is untouched (a no-op 1-row Python streaming
     source drains in ~1.5 s on the same box, the availableNow floor)."""
     prepare(spark)
-    import time as _time
-
     from ..localdata import local_df
     from ..sources.manifest_table import _asof_table
     from .stateful import await_or_fail
 
-    FEED_STAGE_SECONDS.clear()
-    t0 = _time.perf_counter()
-    t = _asof_table(spark, sf_dir)
-    feed = read_table_feed(spark, t).select("_change_type", "o_totalprice")
-    FEED_STAGE_SECONDS["construct"] = round(_time.perf_counter() - t0, 3)
+    # the phase split of this run (construct / start / drain / agg_plan),
+    # marks around naturally-sequential phases: no scheduling change
+    STAGE_SECONDS.pop("stream_table_feed", None)
+    with timed("stream_table_feed", "construct"):
+        t = _asof_table(spark, sf_dir)
+        feed = read_table_feed(spark, t).select("_change_type", "o_totalprice")
 
     partials: list = []
 
@@ -655,31 +632,27 @@ def q_stream_table_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()
         )
 
-    t0 = _time.perf_counter()
-    q = feed.writeStream.foreachBatch(_fold).trigger(availableNow=True).start()
-    FEED_STAGE_SECONDS["start"] = round(_time.perf_counter() - t0, 3)
-    t0 = _time.perf_counter()
-    await_or_fail(q)
-    FEED_STAGE_SECONDS["drain"] = round(_time.perf_counter() - t0, 3)
+    with timed("stream_table_feed", "start"):
+        q = feed.writeStream.foreachBatch(_fold).trigger(availableNow=True).start()
+    with timed("stream_table_feed", "drain"):
+        await_or_fail(q)
 
-    t0 = _time.perf_counter()
-    out = (
-        local_df(
-            spark,
-            [(r["_change_type"], r["n"], r["s"]) for r in partials],
-            "change_type string, n bigint, s decimal(38,10)",
+    with timed("stream_table_feed", "agg_plan"):
+        return (
+            local_df(
+                spark,
+                [(r["_change_type"], r["n"], r["s"]) for r in partials],
+                "change_type string, n bigint, s decimal(38,10)",
+            )
+            .groupBy("change_type")
+            .agg(
+                F.sum("n").cast("bigint").alias("n_rows"),
+                # sum of exact decimal partials == the one-shot decimal sum;
+                # the final cast to double is the same single rounding dsum does
+                F.sum("s").cast("double").alias("total"),
+            )
+            .orderBy("change_type")
         )
-        .groupBy("change_type")
-        .agg(
-            F.sum("n").cast("bigint").alias("n_rows"),
-            # sum of exact decimal partials == the one-shot decimal sum;
-            # the final cast to double is the same single rounding dsum does
-            F.sum("s").cast("double").alias("total"),
-        )
-        .orderBy("change_type")
-    )
-    FEED_STAGE_SECONDS["agg_plan"] = round(_time.perf_counter() - t0, 3)
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -835,14 +808,12 @@ def q_stream_feed_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     untouched remainder beyond the upsert's merge); the source is never
     rescanned (module docstring)."""
     prepare(spark)
-    import tempfile
-
     from ..operators.common import dsum
     from ..sources.manifest_table import _asof_table, snapshot
     from .stateful import await_or_fail
 
     src = _asof_table(spark, sf_dir)
-    mirror = tempfile.mkdtemp(prefix="anglerfish_mirror_")
+    mirror = fresh_dir("anglerfish_mirror_")
     q = start_feed_apply(spark, src, mirror, ["o_orderkey"])
     await_or_fail(q)
     return (
@@ -967,13 +938,11 @@ def q_stream_feed_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     peak batch size by choosing ``window``, and a crash resumes on the
     fixed window grid with txn guards skipping applied legs."""
     prepare(spark)
-    import tempfile
-
     from ..operators.common import dsum
     from ..sources.manifest_table import _asof_table, snapshot
 
     src = _asof_table(spark, sf_dir)
-    mirror = tempfile.mkdtemp(prefix="anglerfish_bfmirror_")
+    mirror = fresh_dir("anglerfish_bfmirror_")
     backfill_feed_apply(spark, src, mirror, ["o_orderkey"], window=1)
     return (
         snapshot(spark, mirror)

@@ -104,11 +104,11 @@ def _run_calibrators(spark) -> dict[str, float]:
     """Build the frozen calibration dataset once (setup, excluded) and
     time each calibrator job as min-of-3 (the ambient-noise floor is the
     signal here; medians would fold noise INTO the yardstick)."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
-    root = tempfile.mkdtemp(prefix="anglerfish_cal_")
+    from anglerfish_spark.memo import fresh_dir
+
+    root = fresh_dir("anglerfish_cal_")
     base = os.path.join(root, "cal.parquet")
     (
         spark.range(2_000_000)
@@ -188,6 +188,8 @@ def main() -> None:
     from anglerfish_spark.registry import all_queries
     from anglerfish_spark.session import get_spark
 
+    # box noise next to the numbers it affects (1-minute load average)
+    load1_start = round(os.getloadavg()[0], 2)
     spark = get_spark("anglerfish-bench")
     qs = all_queries()
     names = [n for n in HEADLINE if n in qs]
@@ -275,35 +277,6 @@ def main() -> None:
         for n, ts in samples.items()
     }
 
-    # one extra instrumented curation pass (outside best-of-N: eager
-    # per-stage checkpoints change scheduling, so it must not shadow the
-    # headline number) — the per-stage breakdown a regression hunt needs
-    stages: dict[str, dict[str, float]] = {}
-    if "q_curation_full" in times:
-        try:
-            os.environ["ANGLERFISH_CURATION_STAGES"] = "1"
-            qs["q_curation_full"].fn(spark, SF_DIR).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            from anglerfish_spark.operators.dedup import CURATION_STAGE_SECONDS
-
-            stages["curation"] = dict(sorted(CURATION_STAGE_SECONDS.items()))
-        except Exception:  # noqa: BLE001 - instrumentation must not fail the bench
-            pass
-        finally:
-            os.environ.pop("ANGLERFISH_CURATION_STAGES", None)
-    # feed phase split (VERDICT r13 #2): recorded unconditionally by the
-    # query itself (plain perf_counter marks, no scheduling change), so
-    # the last timed pass's breakdown is free to report
-    if "q_stream_table_feed" in times:
-        try:
-            from anglerfish_spark.streaming.table_feed import FEED_STAGE_SECONDS
-
-            if FEED_STAGE_SECONDS:
-                stages["stream_table_feed"] = dict(sorted(FEED_STAGE_SECONDS.items()))
-        except Exception:  # noqa: BLE001 - instrumentation must not fail the bench
-            pass
-
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     payload = {
         "metric": "headline_queries_total_sec",
@@ -328,6 +301,7 @@ def main() -> None:
         # first-touch JIT/codegen live here (see the prebuild comment)
         "prebuild_sec": prebuild,
         "prebuild_total_sec": round(sum(prebuild.values()), 3),
+        "load1": {"start": load1_start, "end": round(os.getloadavg()[0], 2)},
     }
     # calibration block (VERDICT r11 #2): machine yardstick + each
     # headline query as a RATIO to it — cross-round deltas in the ratio
@@ -339,16 +313,25 @@ def main() -> None:
         payload["queries_vs_cal"] = {
             n: round(t / cal_total, 3) for n, t in times.items()
         }
-    # build-once assets are setup a real consumer never pays, materialized
-    # once per process (memo.materialize_once) and reported separately,
-    # excluded from best-of-N since only the first pass pays them (VERDICT
-    # r4 #2): the stand-ins (Kafka-message encode, OCF producer writes,
-    # IVF cells) and now also the demo tables and indexes the table,
-    # takedown and search queries read
-    from anglerfish_spark.memo import SETUP_SECONDS
+    # memo.STAGE_SECONDS: scope "setup" holds the build-once assets, setup
+    # a real consumer never pays, materialized once per process
+    # (memo.materialize_once) and excluded from best-of-N since only the
+    # first pass pays them (VERDICT r4 #2): the stand-ins (Kafka-message
+    # encode, OCF producer writes, IVF cells), the demo tables and the
+    # indexes.  The query scopes hold the per-stage split of each query's
+    # last timed pass, so a regression points at a stage
+    from anglerfish_spark.memo import STAGE_SECONDS
 
-    if SETUP_SECONDS:
-        payload["setup_sec"] = dict(sorted(SETUP_SECONDS.items()))
+    if "setup" in STAGE_SECONDS:
+        payload["setup_sec"] = dict(sorted(STAGE_SECONDS["setup"].items()))
+    stages = {
+        scope: dict(sorted(STAGE_SECONDS[scope].items()))
+        for scope, query in (
+            ("curation", "q_curation_full"),
+            ("stream_table_feed", "q_stream_table_feed"),
+        )
+        if query in times and scope in STAGE_SECONDS
+    }
     if stages:
         payload["stages_sec"] = stages
     if errors:

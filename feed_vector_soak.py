@@ -1,20 +1,21 @@
 #!/usr/bin/env python
-"""Nested-evolution feed drain: vectorized struct rebuild vs the per-row
+"""Nested-evolution feed read: vectorized struct rebuild vs the per-row
 value-space fallback (VERDICT r9 #5 "Done" criterion — the vectorized
 path must be ≥5× on a nested-evolution backlog).
 
 A table logs N rows of a nested record under writer W; the reader R
 renames the nested child and adds a defaulted one — the exact shape that
-pre-r10 routed every row through resolve_datum.  The same backlog drains
-through the manifest_feed stream twice: once with the r10 vectorized
-plan (struct rebuild from child arrays), once with the fallback forced
-(monkeypatched planner), and the wall ratio is printed.
+pre-r10 routed every row through resolve_datum.  The manifest_feed
+reader plans the backlog's partitions once; their change files are then
+read in-process twice: once under the planned (vectorized) spec, once
+under the value-space fallback spec, and the wall ratio is printed.
 
 Usage: python feed_vector_soak.py [out_json]   Env: FEED_SOAK_ROWS
 """
 
 from __future__ import annotations
 
+import copy
 import json
 import os
 import sys
@@ -41,43 +42,18 @@ R = (
 )
 
 
-def drain(spark, t: str, sink: str, force: bool = False) -> float:
-    from anglerfish_spark.streaming.stateful import await_or_fail
-    from anglerfish_spark.streaming.table_feed import (
-        FORMAT_NAME,
-        register_manifest_feed,
-    )
-
-    register_manifest_feed(spark)
-    acc = {"n": 0}
-
-    def _count(batch, _epoch):
-        acc["n"] += batch.count()
-
-    t0 = time.time()
-    reader = (
-        spark.readStream.format(FORMAT_NAME)
-        .option("table", t)
-        .option("startingVersion", "0")
-        .option("forcePydatum", "true" if force else "false")
-        .load()
-    )
-    q = (
-        reader.writeStream.foreachBatch(_count)
-        .queryName(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_or_fail(q)
-    return time.time() - t0, acc["n"]
+def read_all(reader, parts) -> tuple[float, int]:
+    """Wall seconds and rows to read every partition through ``reader``."""
+    t0 = time.perf_counter()
+    n = sum(b.num_rows for p in parts for b in reader.read(p))
+    return time.perf_counter() - t0, n
 
 
 def main() -> None:
-    import tempfile
-
     from pyspark.sql import SparkSession, functions as F
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    from anglerfish_spark.memo import fresh_dir
     from anglerfish_spark.sources import manifest_table as mt
     from anglerfish_spark.streaming import table_feed as tf
 
@@ -88,7 +64,7 @@ def main() -> None:
         .getOrCreate()
     )
     rows = int(os.environ.get("FEED_SOAK_ROWS", "200000"))
-    t = tempfile.mkdtemp(prefix="anglerfish_feedsoak_")
+    t = fresh_dir("anglerfish_feedsoak_")
     df = spark.range(rows).select(
         F.col("id").alias("k"),
         F.struct(
@@ -98,9 +74,19 @@ def main() -> None:
     mt.append_evolved(spark, t, df, W)
     mt.append_evolved(spark, t, mt.snapshot(spark, t).limit(0), W, reader_schema=R)
 
-    drain(spark, t, "soak_warmup")  # cold-start: stream setup, JVM warm
-    wall_vec, n_vec = drain(spark, t, "soak_vec")
-    wall_py, n_py = drain(spark, t, "soak_py", force=True)
+    reader = tf.ManifestFeedStreamReader(None, {"table": t})
+    parts = reader.partitions(reader.initialOffset(), reader.latestOffset())
+    assert any(p.spec and p.spec["op"] == "vector" for p in parts), parts
+    fallback = []
+    for p in parts:
+        p = copy.copy(p)
+        if p.spec is not None:
+            p.spec = {"op": "pydatum", "writer": p.spec["writer"], "reader": p.spec["reader"]}
+        fallback.append(p)
+
+    read_all(reader, parts)  # warm: imports, schema parse, page cache
+    wall_vec, n_vec = read_all(reader, parts)
+    wall_py, n_py = read_all(reader, fallback)
     assert n_vec == n_py == rows, (n_vec, n_py, rows)
     out = {
         "rows": rows,

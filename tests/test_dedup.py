@@ -548,20 +548,18 @@ class TestAssignCellsBatchR14Opt:
 class TestCurationMergedCheckpointsR14Opt:
     """The r14-opt checkpoint merges in q_curation_full (base+s1 ranked in
     ONE eager job; removed2/surv2 as a flagged split of one checkpoint):
-    the instrumented stage split still reports every stage, and the output
-    matches the DuckDB oracle with instrumentation ON (the merge changed
-    WHICH frames checkpoint, so the instrumented path is the changed path)."""
+    the stage split in memo.STAGE_SECONDS still reports every stage, and
+    the output matches the DuckDB oracle."""
 
-    def test_stages_and_oracle_with_instrumentation(self, spark, monkeypatch):
-        from anglerfish_spark.operators import dedup
+    def test_stages_and_oracle_with_instrumentation(self, spark):
+        from anglerfish_spark import memo
         from tests.conftest import SF_DIR
         from tests.oracle_harness import duckdb_conn, compare
         from anglerfish_spark.registry import all_queries
 
-        monkeypatch.setenv("ANGLERFISH_CURATION_STAGES", "1")
         qd = all_queries()["q_curation_full"]
         ok, msg = compare(qd.fn(spark, SF_DIR), duckdb_conn(SF_DIR), qd.oracle)
         assert ok, msg
-        assert set(dedup.CURATION_STAGE_SECONDS) == {
+        assert set(memo.STAGE_SECONDS["curation"]) == {
             "1_exact", "2_near", "3_semantic", "4_substr"
         }

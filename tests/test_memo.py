@@ -1,7 +1,9 @@
-"""The engine's one cache policy (anglerfish_spark/memo.py): the bounded
-LRU every process-global cache uses, the file-state stamp that keys the
-file-derived ones, the build-once helper every demo table and index goes
-through, and a guard that keeps any other cache shape out."""
+"""The engine's one policy for process-lifetime state
+(anglerfish_spark/memo.py): the bounded LRU every process-global cache
+uses, the file-state stamp that keys the file-derived ones, the
+build-once helper every demo table and index goes through, the one stage
+timer, and guards that keep any other cache, timer or temp-dir shape
+out."""
 
 from __future__ import annotations
 
@@ -12,12 +14,21 @@ import shutil
 import subprocess
 import sys
 import threading
+import time
+import types
 import uuid
 
 import pytest
 
 from anglerfish_spark import memo
-from anglerfish_spark.memo import Memo, file_stamp, materialize_once, scratch_dir
+from anglerfish_spark.memo import (
+    STAGE_SECONDS,
+    Memo,
+    file_stamp,
+    materialize_once,
+    scratch_dir,
+    timed,
+)
 
 
 class TestMemo:
@@ -100,7 +111,7 @@ class TestMaterializeOnce:
         assert materialize_once("memo_test", sf, self._builder(calls)) == first
         assert calls == [first]
         assert first.startswith(memo._root() + os.sep)
-        assert memo.SETUP_SECONDS["memo_test"] >= 0
+        assert memo.STAGE_SECONDS["setup"]["memo_test"] >= 0
 
     def test_removed_directory_is_rebuilt_at_a_fresh_path(self):
         calls: list[str] = []
@@ -159,14 +170,71 @@ def test_scratch_dir_is_one_per_prefix():
     os.rmdir(b)
 
 
-#: module-level empty containers that are not caches: the query registry,
-#: and the three stage-timer dicts that job labelling is to replace
-_NOT_CACHES = {
-    "registry.QUERIES",
-    "operators.dedup.CURATION_STAGE_SECONDS",
-    "streaming.table_feed.FEED_STAGE_SECONDS",
-    "memo.SETUP_SECONDS",
-}
+class TestTimed:
+    def test_stage_time_accumulates(self):
+        scope = f"timed-{uuid.uuid4().hex}"
+        for _ in range(2):
+            with timed(scope, "a"):
+                time.sleep(0.01)
+        with timed(scope, "b"):
+            pass
+        assert set(STAGE_SECONDS[scope]) == {"a", "b"}
+        assert STAGE_SECONDS[scope]["a"] >= 0.02
+
+    def test_scope_popped_at_entry_holds_the_last_run(self):
+        scope = f"timed-{uuid.uuid4().hex}"
+
+        def run(stages):
+            STAGE_SECONDS.pop(scope, None)
+            for stage in stages:
+                with timed(scope, stage):
+                    pass
+
+        run(["first", "shared"])
+        run(["shared"])
+        assert set(STAGE_SECONDS[scope]) == {"shared"}
+
+    def test_concurrent_blocks_lose_no_time(self, monkeypatch):
+        # each block reads a thread-local clock 0.0 then 1.0, so it lasts
+        # exactly one second and a lost update shows in the sum
+        local = threading.local()
+
+        def clock() -> float:
+            local.t = 1.0 - getattr(local, "t", 1.0)
+            return local.t
+
+        monkeypatch.setattr(memo, "time", types.SimpleNamespace(perf_counter=clock))
+        scope = f"timed-{uuid.uuid4().hex}"
+
+        def work() -> None:
+            for _ in range(500):
+                with timed(scope, "a"):
+                    pass
+
+        old = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            threads = [threading.Thread(target=work) for _ in range(8)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=60)
+        finally:
+            sys.setswitchinterval(old)
+        assert not any(t.is_alive() for t in threads)
+        assert STAGE_SECONDS[scope] == {"a": 4000.0}
+
+    def test_block_that_raises_records_nothing(self):
+        scope = f"timed-{uuid.uuid4().hex}"
+        with pytest.raises(RuntimeError, match="stage failed"):
+            with timed(scope, "a"):
+                raise RuntimeError("stage failed")
+        assert scope not in STAGE_SECONDS
+
+
+#: module-level empty containers that are not caches: the query registry
+#: and the one stage timer
+_NOT_CACHES = {"registry.QUERIES", "memo.STAGE_SECONDS"}
 
 
 def _is_empty_container(value: ast.expr | None) -> bool:
@@ -223,3 +291,27 @@ def test_every_module_cache_is_a_memo():
     assert len(caches) >= 5, caches
     assert bad == []
     assert seen == _NOT_CACHES  # a stale allowlist entry fails too
+
+
+def test_only_memo_times_stages_and_makes_temp_dirs():
+    """No module in ``anglerfish_spark/`` other than ``memo.py`` calls
+    ``time.perf_counter`` or ``tempfile.mkdtemp`` (under any import
+    alias): stage timings go through :func:`memo.timed` into one dict,
+    and every temp dir through :func:`memo.fresh_dir` under the
+    per-process root that is removed at exit."""
+    root = pathlib.Path(__file__).resolve().parent.parent / "anglerfish_spark"
+    banned = {"perf_counter", "mkdtemp"}
+    bad = []
+    for path in sorted(root.rglob("*.py")):
+        if path.name == "memo.py" and path.parent == root:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Attribute) and node.attr in banned:
+                bad.append(f"{path.relative_to(root)}:{node.lineno} {node.attr}")
+            elif isinstance(node, ast.ImportFrom) and node.module in ("time", "tempfile"):
+                bad.extend(
+                    f"{path.relative_to(root)}:{node.lineno} {a.name}"
+                    for a in node.names
+                    if a.name in banned
+                )
+    assert bad == []

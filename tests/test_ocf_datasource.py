@@ -18,30 +18,30 @@ def _register(spark):
     register(spark)
 
 
-def test_roundtrip_nan_null_distinct(spark):
+def test_roundtrip_nan_null_distinct(spark, tmp_path):
     df = spark.createDataFrame(
         [(1, "a", 1.5, None), (2, "b", float("nan"), "x"), (3, None, -2.25, "y")],
         "id bigint, s string, x double, u string",
     )
-    d = tempfile.mkdtemp(prefix="anglerfish_ds_") + "/t"
+    d = str(tmp_path / "t")
     df.write.format(FORMAT_NAME).mode("overwrite").save(d)
     rows = spark.read.format(FORMAT_NAME).load(d).orderBy("id").collect()
     assert rows[0].s == "a" and rows[2].s is None
     assert math.isnan(rows[1].x) and rows[1].u == "x"
 
 
-def test_schema_inferred_from_header(spark):
+def test_schema_inferred_from_header(spark, tmp_path):
     df = spark.createDataFrame([(1, "x")], "id bigint, s string")
-    d = tempfile.mkdtemp(prefix="anglerfish_ds_") + "/t"
+    d = str(tmp_path / "t")
     df.write.format(FORMAT_NAME).mode("append").save(d)
     back = spark.read.format(FORMAT_NAME).load(d)
     assert isinstance(back.schema["id"].dataType, T.LongType)
     assert isinstance(back.schema["s"].dataType, T.StringType)
 
 
-def test_one_partition_one_file_read_parallelism(spark):
+def test_one_partition_one_file_read_parallelism(spark, tmp_path):
     df = spark.range(100).select(F.col("id")).repartition(4)
-    d = tempfile.mkdtemp(prefix="anglerfish_ds_") + "/t"
+    d = str(tmp_path / "t")
     df.write.format(FORMAT_NAME).mode("append").save(d)
     files = [f for f in os.listdir(d) if f.endswith(".avro")]
     assert len(files) == 4  # one OCF file per partition
@@ -50,17 +50,17 @@ def test_one_partition_one_file_read_parallelism(spark):
     assert sorted(r.id for r in back.collect()) == list(range(100))
 
 
-def test_overwrite_replaces_files(spark):
-    d = tempfile.mkdtemp(prefix="anglerfish_ds_") + "/t"
+def test_overwrite_replaces_files(spark, tmp_path):
+    d = str(tmp_path / "t")
     spark.range(10).coalesce(1).write.format(FORMAT_NAME).mode("append").save(d)
     spark.range(3).coalesce(1).write.format(FORMAT_NAME).mode("overwrite").save(d)
     assert spark.read.format(FORMAT_NAME).load(d).count() == 3
 
 
-def test_heterogeneous_dir_resolves_to_reader_schema(spark):
+def test_heterogeneous_dir_resolves_to_reader_schema(spark, tmp_path):
     """Two schema versions in one directory read as one relation under an
     explicit reader_schema (per-file writer → reader resolution)."""
-    d = tempfile.mkdtemp(prefix="anglerfish_ds_") + "/t"
+    d = str(tmp_path / "t")
     spark.createDataFrame([(1,)], "id bigint").coalesce(1).write.format(
         FORMAT_NAME
     ).mode("append").save(d)
@@ -83,7 +83,7 @@ def test_heterogeneous_dir_resolves_to_reader_schema(spark):
     assert [(r.id, r.s) for r in rows] == [(1, None), (2, "x")]
 
 
-def test_date_and_decimal_logical_roundtrip(spark):
+def test_date_and_decimal_logical_roundtrip(spark, tmp_path):
     import datetime as dt
     from decimal import Decimal
 
@@ -91,7 +91,7 @@ def test_date_and_decimal_logical_roundtrip(spark):
         [(1, dt.date(2024, 2, 29), Decimal("12.34"))],
         "id bigint, d date, amt decimal(10,2)",
     )
-    d = tempfile.mkdtemp(prefix="anglerfish_ds_") + "/t"
+    d = str(tmp_path / "t")
     df.write.format(FORMAT_NAME).mode("append").save(d)
     back = spark.read.format(FORMAT_NAME).load(d)
     assert isinstance(back.schema["d"].dataType, T.DateType)
@@ -274,11 +274,11 @@ class TestOffsetCompaction:
             assert run_once() == set(range(8))
 
 
-def test_staged_tmp_files_are_invisible_to_readers(spark):
+def test_staged_tmp_files_are_invisible_to_readers(spark, tmp_path):
     """The two-phase write protocol: a dead task's .avro.tmp staging file
     must never be listed by batch or streaming reads."""
     df = spark.createDataFrame([(1,)], "id bigint")
-    d = tempfile.mkdtemp(prefix="anglerfish_ds_") + "/t"
+    d = str(tmp_path / "t")
     df.write.format(FORMAT_NAME).mode("append").save(d)
     with open(os.path.join(d, "part-deadtask.avro.tmp"), "wb") as f:
         f.write(b"truncated garbage from a lost executor")

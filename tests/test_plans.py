@@ -180,16 +180,14 @@ def test_tfidf_no_cartesian_and_broadcast_count(spark, sf_dir):
     assert "BroadcastExchange" in plan, plan  # the 1-row n_docs broadcast
 
 
-def test_partitioned_write_prunes_partitions_on_read(spark, sf_dir):
+def test_partitioned_write_prunes_partitions_on_read(spark, sf_dir, tmp_path):
     """Hive-style partitioned sink + partition-predicate read: the scan
     must show the predicate as a PartitionFilter (pruned at listing time,
     zero data read from other partitions) — the 100 TB layout lever."""
-    import tempfile
-
     from anglerfish_spark.sources.registry import load_table, write
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    d = tempfile.mkdtemp(prefix="anglerfish_prune_") + "/part"
+    d = str(tmp_path / "part")
     write(ev, "parquet", d, mode="overwrite", partition_by=["event_type"])
     df = spark.read.parquet(d).where("event_type = 'click'")
     plan = df._jdf.queryExecution().explainString(

@@ -8,7 +8,6 @@ from __future__ import annotations
 
 import math
 import os
-import tempfile
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -55,7 +54,7 @@ class TestEventsTsCanonicalization:
 
 
 class TestTypedOcfNanNull:
-    def test_nan_survives_and_null_stays_null(self, spark):
+    def test_nan_survives_and_null_stays_null(self, spark, tmp_path):
         """Avro doubles support NaN: a NaN value must round-trip as NaN,
         a SQL NULL as null — the Arrow write path keeps them distinct
         (pandas float64 cannot)."""
@@ -67,7 +66,7 @@ class TestTypedOcfNanNull:
         df = spark.createDataFrame(
             [(1, float("nan")), (2, None), (3, 2.5)], "id bigint, x double"
         )
-        out = tempfile.mkdtemp(prefix="anglerfish_nan_")
+        out = str(tmp_path)
         schema_json = write_avro_ocf_typed(df, out, name="nan_case")
         back = {r.id: r.x for r in read_avro_ocf_typed(spark, out, schema_json).collect()}
         assert math.isnan(back[1])

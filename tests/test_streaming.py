@@ -586,9 +586,7 @@ class TestStreamMV:
         b = [tuple(r) for r in qs["q_stream_mv"].fn(spark, sf_dir).collect()]
         assert a == b
 
-    def test_replayed_epoch_is_skipped(self, spark, sf_dir):
-        import tempfile
-
+    def test_replayed_epoch_is_skipped(self, spark, sf_dir, tmp_path):
         from anglerfish_spark.operators.history import (
             changelog_deltas,
             mv_build,
@@ -608,7 +606,7 @@ class TestStreamMV:
             "o_orderkey", "o_orderpriority", "o_totalprice"
         )
         chg = orders_changelog(orders).localCheckpoint(eager=False)
-        t = tempfile.mkdtemp(prefix="mv_replay_")
+        t = str(tmp_path)
         files = stage_files(mv_build(orders.where(F.col("o_orderkey") % 4 != 3)), t)
         commit(t, files, expected_version=0, txn_id="mv-init")
 
@@ -639,13 +637,11 @@ class TestStreamCdcDeletes:
     is exactly-once per epoch INDEPENDENTLY, so a half-applied crash
     point resumes correctly."""
 
-    def test_replayed_batch_is_noop(self, spark):
-        import tempfile
-
+    def test_replayed_batch_is_noop(self, spark, tmp_path):
         from anglerfish_spark.sources.manifest_table import commit, snapshot, stage_files
         from anglerfish_spark.streaming.deletes import apply_cdc_batch
 
-        t = tempfile.mkdtemp(prefix="cdc_replay_")
+        t = str(tmp_path)
         base = spark.range(10).select(F.col("id").alias("k"), (F.col("id") * 10).alias("v"))
         commit(t, stage_files(base, t), expected_version=0, txn_id="init")
         batch = spark.createDataFrame(
@@ -663,15 +659,13 @@ class TestStreamCdcDeletes:
         assert current_version(t) == v
         assert sorted(r.k for r in snapshot(spark, t).collect()) == after
 
-    def test_half_applied_epoch_resumes(self, spark, monkeypatch):
+    def test_half_applied_epoch_resumes(self, spark, monkeypatch, tmp_path):
         """Crash between the upsert commit and the delete commit: the
         replay must skip the upsert (txn found) and apply the delete."""
-        import tempfile
-
         import anglerfish_spark.streaming.deletes as sd
         from anglerfish_spark.sources.manifest_table import commit, snapshot, stage_files
 
-        t = tempfile.mkdtemp(prefix="cdc_half_")
+        t = str(tmp_path)
         base = spark.range(10).select(F.col("id").alias("k"), (F.col("id") * 10).alias("v"))
         commit(t, stage_files(base, t), expected_version=0, txn_id="init")
         batch = spark.createDataFrame(
@@ -1532,6 +1526,23 @@ class TestCompositeKeyMirror:
         # MoR: the original files are still referenced byte-for-byte
         mf = read_manifest(mirror)
         assert set(m1["files"]) <= set(mf["files"])
+
+
+class TestFeedPhaseSplit:
+    def test_query_records_the_phase_split_of_its_last_run(self, spark):
+        import os
+
+        from anglerfish_spark import memo
+        from anglerfish_spark.registry import all_queries
+        from tests.conftest import SF_DIR
+
+        sf_dir = os.path.join(os.path.dirname(SF_DIR.rstrip("/")), "sf0.01")
+        memo.STAGE_SECONDS["stream_table_feed"] = {"stale": 1.0}
+        rows = all_queries()["q_stream_table_feed"].fn(spark, sf_dir).collect()
+        assert sorted(r["change_type"] for r in rows) == ["delete", "insert"]
+        assert set(memo.STAGE_SECONDS["stream_table_feed"]) == {
+            "construct", "start", "drain", "agg_plan"
+        }
 
 
 class TestFeedPartialFoldR14Opt:

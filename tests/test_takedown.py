@@ -981,12 +981,10 @@ class TestMaintenanceFeed:
 
 
 class TestIvfIngest:
-    def test_append_equals_rebuild_and_probes_see_new_vectors(self, spark, sf_dir):
+    def test_append_equals_rebuild_and_probes_see_new_vectors(self, spark, sf_dir, tmp_path):
         """r12 ingest half of ANN maintenance: appending new vectors into
         the cell layout under the current quantizer equals a from-scratch
         assignment of the union, and probes pick the new vectors up."""
-        import tempfile
-
         from anglerfish_spark.operators.similarity import (
             _cell_ranking,
             _centroids,
@@ -1002,7 +1000,7 @@ class TestIvfIngest:
         )
         cents = _centroids(e)
         best = F.element_at(_cell_ranking(F.col("embedding"), cents), -1)
-        path = tempfile.mkdtemp(prefix="anglerfish_ivf_ing_") + "/cells"
+        path = str(tmp_path / "cells")
         base.select(
             "vec_id", "label", "embedding", (best["nc"] * -1).alias("cell")
         ).write.partitionBy("cell").parquet(path)
