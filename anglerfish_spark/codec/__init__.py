@@ -1,4 +1,4 @@
-from .decoder import decode_json, decode_json_python, wire_struct_type
+from .decoder import decode_json, decode_json_python
 from .pydecode import decode_datum
 
-__all__ = ["decode_json", "decode_json_python", "decode_datum", "wire_struct_type"]
+__all__ = ["decode_json", "decode_json_python", "decode_datum"]

@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..errors import SchemaEvolutionError
 from ..schema.model import (
@@ -64,7 +65,7 @@ def _check_enum_resolution(w: AvroEnum, r: AvroEnum, path: str) -> None:
         )
 from ..schema.parser import ParsedSchema, parse_schema
 from ..schema.spark_convert import to_struct_type, union_field_names
-from .decoder import _lit_value, decode_json
+from .decoder import decode_json
 from .logical import py_carrier_to_value, py_value_to_carrier
 from .pydecode import Decoder as _PyDecoder
 
@@ -310,6 +311,28 @@ def _resolve_union_out(
         resolved = _resolve(col[wname], wm, r, renv, wenv, max_depth, f"{path}<{wname}>")
         out = F.when(col[wname].isNotNull(), resolved).otherwise(out)
     return out
+
+
+def _lit_value(value, dtype: T.DataType) -> Column:
+    """A pydecode value as a literal column of ``dtype`` (field defaults)."""
+    if value is None:
+        return F.lit(None).cast(dtype)
+    if isinstance(dtype, T.ArrayType):
+        if not value:
+            return F.array().cast(dtype)
+        return F.array(*[_lit_value(v, dtype.elementType) for v in value]).cast(dtype)
+    if isinstance(dtype, T.MapType):
+        if not value:
+            return F.map_from_arrays(F.array(), F.array()).cast(dtype)
+        pairs = [x for k, v in value.items() for x in (F.lit(k), _lit_value(v, dtype.valueType))]
+        return F.create_map(*pairs).cast(dtype)
+    if isinstance(dtype, T.StructType):
+        return F.struct(
+            *[_lit_value(value.get(f.name), f.dataType).alias(f.name) for f in dtype.fields]
+        )
+    if isinstance(dtype, T.BinaryType):
+        return F.lit(bytes(value))
+    return F.lit(value).cast(dtype)
 
 
 def _resolve_record(

@@ -12,7 +12,7 @@ branches must be recovered from runtime types.
 
 Pipeline: generic object → :func:`tag_generic` (runtime union
 reverse-match → spec Avro-JSON with tagged unions) → the differentially
-tested strict decoder (``decode_json`` expression path on executors) →
+tested strict decoder (``decode_json``'s JVM decoder on executors) →
 typed DataFrame.  Reverse: typed rows → decoded representation →
 :func:`to_generic` (untag) → plain objects.
 
@@ -266,7 +266,7 @@ def objects_to_dataframe(spark, objs, schema, mode: str = "strict", max_depth: i
 
     Tags union branches from runtime types on the driver (O(n) pure
     Python, metadata-scale inputs), then runs the differentially-tested
-    expression decoder distributed — all D1-D9/E1 strictness applies."""
+    strict decoder distributed — all D1-D9/E1 strictness applies."""
     from .decoder import decode_json
 
     ps = schema if not isinstance(schema, str) else parse_schema(schema)

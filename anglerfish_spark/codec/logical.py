@@ -5,15 +5,17 @@ AvroData.scala:17).  The *wire* representation of a logical type is always
 its carrier primitive (long/int/bytes/string) — both Avro binary and the
 engine's Avro-JSON convention stay carrier-level, exactly like the spec's
 encodings.  Conversion to the semantic value happens at the typed decode
-boundary (``decode_json`` / ``decode_json_python``) where the Spark shape
-from ``to_struct_type`` carries the native Catalyst type, and symmetrically
-on encode (``BinaryCodec.encode`` accepts the semantic Python values).
+boundary (``decode_json``'s JVM decoder, ``decode_json_python``) where the
+Spark shape from ``to_struct_type`` carries the native Catalyst type, and
+symmetrically on encode (``BinaryCodec.encode`` accepts the semantic
+Python values).
 
-Two parallel implementations, differentially tested:
+Two implementations live here, differentially tested:
 
 * Column expressions (:func:`carrier_to_value_expr` /
   :func:`value_to_carrier_expr`) — built-ins only, stay inside
-  whole-stage codegen;
+  whole-stage codegen; schema evolution bridges logical annotations
+  with them;
 * Python values (:func:`py_carrier_to_value` / :func:`py_value_to_carrier`)
   — pydecode / BinaryCodec side.
 
@@ -26,8 +28,8 @@ Decimal-from-binary in expressions folds big-endian two's-complement hex
 byte-pairs into a ``decimal(38,0)`` accumulator.  Redundant sign-extension
 prefixes are stripped first; a stripped encoding longer than 15 bytes
 (unscaled |x| ≥ 2^119, i.e. precision > 35) cannot be accumulated without
-overflowing decimal(38) intermediates and surfaces on the error channel —
-the Python path has no such bound.
+overflowing decimal(38) intermediates and yields NULL — the Python path
+and the JVM decoder have no such bound.
 """
 
 from __future__ import annotations
@@ -92,8 +94,7 @@ def binary_to_decimal_expr(col: Column, precision: int, scale: int) -> Column:
     (placing the decimal point ``scale`` digits from the right) — a decimal
     *division* would hit Spark's precision-cap/rescale rules and round.
     Out-of-bound encodings (> 15 significant bytes) and values that do not
-    fit (p,s) yield NULL — pair with :func:`decimal_overflow_expr` /
-    null-vs-carrier checks for the error channel.  NULL/empty input → NULL.
+    fit (p,s) yield NULL.  NULL/empty input → NULL.
 
     The carrier, its stripped hex, the folded unscaled integer, and the
     digit string are each let-bound (:func:`_let`) — every one is
@@ -140,12 +141,6 @@ def binary_to_decimal_expr(col: Column, precision: int, scale: int) -> Column:
         ).otherwise(value)
 
     return _let(col, lambda c: _let(_stripped_hex(c), lambda h: with_hex(c, h)))
-
-
-def decimal_overflow_expr(col: Column) -> Column:
-    """True when a non-null binary encoding exceeds the expression fold's
-    15-significant-byte bound (precision > 35)."""
-    return col.isNotNull() & (F.length(_stripped_hex(col)) > _MAX_DECIMAL_HEX)
 
 
 def time_range_err_expr(logical: LogicalType, col: Column) -> Column:
@@ -248,8 +243,8 @@ def py_carrier_to_value(logical: LogicalType, v, path: str = "$"):
                 return v  # carrier bytes pass through (no Catalyst shape)
             unscaled = int.from_bytes(v, "big", signed=True) if len(v) else 0
             # spec: the unscaled value must fit in `precision` digits —
-            # the expression decoder rejects via the decimal(p,s) cast
-            # nulling out; mirror it here or the differential diverges
+            # the JVM decoder rejects it too; mirror it here or the
+            # differential diverges
             # (r13 fuzz seed 13777: fixed(1) byte 0xf6 = -10 under
             # decimal(precision=1) decoded here but errored there)
             if abs(unscaled) > 10**logical.precision - 1:

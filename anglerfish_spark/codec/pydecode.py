@@ -2,10 +2,9 @@
 
 Engine analogue of ``parseDatum`` / ``parseAvroDatumAlgebra`` (reference
 data/avro/AvroJsonFAlgebras.scala:715-723 and :567-709).  This is the
-semantic ground truth for the expression-based decoder in ``decoder.py``
-(the test suite runs them differentially) and doubles as the Pandas-UDF
-fallback for schemas whose strictness checks exceed what fixed-path JSON
-expressions can reach (deeply nested records inside arrays).
+semantic ground truth for the JVM decoder behind ``decoder.py``'s
+``decode_json`` (the test suite runs them differentially) and backs
+``decode_json_python``, the Arrow-batched reference twin.
 
 Decoded representation mirrors the target Spark schema produced by
 ``schema.spark_convert.to_struct_type``:

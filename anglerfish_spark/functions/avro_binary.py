@@ -14,13 +14,19 @@ prefixed unions) — implemented from the public Avro specification.
 The spark-avro connector is not on this classpath (pip pyspark ships
 avro-core only), so the UDF route is the supported path; on a cluster with
 spark-avro, ``sources.registry.avro_available`` gates the native
-``from_avro``/``to_avro`` instead.  Every public codec function is one
-call into two pandas UDFs (Arrow batches, not row-at-a-time Python):
-``_encode_udf`` (Avro-JSON text → header + body) and ``_decode_udf``,
-which composes three choices — the *framing* (raw, single-object or
-Confluent), the *writer lookup* (the reader schema itself, a fingerprint
-list or id map, or a registry client) and the *output* (JSON text or the
-typed struct, strict or permissive).
+``from_avro``/``to_avro`` instead.  The typed decodes whose writer is the
+reader itself (:func:`single_object_decode_typed` and the connector-absent
+branch of :func:`avro_decode_typed`) are one JVM call per row
+(``codec.decoder.binary_decoder``, the decode program ``decode_json``
+walks, with this module's ``DatumError`` texts).  Every other public codec
+function is one call into two pandas UDFs (Arrow batches, not
+row-at-a-time Python): ``_encode_udf`` (Avro-JSON text → header + body)
+and ``_decode_udf``, which composes three choices — the *framing* (raw,
+single-object or Confluent), the *writer lookup* (the reader schema
+itself, a fingerprint list or id map, or a registry client) and the
+*output* (JSON text or the typed struct, strict or permissive).  Its
+typed output is the reference the JVM walker is differential-tested
+against (tests/test_jvm.py).
 """
 
 from __future__ import annotations
@@ -34,10 +40,11 @@ from functools import lru_cache, partial
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..codec.decoder import _call, _nullable, binary_decoder
 from ..codec.logical import py_carrier_to_value, py_value_to_carrier
 from ..errors import DatumError, UnionResolutionError
 from ..schema.model import (
@@ -1087,8 +1094,8 @@ def _semantic_value(t, v, env):
     """Carrier-space decoded value (BinaryCodec output) → semantic Python
     value in the shape ``to_struct_type`` declares (logical carriers
     lifted via ``py_carrier_to_value``; unions in the engine's decoded
-    representation).  The Python mirror of the expression decoder's
-    ``_lift_logical`` — what lets a pandas UDF emit the typed struct
+    representation).  The Python mirror of the JVM decoders' logical
+    lift — what lets a pandas UDF emit the typed struct
     directly instead of round-tripping through JSON text."""
     lift = _lift_semantic
 
@@ -1120,21 +1127,9 @@ def _semantic_value(t, v, env):
     raise DatumError(f"cannot lift {type(t).__name__}")
 
 
-def _nullable_type(dt: T.DataType) -> T.DataType:
-    """Recursively nullable, metadata-free copy of a Catalyst type.
-    pandas→Arrow batches carry neither non-null flags nor field metadata,
-    and Spark 4's pandas_udf struct check compares schemas EXACTLY (the
-    mismatch error prints two visually identical types when only
-    nullability/metadata differ)."""
-    if isinstance(dt, T.StructType):
-        return T.StructType(
-            [T.StructField(f.name, _nullable_type(f.dataType), True) for f in dt.fields]
-        )
-    if isinstance(dt, T.ArrayType):
-        return T.ArrayType(_nullable_type(dt.elementType), True)
-    if isinstance(dt, T.MapType):
-        return T.MapType(dt.keyType, _nullable_type(dt.valueType), True)
-    return dt
+def _record_root(schema_json: str) -> None:
+    if not isinstance(_cached_schema(schema_json).root, AvroRecord):
+        raise DatumError("typed decode requires a record root schema")
 
 
 def _typed_frame(rows: list, field_names: list[str], out_t: T.StructType) -> pd.DataFrame:
@@ -1196,12 +1191,11 @@ def _decode_udf(
     ps = _cached_schema(reader_schema)
     field_names = None
     if typed:
-        if not isinstance(ps.root, AvroRecord):
-            raise DatumError("typed decode requires a record root schema")
+        _record_root(reader_schema)
         # all-nullable copy: pandas→Arrow batches always carry nullable
         # fields, and Spark 4 rejects the schema otherwise (nullability here
         # is metadata — required-field enforcement happened at binary decode)
-        value_t = _nullable_type(to_struct_type(ps.root, ps.env))
+        value_t = _nullable(to_struct_type(ps.root, ps.env))
         field_names = [f.name for f in ps.root.fields]
     else:
         value_t = T.StringType()
@@ -1318,9 +1312,12 @@ def single_object_decode_permissive(col: Column | str, schema_json: str) -> Colu
 def single_object_decode_typed(col: Column | str, schema_json: str) -> Column:
     """Single-object binary → the TYPED struct directly, skipping the JSON
     text round-trip of :func:`single_object_decode` + ``decode_json`` —
-    the consumption hot path, with the same framing checks."""
-    reader = _single_object_reader(schema_json)
-    return _decode_udf(_unframe_single_object, reader, schema_json, typed=True)(col)
+    the consumption hot path, with the same framing checks.  One JVM call
+    per row (``codec.decoder.binary_decoder``): no Python worker."""
+    _record_root(schema_json)
+    spark = SparkSession.active()
+    udf = binary_decoder(spark, schema_json, _single_object_header(schema_json)[2:])
+    return _call(spark, udf, F.col(col) if isinstance(col, str) else col)
 
 
 def _fingerprint_table(writer_schemas: list[str]):
@@ -1421,11 +1418,11 @@ def avro_decode_typed(
       round-trip through ``schema/printer.to_avsc``), so engine-validated
       schemas with aliases/defaults/logical types reach the connector in
       canonical form.
-    * **connector absent** (this sandbox, plain pip installs): the
-      pure-Python binary codec decodes to canonical JSON, and the strict
-      expression decoder (``codec.decoder.decode_json``) lifts it to the
-      same typed struct — differential-tested against org.apache.avro in
-      tests/test_avro_binary.py.
+    * **connector absent** (plain pip installs): one JVM
+      call per row (``codec.decoder.binary_decoder``) walks the binary
+      against the decode program ``decode_json`` uses, so the struct is
+      exactly the one ``decode_json`` gives the datum's Avro-JSON;
+      differential-tested against the Python codec in tests/test_jvm.py.
 
     ``_from_avro`` is the injectable native entry point: tests exercise the
     native branch's argument construction without the connector (VERDICT r3
@@ -1437,7 +1434,6 @@ def avro_decode_typed(
     engine emits collision-qualified ``union_field_names``).  For the
     record/primitive/logical schemas message pipelines actually register,
     the shapes agree."""
-    from ..codec.decoder import decode_json
     from ..sources.registry import avro_available
 
     c = F.col(col) if isinstance(col, str) else col
@@ -1448,15 +1444,8 @@ def avro_decode_typed(
 
         ps = parse_schema(schema_json)
         return df.withColumn(output_col, _from_avro(c, to_avsc(ps.root)))
-    tmp = "_anglerfish_avro_json"
-    return (
-        decode_json(
-            df.withColumn(tmp, avro_decode(c, schema_json)),
-            tmp,
-            schema_json,
-            output_col=output_col,
-        ).drop(tmp)
-    )
+    spark = df.sparkSession
+    return df.withColumn(output_col, _call(spark, binary_decoder(spark, schema_json), c))
 
 
 def avro_encode_typed(

@@ -10,7 +10,7 @@ of ``count, byte-size, payload, sync``; null codec):
 * **read**: ``spark.read.format("binaryFile")`` lists and reads whole
   files in parallel (one task per file) → ``mapInPandas`` parses blocks
   with :class:`~anglerfish_spark.functions.avro_binary.BinaryCodec` and
-  emits canonical JSON rows → the expression decoder lifts them to typed
+  emits canonical JSON rows → the strict JSON decoder lifts them to typed
   columns.  At 100 TB the parallel unit is the file — write many
   right-sized files (128-512 MB), the standard OCF layout.
 * **write**: one OCF file per partition via ``mapInArrow`` (executor-side

@@ -256,7 +256,7 @@ def avro_available(spark: SparkSession) -> bool:
     the 100 TB hot path):
 
     * ``functions.avro_binary.avro_decode_typed`` → native ``from_avro``
-      when True, expression-decoder fallback otherwise;
+      when True, Python binary codec plus strict JSON decode otherwise;
     * ``functions.avro_binary.avro_encode_typed`` → native ``to_avro``
       when True, Python binary codec otherwise;
     * the wire-format differential between the two branches lives in

@@ -8,7 +8,7 @@ framing (0xC3 0x01 + CRC-64-AVRO fingerprint, ``_unframe_single_object``
 and ``single_object_decode`` in functions/avro_binary.py) is exactly what a
 registry-aware Kafka consumer sees per record — so this module closes the
 loop: a source relation in Kafka's wire shape (``value binary, topic,
-partition, offset``) flows through ``single_object_decode`` → the expression decoder
+partition, offset``) flows through ``single_object_decode`` → the strict JSON decoder
 → event-time windows, and the SAME pipeline function runs on a batch
 DataFrame (driver-checkable against a SQL oracle) or behind
 ``readStream`` (true streaming path, tests/test_streaming.py).
@@ -113,17 +113,19 @@ def _read_fanned(spark: SparkSession, path: str) -> DataFrame:
 def decode_messages(messages: DataFrame) -> DataFrame:
     """Kafka-wire relation → typed event columns.  Works identically on
     batch and streaming inputs: fingerprint-validated single-object decode
-    emitting the typed struct DIRECTLY from the Arrow batch
-    (``single_object_decode_typed`` — r5; binary decode is schema-directed,
-    so the datum is well-typed without the JSON-text round-trip the r3/r4
-    path paid: measured 1.49 → 0.81 s on the decode stage at sf0.1,
-    output row-identical).  The JSON hop
+    emitting the typed struct DIRECTLY, one JVM call per message
+    (``single_object_decode_typed``; binary decode is schema-directed, so
+    the datum is well-typed without a JSON-text round-trip).  The JSON hop
     (``single_object_decode`` + ``decode_json``) remains the route when
     downstream wants the permissive error channel or text auditing —
     see :func:`decode_messages_permissive`."""
     from ..functions.avro_binary import single_object_decode_typed
 
-    dec = messages.select(single_object_decode_typed("value", MESSAGE_SCHEMA).alias("m"))
+    # explode over a one-element array is a Generate barrier: the window's
+    # isnotnull(ts) filter cannot be pushed below it, so each message is
+    # decoded once, after the consumer fan-out, and not again on the scan
+    m = single_object_decode_typed("value", MESSAGE_SCHEMA)
+    dec = messages.select(F.explode(F.array(m)).alias("m"))
     return dec.select(
         F.col("m.event_id").alias("event_id"),
         F.col("m.event_type").alias("event_type"),
@@ -353,7 +355,7 @@ def decode_messages_permissive(messages: DataFrame) -> DataFrame:
     )
     # dead-letter rows carry no decodable payload; feed the strict decoder a
     # schema-valid placeholder for them (masked back to null below) so the
-    # one expression-decoder plan serves both routes
+    # one decoder plan serves both routes
     placeholder = '{"event_id":0,"event_type":"","value":0.0,"ts":0}'
     good = decode_json(
         dec.select(

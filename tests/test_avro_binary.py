@@ -1120,13 +1120,29 @@ def _udf_body(make_column):
     return body
 
 
+def _jvm_error(spark, make_column, frame: bytes) -> str:
+    """The ``<Error>: <text>`` a JVM decoder column fails a query with on
+    one frame."""
+    import re
+
+    import pytest
+
+    df = spark.createDataFrame([(bytearray(frame),)], "m binary")
+    with pytest.raises(Exception) as ei:
+        df.select(make_column("m")).collect()
+    return re.search(r"Caused by: java\.lang\.IllegalArgumentException: ([^\n]*)", str(ei.value)).group(1)
+
+
 class TestPublicDecoderSurface:
     """Every public decoder × (good frames; empty; wrong magic; short
     header; foreign writer — fingerprint mismatch, unknown fingerprint or
     unknown id; truncated body; trailing bytes): output type, decoded
     values (cast to string, so timestamps render in the session's UTC),
-    strict DatumError text from the batch body in-process, and permissive
+    strict DatumError text (from the batch body in-process, or from the
+    failed query for the JVM decoders in ``JVM``), and permissive
     dead-letter rows from one select."""
+
+    JVM = {"single_object_decode_typed"}
 
     TYPES = {
         "avro_decode": "string",
@@ -1280,8 +1296,12 @@ class TestPublicDecoderSurface:
             for name, (framing, strict, make) in _pin_decoders(url).items():
                 if not strict:
                     continue
-                body = _udf_body(make)
                 got[name] = {}
+                if name in self.JVM:
+                    for case, frame in bad[framing].items():
+                        got[name][case] = _jvm_error(spark, make, frame)
+                    continue
+                body = _udf_body(make)
                 for case, frame in bad[framing].items():
                     with pytest.raises(DatumError) as ei:
                         body(pd.Series([frame]))

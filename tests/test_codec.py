@@ -792,10 +792,9 @@ class TestRecursionThroughCollections:
 
 
 class TestNestedDecodeStaysCompiled:
-    """The nested (non-flat) decode path parses every JSON view exactly
-    once, as a staged column, and binds lambdas only where a collection's
-    elements need them; a regression back to let-bound views (interpreted
-    ``transform`` over the whole error tree, and re-parses) fails here."""
+    """The nested (non-flat) decode runs as one JVM decoder call per row:
+    no JSON parse expressions and no interpreted lambdas in the plan, and
+    the UDF's (decoded, errs) result is read without re-invoking it."""
 
     ORDER = json.dumps({
         "type": "record", "name": "Order", "namespace": "t.bulk", "fields": [
@@ -816,22 +815,29 @@ class TestNestedDecodeStaysCompiled:
                 ]}], "default": None},
         ]})
 
-    def test_plan_parses_each_view_once(self, spark):
-        import re
-
+    def test_plan_calls_the_decoder_once(self, spark):
         df = spark.createDataFrame([('{"id": 1}',)], "j string")
         for mode in ("strict", "permissive"):
             out = decode_json(df, "j", self.ORDER, mode=mode)
             plan = out._jdf.queryExecution().optimizedPlan().toString()
-            # staged views: tags elements, attrs, note, ship, Ship, zip
-            views = set(re.findall(r"_anglerfish_v\d+", plan))
-            assert len(views) == 6, sorted(views)
-            # one parse per view, plus the root object view and the wire
-            assert plan.count("from_json(") == 2 + len(views) == 8, mode
-            # lambdas only over the array's and the map's elements (value
-            # and errs each), never a let-binding of a whole subtree
-            assert plan.count("lambdafunction") == 4, mode
-            assert "transform(array(" not in plan, mode
+            assert plan.count("avro_json_decode(") == 1, (mode, plan)
+            assert "from_json(" not in plan, mode
+            assert "lambdafunction" not in plan, mode
+
+
+def _chain(n: int, last: str) -> str:
+    """A linked-list datum of ``n`` records, the innermost holding ``last``."""
+    doc = "{" + last + "}"
+    for i in range(n - 1, 0, -1):
+        doc = '{"value": %d, "tail": {"foo": %s}}' % (i, doc)
+    return doc
+
+
+LINKED = json.dumps({
+    "type": "record", "name": "foo", "fields": [
+        {"name": "value", "type": "int"},
+        {"name": "tail", "type": ["null", "foo"], "default": None},
+    ]})
 
 
 class TestErrorChannelIdentity:
@@ -871,6 +877,10 @@ class TestErrorChannelIdentity:
              '"ship": {"Ship": {"city": "z", "zip": {"int": 5000000000}, "more": 1}}}',
              ["UnexpectedTypeError@$.ship.Ship.zip.int", "RecordError@$.ship.Ship"]),
             ("not json", ["UnexpectedJsonTypeError@$"]),
+            # a quoted beyond-int64 literal is a JSON string at a long
+            # position: UnexpectedTypeError, as pydecode classifies it
+            ('{"id": "99999999999999999999", "ids": [], "attrs": {}}',
+             ["UnexpectedTypeError@$.id"]),
         ]),
         "flat": (FLAT, [
             ('{"id": 1, "qty": 2, "status": "NEW"}', []),
@@ -879,9 +889,16 @@ class TestErrorChannelIdentity:
               "EnumError@$.status", "RecordError@$"]),
             ("not json", ["UnexpectedJsonTypeError@$"]),
         ]),
+        # violations in records nested past three re-entries of the same
+        # record are checked like any other (pydecode's verdicts)
+        "recursive": (LINKED, [
+            (_chain(5, '"value": 5'), []),
+            (_chain(5, '"value": 5, "zzz": 1'), ["RecordError@$" + ".tail.foo" * 4]),
+            (_chain(5, '"value": "5"'), ["UnexpectedTypeError@$" + ".tail.foo" * 4 + ".value"]),
+        ]),
     }
 
-    @pytest.mark.parametrize("path", ["nested", "flat"])
+    @pytest.mark.parametrize("path", ["nested", "flat", "recursive"])
     def test_permissive_and_strict_tags(self, spark, path):
         import re
 

@@ -1,6 +1,7 @@
-"""Differential property test: the expression decoder and the pure-Python
+"""Differential property test: the engine decoder and the pure-Python
 decoder must agree — same accept/reject verdict, same values — over
-generated flat record schemas and datums (valid and corrupted)."""
+generated record schemas and datums (valid and corrupted), flat and
+nested."""
 
 from __future__ import annotations
 
@@ -370,3 +371,133 @@ def test_python_path_matches_expression_on_union_corpus(spark, union_corpus):
         for r in decode_json_python(df, "j", ps, mode="permissive").select("i", "_errors").collect()
     }
     assert expr == py
+
+
+# ---------------------------------------------------------------------------
+# nested decode: an Order-shaped record (array, map, nullable union, nested
+# record, enum) against pydecode, verdicts and values
+# ---------------------------------------------------------------------------
+
+_ORDER_SCHEMA = json.dumps(
+    {
+        "type": "record",
+        "name": "Order",
+        "fields": [
+            {"name": "id", "type": "long"},
+            {"name": "qty", "type": "int"},
+            {"name": "price", "type": "double"},
+            {"name": "status", "type": {"type": "enum", "name": "Status", "symbols": ["NEW", "PAID"]}},
+            {"name": "tags", "type": {"type": "array", "items": "string"}},
+            {"name": "attrs", "type": {"type": "map", "values": "long"}},
+            {"name": "note", "type": ["null", "string"], "default": None},
+            {
+                "name": "ship",
+                "type": [
+                    "null",
+                    {
+                        "type": "record",
+                        "name": "Ship",
+                        "fields": [
+                            {"name": "city", "type": "string"},
+                            {"name": "zip", "type": ["null", "int"], "default": None},
+                        ],
+                    },
+                ],
+                "default": None,
+            },
+        ],
+    }
+)
+
+_text = st.text(alphabet="abc xyz-", max_size=6)
+_int32 = st.integers(-(2**31), 2**31 - 1)
+_ship = st.fixed_dictionaries(
+    {"city": _text}, optional={"zip": st.one_of(st.none(), st.fixed_dictionaries({"int": _int32}))}
+)
+_order_good = st.fixed_dictionaries(
+    {
+        "id": st.integers(-(2**63), 2**63 - 1),
+        "qty": _int32,
+        "price": st.floats(allow_nan=False, allow_infinity=False),
+        "status": st.sampled_from(["NEW", "PAID"]),
+        "tags": st.lists(_text, max_size=3),
+        "attrs": st.dictionaries(_text, st.integers(-(2**40), 2**40), max_size=3),
+    },
+    optional={
+        "note": st.one_of(st.none(), st.fixed_dictionaries({"string": _text})),
+        "ship": st.one_of(st.none(), st.fixed_dictionaries({"Ship": _ship})),
+    },
+)
+
+# violations at every depth; string positions read any token as text by
+# the engine's convention, so no mutation puts a non-string there
+_ORDER_MUTATIONS = [
+    ("id", "12"),                                         # quoted long
+    ("id", 10**25),                                       # beyond int64
+    ("qty", 2**40),                                       # beyond int32
+    ("qty", 1.5),                                         # double at int
+    ("price", 2),                                         # integer at double
+    ("price", "1.5"),                                     # quoted double
+    ("price", "NaN"),                                     # quoted non-number
+    ("status", "LOST"),                                   # not a symbol
+    ("tags", 5),                                          # scalar at array
+    ("attrs", {"a": "x"}),                                # map value type
+    ("attrs", {"a": 10**25}),                             # map value overflow
+    ("attrs", [1]),                                       # array at map
+    ("note", "bare"),                                     # untagged union
+    ("ship", {"Nope": {"city": "x"}}),                    # unknown branch
+    ("ship", {"Ship": {"city": "x"}, "null": None}),      # two keys
+    ("ship", {"Ship": {"zip": None}}),                    # missing city
+    ("ship", {"Ship": {"city": "x", "more": 1}}),         # extra nested key
+    ("ship", {"Ship": {"city": "x", "zip": {"int": "7"}}}),  # quoted int deep
+    ("ship", {"Ship": 5}),                                # scalar at record
+    ("surprise", 1),                                      # extra root key
+    ("id", None),                                         # drop required id
+]
+
+
+@pytest.fixture(scope="module")
+def order_corpus():
+    """Generated datums, every other one carrying the next mutation kind in
+    turn, so each kind meets two different datums."""
+    datums = []
+
+    @settings(max_examples=2 * 2 * len(_ORDER_MUTATIONS), deadline=None, database=None, derandomize=True)
+    @given(_order_good)
+    def collect(datum):
+        datums.append(datum)
+
+    collect()
+    cases = []
+    for i, datum in enumerate(datums):
+        d = dict(datum)
+        if i % 2:
+            key, val = _ORDER_MUTATIONS[(i // 2) % len(_ORDER_MUTATIONS)]
+            if val is None:
+                d.pop(key)
+            else:
+                d[key] = val
+        cases.append(d)
+    return cases
+
+
+def test_differential_nested_order(spark, order_corpus):
+    ps = parse_schema(_ORDER_SCHEMA)
+    texts = [json.dumps(d) for d in order_corpus]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], ["i", "j"])
+    rows = decode_json(df, "j", ps, mode="permissive").select("i", "decoded", "_errors").collect()
+    by_i = {r["i"]: r for r in rows}
+
+    mismatches, rejected = [], 0
+    for i, d in enumerate(order_corpus):
+        try:
+            want = decode_datum(ps.root, d, ps.env)
+        except E.DatumError:
+            want = E.DatumError
+            rejected += 1
+        row = by_i[i]
+        got = row["decoded"].asDict(recursive=True) if not row["_errors"] else E.DatumError
+        if got != want:
+            mismatches.append((d, list(row["_errors"]), want))
+    assert 0 < rejected < len(order_corpus)
+    assert not mismatches, f"{len(mismatches)} of {len(order_corpus)} differ; first: {mismatches[:3]}"

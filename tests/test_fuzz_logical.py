@@ -131,8 +131,8 @@ def expected_value(kind, carrier):
     raise AssertionError(kind)
 
 
-@pytest.fixture(scope="module")
-def cases():
+def corpus() -> list[tuple[str, dict, dict]]:
+    """The seeded (schema JSON, carrier datum, kinds) cases of this module."""
     rng = random.Random(SEED * 7 + 5)
     out = []
     for _ in range(N_CASES):
@@ -146,6 +146,11 @@ def cases():
         schema = json.dumps({"type": "record", "name": f"R{SEED}", "fields": fields})
         out.append((schema, datum, kinds))
     return out
+
+
+@pytest.fixture(scope="module")
+def cases():
+    return corpus()
 
 
 class TestFuzzLogical:

@@ -272,8 +272,8 @@ def _norm(v):
     return v
 
 
-@pytest.fixture(scope="module")
-def fuzz_cases():
+def corpus() -> list[tuple[str, list]]:
+    """The seeded (schema JSON, [(kind, datum)]) corpus of this module."""
     rng = random.Random(SEED)
     cases = []
     for _ in range(N_SCHEMAS):
@@ -288,6 +288,11 @@ def fuzz_cases():
                 datums.append((name, d))
         cases.append((json.dumps(root), datums))
     return cases
+
+
+@pytest.fixture(scope="module")
+def fuzz_cases():
+    return corpus()
 
 
 def test_fuzz_expression_vs_python(spark, fuzz_cases):

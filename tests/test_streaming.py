@@ -233,6 +233,17 @@ def test_stream_decode_matches_batch(spark, sf_dir):
             )
 
 
+def test_stream_decode_decodes_each_message_once(spark, sf_dir):
+    """The window's isnotnull(ts) filter must not be pushed below the
+    decode: the executed plan of q_stream_decode holds one decoder call
+    per message, and no Python UDF."""
+    from anglerfish_spark.streaming.decode import q_stream_decode
+
+    plan = q_stream_decode(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("avro_binary_decode(") == 1, plan
+    assert "ArrowEvalPython" not in plan, plan
+
+
 def test_stream_decode_confluent_matches_batch(spark, sf_dir):
     """Confluent-framed registry consumption behind a true readStream:
     messages interleaving two schema ids decode to one reader-shaped
