@@ -66,7 +66,7 @@ def _check_enum_resolution(w: AvroEnum, r: AvroEnum, path: str) -> None:
 from ..schema.parser import ParsedSchema, parse_schema
 from ..schema.spark_convert import to_struct_type, union_field_names
 from .decoder import decode_json
-from .logical import py_carrier_to_value, py_value_to_carrier
+from .logical import py_value_to_carrier
 from .pydecode import Decoder as _PyDecoder
 
 #: spec-permitted primitive promotions (writer kind → reader kind)
@@ -434,7 +434,7 @@ def resolve_datum(
                 # value-space resolution runs in CARRIER space (inputs come
                 # from BinaryCodec.decode); pydecode lifts logical types to
                 # semantic values, so defaults must convert back down
-                out[rf.name] = _carrierize(rf.type, decoded, renv)
+                out[rf.name] = carrierize(rf.type, decoded, renv)
             else:
                 raise SchemaEvolutionError(
                     f"{path}.{rf.name}: reader field missing from writer and has no default"
@@ -485,15 +485,17 @@ def resolve_datum(
     )
 
 
-def _carrierize(t: AvroType, v, env: dict[str, AvroType]):
+def carrierize(t: AvroType, v, env: dict[str, AvroType]):
     """Semantic Python values → carrier representation (the inverse of
     pydecode's logical lift) so value-space resolution output stays
-    Avro-JSON-dumpable carrier data throughout."""
+    Avro-JSON-dumpable carrier data throughout; the streaming feed's
+    value-space fallback converts parquet's semantic values down with it
+    before :func:`resolve_datum`."""
 
     if v is None:
         return None
     if isinstance(t, AvroRecursionRef):
-        return _carrierize(env[t.fqn], v, env)
+        return carrierize(env[t.fqn], v, env)
     if isinstance(t, AvroPrimitive):
         return py_value_to_carrier(t.logical, v) if t.logical is not None else v
     if isinstance(t, AvroFixed):
@@ -503,53 +505,18 @@ def _carrierize(t: AvroType, v, env: dict[str, AvroType]):
             else v
         )
     if isinstance(t, AvroArray):
-        return [_carrierize(t.items, x, env) for x in v]
+        return [carrierize(t.items, x, env) for x in v]
     if isinstance(t, AvroMap):
-        return {k: _carrierize(t.values, x, env) for k, x in v.items()}
+        return {k: carrierize(t.values, x, env) for k, x in v.items()}
     if isinstance(t, AvroUnion):
         nn = t.non_null_members
         if len(nn) == 1:
-            return _carrierize(nn[0], v, env)
+            return carrierize(nn[0], v, env)
         names = union_field_names(t)
-        return {n: _carrierize(m, v.get(n), env) for n, m in zip(names, nn)}
+        return {n: carrierize(m, v.get(n), env) for n, m in zip(names, nn)}
     if isinstance(t, AvroRecord):
-        return {f.name: _carrierize(f.type, v.get(f.name), env) for f in t.fields}
+        return {f.name: carrierize(f.type, v.get(f.name), env) for f in t.fields}
     return v  # enum symbols, plain primitives
-
-
-def semanticize(t: AvroType, v, env: dict[str, AvroType]):
-    """Carrier representation → semantic Python values (the exact inverse
-    of :func:`_carrierize`): int days → ``date``, micros → naive-UTC
-    ``datetime``, unscaled bytes → ``Decimal`` — applied through records,
-    arrays, maps, and union shapes.  The streaming feed's value-space
-    fallback uses the pair as a bridge: parquet hands workers SEMANTIC
-    values, ``resolve_datum`` runs in CARRIER space, and the rebuilt
-    Arrow batch needs semantic values again (VERDICT r9 #3)."""
-    if v is None:
-        return None
-    if isinstance(t, AvroRecursionRef):
-        return semanticize(env[t.fqn], v, env)
-    if isinstance(t, (AvroPrimitive, AvroFixed)):
-        return py_carrier_to_value(t.logical, v) if t.logical is not None else v
-    if isinstance(t, AvroArray):
-        return [semanticize(t.items, x, env) for x in v]
-    if isinstance(t, AvroMap):
-        return {k: semanticize(t.values, x, env) for k, x in v.items()}
-    if isinstance(t, AvroUnion):
-        nn = t.non_null_members
-        if len(nn) == 1:
-            return semanticize(nn[0], v, env)
-        names = union_field_names(t)
-        return {n: semanticize(m, v.get(n), env) for n, m in zip(names, nn)}
-    if isinstance(t, AvroRecord):
-        return {f.name: semanticize(f.type, v.get(f.name), env) for f in t.fields}
-    return v  # enum symbols, plain primitives
-
-
-def carrierize(t: AvroType, v, env: dict[str, AvroType]):
-    """Public alias of :func:`_carrierize` (semantic → carrier), the
-    down-conversion half of the stream fallback's bridge."""
-    return _carrierize(t, v, env)
 
 
 def _resolve_datum_into(value, w: AvroType, r: AvroType, renv, wenv, max_depth, path):

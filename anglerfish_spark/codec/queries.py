@@ -1006,7 +1006,7 @@ def avro_ocf_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     out_dir = fresh_dir("anglerfish_ocf_typed_")
-    schema_json = write_avro_ocf_typed(o, out_dir, name="orders_slice")
+    schema_json = write_avro_ocf_typed(o, out_dir)
     back = read_avro_ocf_typed(spark, out_dir, schema_json)
     # amt round-trips as DECIMAL (the logical type under test); project it
     # as VARCHAR for the driver hash — decimal128 hashes differently via
@@ -1064,7 +1064,7 @@ def avro_ocf_native_interop(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = fresh_dir("anglerfish_native_interop_")
 
     # engine writer → native reader
-    schema_json = write_avro_ocf_typed(o, f"{base}/en", name="orders_slice")
+    schema_json = write_avro_ocf_typed(o, f"{base}/en")
     if provider is not None:
         a = spark.read.format(provider).load(f"{base}/en")
     else:
@@ -1075,7 +1075,7 @@ def avro_ocf_native_interop(spark: SparkSession, sf_dir: str) -> DataFrame:
     if provider is not None:
         o.write.format(provider).option("compression", "deflate").save(f"{base}/ne")
     else:
-        write_avro_ocf_typed(o, f"{base}/ne", name="orders_slice")
+        write_avro_ocf_typed(o, f"{base}/ne")
     b = (
         spark.read.format(FORMAT_NAME)
         .load(f"{base}/ne")

@@ -46,7 +46,7 @@ from pyspark.sql import types as T
 
 from ..codec.decoder import _call, _nullable, binary_decoder
 from ..codec.logical import py_carrier_to_value, py_value_to_carrier
-from ..errors import DatumError, UnionResolutionError
+from ..errors import DatumError, UnionResolutionError, UnrepresentableError
 from ..schema.model import (
     AvroArray,
     AvroEnum,
@@ -62,7 +62,7 @@ from ..schema.model import (
     type_name,
 )
 from ..schema.parser import ParsedSchema, parse_schema
-from ..schema.spark_convert import union_field_names
+from ..schema.spark_convert import MAX_DEPTH, union_field_names
 
 # ---------------------------------------------------------------------------
 # primitive wire encoding (Avro spec §binary encoding)
@@ -120,6 +120,15 @@ def _take(buf: bytes, pos: int, n: int) -> bytes:
     if n < 0 or pos + n > len(buf):
         raise DatumError(f"length {n} at offset {pos} overruns buffer of {len(buf)}")
     return buf[pos : pos + n]
+
+
+def _read_text(buf: bytes, pos: int) -> tuple[str, int]:
+    """A length-prefixed UTF-8 string (a string value or a map key)."""
+    n, pos = read_long(buf, pos)
+    try:
+        return _take(buf, pos, n).decode("utf-8"), pos + n
+    except UnicodeDecodeError:
+        raise DatumError(f"invalid UTF-8 in string at offset {pos}") from None
 
 
 # ---------------------------------------------------------------------------
@@ -277,19 +286,18 @@ class BinaryCodec:
             if k is Primitive.NULL:
                 return None, pos
             if k is Primitive.BOOLEAN:
-                return buf[pos] == 1, pos + 1
+                return _take(buf, pos, 1) == b"\x01", pos + 1
             if k in (Primitive.INT, Primitive.LONG):
                 return read_long(buf, pos)
             if k is Primitive.FLOAT:
-                return _struct.unpack_from("<f", buf, pos)[0], pos + 4
+                return _struct.unpack("<f", _take(buf, pos, 4))[0], pos + 4
             if k is Primitive.DOUBLE:
-                return _struct.unpack_from("<d", buf, pos)[0], pos + 8
+                return _struct.unpack("<d", _take(buf, pos, 8))[0], pos + 8
             if k is Primitive.BYTES:
                 n, pos = read_long(buf, pos)
                 return _take(buf, pos, n), pos + n
             if k is Primitive.STRING:
-                n, pos = read_long(buf, pos)
-                return _take(buf, pos, n).decode("utf-8"), pos + n
+                return _read_text(buf, pos)
         if isinstance(t, AvroEnum):
             i, pos = read_long(buf, pos)
             if not 0 <= i < len(t.symbols):
@@ -319,9 +327,7 @@ class BinaryCodec:
                     _, pos = read_long(buf, pos)
                     n = -n
                 for _ in range(n):
-                    klen, pos = read_long(buf, pos)
-                    key = _take(buf, pos, klen).decode("utf-8")
-                    pos += klen
+                    key, pos = _read_text(buf, pos)
                     out[key], pos = self._dec(t.values, buf, pos)
         if isinstance(t, AvroUnion):
             idx, pos = read_long(buf, pos)
@@ -369,15 +375,15 @@ class BinaryCodec:
             if k is Primitive.NULL:
                 return lambda buf, pos: (None, pos)
             if k is Primitive.BOOLEAN:
-                return lambda buf, pos: (buf[pos] == 1, pos + 1)
+                return lambda buf, pos: (_take(buf, pos, 1) == b"\x01", pos + 1)
             if k in (Primitive.INT, Primitive.LONG):
                 return read_long
             if k is Primitive.FLOAT:
-                unpack = _struct.unpack_from
-                return lambda buf, pos: (unpack("<f", buf, pos)[0], pos + 4)
+                unpack = _struct.unpack
+                return lambda buf, pos: (unpack("<f", _take(buf, pos, 4))[0], pos + 4)
             if k is Primitive.DOUBLE:
-                unpack = _struct.unpack_from
-                return lambda buf, pos: (unpack("<d", buf, pos)[0], pos + 8)
+                unpack = _struct.unpack
+                return lambda buf, pos: (unpack("<d", _take(buf, pos, 8))[0], pos + 8)
             if k is Primitive.BYTES:
 
                 def dec_bytes(buf, pos):
@@ -386,12 +392,7 @@ class BinaryCodec:
 
                 return dec_bytes
             if k is Primitive.STRING:
-
-                def dec_string(buf, pos):
-                    n, pos = read_long(buf, pos)
-                    return _take(buf, pos, n).decode("utf-8"), pos + n
-
-                return dec_string
+                return _read_text
         if isinstance(t, AvroEnum):
             symbols = t.symbols
             n_sym = len(symbols)
@@ -438,9 +439,7 @@ class BinaryCodec:
                         _, pos = read_long(buf, pos)
                         n = -n
                     for _ in range(n):
-                        klen, pos = read_long(buf, pos)
-                        key = _take(buf, pos, klen).decode("utf-8")
-                        pos += klen
+                        key, pos = _read_text(buf, pos)
                         out[key], pos = dec_val(buf, pos)
 
             return dec_map
@@ -709,7 +708,7 @@ def as_avro_json(t, v: Any, env: dict | None = None):
             m = nn[0]
             return {_branch_json_key(m): as_avro_json(m, v, env)}
         # decoded repr: dict keyed by union_field_names — the SAME
-        # collision-qualified names _carrierize/to_struct_type emit
+        # collision-qualified names carrierize/to_struct_type emit
         # (member_0_X when short names collide), not the bare branch name.
         for key, m in zip(union_field_names(t), nn):
             inner = v.get(key)
@@ -823,21 +822,26 @@ def _compile_json_view(root: AvroType, env: dict):
 
 def _compile_semantic_view(root: AvroType, env: dict):
     """Schema-compiled :func:`_semantic_value` (same contract as
-    :func:`_compile_json_view`: branch-for-branch mirror of the
-    interpreted walk, built once per schema)."""
-    named: dict[str, Any] = {}
+    :func:`_compile_json_view`), built once per schema and unrolled the
+    way ``to_struct_type`` unrolls recursion (to its default bound,
+    ``MAX_DEPTH``).  A datum reaching a position the unroll truncates
+    raises pydecode's ``UnrepresentableError`` text, labelled with the
+    decode program's path (``codec.decoder._program``), so it equals the
+    JVM reader's."""
+    depth: dict[str, int] = {}
 
-    def comp(t: AvroType):
-        while isinstance(t, AvroRecursionRef):
-            fn = named.get(t.fqn)
-            if fn is None:
-                cell = []
-                named[t.fqn] = lambda v: cell[0](v)
-                real = comp(env[t.fqn])
-                cell.append(real)
-                named[t.fqn] = real
-                return real
-            return fn
+    def comp(t: AvroType, path: str):
+        if isinstance(t, AvroRecursionRef):
+            if depth.get(t.fqn, 0) < MAX_DEPTH:
+                return comp(env[t.fqn], path)
+            deep = f"{path}: datum exceeds recursion depth bound {MAX_DEPTH} for {t.fqn!r}"
+
+            def sem_truncated(v):
+                if v is None:
+                    return None
+                raise UnrepresentableError(deep)
+
+            return sem_truncated
         if isinstance(t, (AvroPrimitive, AvroFixed)):
             logical = t.logical
             if logical is None:
@@ -846,21 +850,21 @@ def _compile_semantic_view(root: AvroType, env: dict):
         if isinstance(t, AvroEnum):
             return lambda v: v
         if isinstance(t, AvroArray):
-            item_fn = comp(t.items)
+            item_fn = comp(t.items, f"{path}[]")
             return lambda v: None if v is None else [item_fn(x) for x in v]
         if isinstance(t, AvroMap):
-            val_fn = comp(t.values)
+            val_fn = comp(t.values, f"{path}.{{}}")
             return lambda v: (
                 None if v is None else {k: val_fn(x) for k, x in v.items()}
             )
         if isinstance(t, AvroUnion):
             nn = t.non_null_members
-            if len(nn) == 1:
-                m_fn = comp(nn[0])
-                return m_fn if _is_none_preserving(nn[0]) else (
-                    lambda v: None if v is None else m_fn(v)
-                )
-            pairs = [(k, comp(m)) for k, m in zip(union_field_names(t), nn)]
+            if len(nn) == 1:  # every compiled node maps None to None
+                return comp(nn[0], f"{path}.{type_name(nn[0])}")
+            pairs = [
+                (k, comp(m, f"{path}.{type_name(m)}"))
+                for k, m in zip(union_field_names(t), nn)
+            ]
 
             def sem_union(v):
                 if v is None:
@@ -872,7 +876,12 @@ def _compile_semantic_view(root: AvroType, env: dict):
 
             return sem_union
         if isinstance(t, AvroRecord):
-            field_fns = [(f.name, comp(f.type)) for f in t.fields]
+            n = depth.get(t.fqn, 0)
+            depth[t.fqn] = n + 1
+            try:
+                field_fns = [(f.name, comp(f.type, f"{path}.{f.name}")) for f in t.fields]
+            finally:
+                depth[t.fqn] = n
 
             def sem_record(v):
                 if v is None:
@@ -889,15 +898,7 @@ def _compile_semantic_view(root: AvroType, env: dict):
 
         return sem_unknown
 
-    return comp(root)
-
-
-def _is_none_preserving(t: AvroType) -> bool:
-    """True when the compiled semantic view for ``t`` already maps
-    None → None (saves a wrapper closure for the common nullable case)."""
-    return isinstance(
-        t, (AvroArray, AvroMap, AvroRecord, AvroUnion)
-    ) or (isinstance(t, (AvroPrimitive, AvroFixed)) and t.logical is not None)
+    return comp(root, "$")
 
 
 def _bytes_to_b64(o: Any) -> str:

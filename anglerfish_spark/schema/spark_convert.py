@@ -136,6 +136,11 @@ def union_field_names(u: AvroUnion) -> list[str]:
     return names
 
 
+#: :func:`to_struct_type`'s default unroll bound, shared with the typed
+#: decoders' compiled view, whose rows must fit the struct declared here
+MAX_DEPTH = 10
+
+
 class _Converter:
     def __init__(self, env: dict[str, AvroType], max_depth: int):
         self.env = env
@@ -224,7 +229,7 @@ class _Converter:
 
 
 def to_struct_type(
-    t: AvroType, env: dict[str, AvroType] | None = None, max_depth: int = 10
+    t: AvroType, env: dict[str, AvroType] | None = None, max_depth: int = MAX_DEPTH
 ) -> T.DataType:
     """Convert an Avro type tree to a Spark type, unrolling recursion."""
     return _Converter(env or {}, max_depth).convert(t)[0]

@@ -13,9 +13,12 @@ of ``count, byte-size, payload, sync``; null codec):
   emits canonical JSON rows → the strict JSON decoder lifts them to typed
   columns.  At 100 TB the parallel unit is the file — write many
   right-sized files (128-512 MB), the standard OCF layout.
-* **write**: one OCF file per partition via ``mapInArrow`` (executor-side
-  writes to a shared filesystem path, like every Spark sink; Arrow batches
-  keep null vs double-NaN distinct, which pandas float64 cannot).
+* **write**: ``write_avro_ocf`` strict-decodes a JSON-text column and
+  writes one OCF file per partition via ``mapInPandas``; typed writes
+  (:func:`write_avro_ocf_typed`) go through the ``avro_ocf`` connector's
+  writer (sources/ocf_datasource.py): one staged file per partition,
+  encoded from Arrow batches (null and double NaN kept distinct, which
+  pandas float64 cannot), renamed into place at commit.
 
 This is deliberately *not* a port of the reference's in-memory
 ``GenericData`` interop (I4/I5) — it is the file-level capability the
@@ -31,7 +34,6 @@ import uuid
 from collections.abc import Iterator
 
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -237,71 +239,23 @@ def read_avro_ocf(
     )
 
 
-def _from_arrow(dt, v):
-    """pyarrow ``to_pylist()`` cell → plain-Python datum for BinaryCodec.
-
-    Arrow distinguishes null from NaN at the storage level, so nulls arrive
-    as ``None`` and double NaN arrives as ``float('nan')`` — a legitimate
-    Avro double value that passes through unchanged (the old pandas path
-    conflated the two and silently nulled NaN).  Only structural fixups are
-    needed: Arrow map cells are ``[(k, v), …]`` tuple lists → dict; list
-    and struct cells recurse on their element types."""
-    if v is None:
-        return None
-    if pa.types.is_map(dt):
-        return {k: _from_arrow(dt.item_type, x) for k, x in v}
-    if pa.types.is_list(dt) or pa.types.is_large_list(dt):
-        return [_from_arrow(dt.value_type, x) for x in v]
-    if pa.types.is_struct(dt):
-        return {f.name: _from_arrow(f.type, v[f.name]) for f in dt}
-    return v
-
-
-def write_avro_ocf_typed(df: DataFrame, out_dir: str, name: str = "record") -> str:
-    """Typed DataFrame → OCF files, one per partition — the engine's
-    ``df.write.format("avro")`` equivalent without the spark-avro connector.
+def write_avro_ocf_typed(df: DataFrame, out_dir: str) -> str:
+    """Typed DataFrame → OCF files under ``out_dir`` (appended), one per
+    partition, through the ``avro_ocf`` connector's writer — the engine's
+    ``df.write.format("avro")`` equivalent without the spark-avro
+    connector, with its ``.tmp`` staging and commit-time rename.
 
     The writer schema is derived from the DataFrame's StructType via
-    ``from_struct_type`` (every column a nullable union; temporal and
-    decimal columns export as spec logical types on their carriers), and
-    rows encode straight from Arrow batches to the wire — no JSON hop.
-    Returns the writer schema JSON (embed in readers / registries).
-    """
-    from ..schema.printer import to_avsc
-    from ..schema.spark_convert import from_struct_type
+    ``from_struct_type`` (a record named ``record``; every nullable column
+    a union with null; temporal and decimal columns export as spec logical
+    types on their carriers), and rows encode straight from Arrow batches
+    to the wire — no JSON hop.  Returns the writer schema JSON (embed in
+    readers / registries)."""
+    from .ocf_datasource import FORMAT_NAME, register, writer_schema_json
 
-    rec = from_struct_type(df.schema, name)
-    schema_json = to_avsc(rec)
-    os.makedirs(out_dir, exist_ok=True)
-    cols = list(df.columns)
-
-    def _write(batches):
-        # mapInArrow: RecordBatch cells keep null vs NaN distinct (pandas
-        # float64 would conflate them), and to_pylist() yields plain Python
-        # (datetime/date/Decimal/bytes) the codec down-converts to carriers.
-        import pyarrow as pa
-
-        values = []
-        for batch in batches:
-            types = {c: batch.schema.field(c).type for c in cols}
-            for row in batch.to_pylist():
-                values.append({c: _from_arrow(types[c], row[c]) for c in cols})
-        path = os.path.join(out_dir, f"part-{uuid.uuid4().hex}.avro")
-        with open(path, "wb") as f:
-            f.write(encode_ocf(values, schema_json))
-        yield pa.record_batch(
-            [pa.array([path], pa.string()), pa.array([len(values)], pa.int64())],
-            names=["path", "n_rows"],
-        )
-
-    stats = df.mapInArrow(
-        _write,
-        T.StructType(
-            [T.StructField("path", T.StringType()), T.StructField("n_rows", T.LongType())]
-        ),
-    )
-    stats.collect()  # driver gets (path, count) stats only — never data rows
-    return schema_json
+    register(df.sparkSession)
+    df.write.format(FORMAT_NAME).mode("append").save(out_dir)
+    return writer_schema_json(df.schema)
 
 
 def read_avro_ocf_typed(

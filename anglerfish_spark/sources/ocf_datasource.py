@@ -7,7 +7,7 @@ never implemented) lands here as a *first-class datasource*: after
 do — ``spark.read.format("avro_ocf").load(dir)``,
 ``df.write.format("avro_ocf").mode("overwrite").save(dir)`` — with schema
 inference from the file headers, per-file read parallelism, and
-Arrow-batched writes.  It packages the same differential-tested codec the
+Arrow-batched reads and writes.  It packages the same differential-tested codec the
 functional API uses (sources/avro_ocf.py); use that API when you need
 reader-schema resolution options, use this one when you want the
 connector ergonomics.
@@ -15,10 +15,16 @@ connector ergonomics.
 Scale notes: planning lists files and reads ONE header driver-side
 (metadata, not data); each file is an InputPartition, so read parallelism
 is the file count — the standard OCF layout (many 128-512 MB files).
-Writes stream Arrow record batches per partition into one OCF file each
-(null/NaN kept distinct, same rule as write_avro_ocf_typed).  The decode
-is Python (this is the documented fallback — spark-avro's JVM decode
-replaces it where the connector exists), Arrow-batched on the write side.
+Reads are Arrow-batched: a task decodes its file, then lazily resolves
+each datum into the reader schema when the file's writer differs and
+lifts it to Spark values with the typed binary decoders' compiled view
+(``functions.avro_binary._cached_semantic_view``), yielding bounded
+record batches — so instants come back UTC whatever the worker's time
+zone.  Writes stream Arrow record batches per partition into one OCF
+file each (null and NaN kept distinct); ``write_avro_ocf_typed`` writes
+through them.
+The decode is Python (the documented fallback — spark-avro's JVM decode
+replaces it where the connector exists).
 """
 
 from __future__ import annotations
@@ -27,8 +33,10 @@ import glob as _glob
 import os
 import uuid
 from dataclasses import dataclass
+from itertools import islice
 from typing import Iterator
 
+import pyarrow as pa
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
@@ -40,58 +48,19 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from ..schema.model import (
-    AvroArray,
-    AvroEnum,
-    AvroFixed,
-    AvroMap,
-    AvroPrimitive,
-    AvroRecord,
-    AvroRecursionRef,
-    AvroUnion,
-)
-from ..codec.logical import py_carrier_to_value
 from ..schema.parser import parse_schema
-from ..schema.spark_convert import to_struct_type, union_field_names
+from ..schema.printer import to_avsc
+from ..schema.spark_convert import from_struct_type, to_struct_type
 
 FORMAT_NAME = "avro_ocf"
+
+_BATCH_ROWS = 10_000  # rows per read batch: Spark's default arrow.maxRecordsPerBatch
 
 
 def _files(path: str) -> list[str]:
     if os.path.isdir(path):
         return sorted(_glob.glob(os.path.join(path, "*.avro")))
     return sorted(_glob.glob(path))
-
-
-def _repr_to_row(t, v, env):
-    """Decoded representation → Spark row value shaped like
-    ``to_struct_type``: records and tagged unions become tuples (field
-    order / union_field_names order), semantic logical values (date,
-    datetime, Decimal, …) pass through to their Catalyst types."""
-    if isinstance(t, AvroRecursionRef):
-        return _repr_to_row(env[t.fqn], v, env)
-    if v is None:
-        return None
-    if isinstance(t, AvroRecord):
-        return tuple(_repr_to_row(f.type, v.get(f.name), env) for f in t.fields)
-    if isinstance(t, AvroUnion):
-        nn = t.non_null_members
-        if len(nn) == 1:
-            return _repr_to_row(nn[0], v, env)
-        return tuple(
-            _repr_to_row(m, v.get(name), env) for name, m in zip(union_field_names(t), nn)
-        )
-    if isinstance(t, AvroArray):
-        return [_repr_to_row(t.items, x, env) for x in v]
-    if isinstance(t, AvroMap):
-        return {k: _repr_to_row(t.values, x, env) for k, x in v.items()}
-    if isinstance(t, (AvroPrimitive, AvroFixed)) and getattr(t, "logical", None) is not None:
-        # BinaryCodec.decode returns carrier values (long micros, two's-
-        # complement bytes, …); lift to the semantic Catalyst value here
-        return py_carrier_to_value(t.logical, v)
-    if isinstance(t, (AvroPrimitive, AvroEnum, AvroFixed)):
-        return bytes(v) if isinstance(v, (bytearray, memoryview)) else v
-    raise TypeError(f"unexpected schema node {t!r}")
 
 
 class _OcfReader(DataSourceReader):
@@ -105,26 +74,57 @@ class _OcfReader(DataSourceReader):
             raise FileNotFoundError(f"no .avro files under {self.path!r}")
         return [InputPartition(f) for f in files]
 
-    def read(self, partition: InputPartition) -> Iterator[tuple]:
+    def read(self, partition: InputPartition) -> Iterator[pa.RecordBatch]:
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         from ..codec.evolve import resolve_datum
-        from ..functions.avro_binary import _cached_schema
+        from ..functions.avro_binary import _cached_schema, _cached_semantic_view
         from .avro_ocf import decode_ocf_with_schema
 
         rps = _cached_schema(self.reader_schema_json)
+        lift = _cached_semantic_view(self.reader_schema_json)
+        schema = to_arrow_schema(to_struct_type(rps.root, rps.env))
         with open(partition.value, "rb") as f:
             values, wjson = decode_ocf_with_schema(f.read())
-        wps = _cached_schema(wjson)
-        same = wjson == self.reader_schema_json
-        for v in values:
-            if not same:  # per-file writer schema → reader resolution
-                v = resolve_datum(v, wps.root, rps.root, rps.env, wps.env)
-            yield _repr_to_row(rps.root, v, rps.env)
+        if wjson != self.reader_schema_json:  # per-file writer → reader resolution
+            wps = _cached_schema(wjson)
+            values = (resolve_datum(v, wps.root, rps.root, rps.env, wps.env) for v in values)
+        # resolve and lift lazily, one bounded batch at a time: the peak
+        # is the decoded file plus one batch, not extra whole-file copies
+        rows = (lift(v) for v in values)
+        while chunk := list(islice(rows, _BATCH_ROWS)):
+            yield pa.RecordBatch.from_pylist(chunk, schema=schema)
 
 
 @dataclass
 class _OcfCommit(WriterCommitMessage):
     path: str
     n_rows: int
+
+
+def writer_schema_json(schema: StructType) -> str:
+    """The Avro schema the connector writes a DataFrame of ``schema`` with."""
+    return to_avsc(from_struct_type(schema, "record"))
+
+
+def _from_arrow(dt, v):
+    """pyarrow ``to_pylist()`` cell → plain-Python datum for BinaryCodec.
+
+    Arrow distinguishes null from NaN at the storage level, so nulls arrive
+    as ``None`` and double NaN arrives as ``float('nan')`` — a legitimate
+    Avro double value that passes through unchanged (the old pandas path
+    conflated the two and silently nulled NaN).  Only structural fixups are
+    needed: Arrow map cells are ``[(k, v), …]`` tuple lists → dict; list
+    and struct cells recurse on their element types."""
+    if v is None:
+        return None
+    if pa.types.is_map(dt):
+        return {k: _from_arrow(dt.item_type, x) for k, x in v}
+    if pa.types.is_list(dt) or pa.types.is_large_list(dt):
+        return [_from_arrow(dt.value_type, x) for x in v]
+    if pa.types.is_struct(dt):
+        return {f.name: _from_arrow(f.type, v[f.name]) for f in dt}
+    return v
 
 
 def _stage_partition(path: str, iterator, writer_schema_json: str) -> _OcfCommit:
@@ -134,7 +134,7 @@ def _stage_partition(path: str, iterator, writer_schema_json: str) -> _OcfCommit
     sink needs: a task that dies mid-write leaves only a ``.tmp`` the
     ``*.avro`` glob never lists (no truncated-file reads, no duplicate
     rows from retried attempts — only the committed attempt is renamed)."""
-    from .avro_ocf import _from_arrow, encode_ocf
+    from .avro_ocf import encode_ocf
 
     values = []
     cols = types = None
@@ -262,7 +262,7 @@ class _OcfStreamReader(DataSourceStreamReader):
         )
         return [InputPartition(f) for f in new]
 
-    def read(self, partition: InputPartition) -> Iterator[tuple]:
+    def read(self, partition: InputPartition) -> Iterator[pa.RecordBatch]:
         return _OcfReader(self.path, self.reader_schema_json).read(partition)
 
     def commit(self, end: dict) -> None:
@@ -287,9 +287,7 @@ class _OcfStreamWriter(DataSourceStreamArrowWriter):
         return _stage_partition(self.path, iterator, self.writer_schema_json)
 
     def commit(self, messages, batchId: int) -> None:
-        import glob as _g
-
-        for stale in _g.glob(os.path.join(self.path, f"part-{batchId:010d}-*.avro")):
+        for stale in _glob.glob(os.path.join(self.path, f"part-{batchId:010d}-*.avro")):
             os.remove(stale)
         for i, m in enumerate(messages):
             if m is not None:
@@ -352,14 +350,9 @@ class AvroOcfDataSource(DataSource):
         return _OcfReader(self.options["path"], self._reader_schema_json())
 
     def writer(self, schema: StructType, overwrite: bool) -> _OcfWriter:
-        from ..schema.printer import to_avsc
-        from ..schema.spark_convert import from_struct_type
-
         # overwrite deletes the OLD files only at commit time (after every
         # task staged successfully) — a failed job leaves data untouched
-        return _OcfWriter(
-            self.options["path"], to_avsc(from_struct_type(schema, "record")), overwrite
-        )
+        return _OcfWriter(self.options["path"], writer_schema_json(schema), overwrite)
 
     def streamReader(self, schema: StructType) -> _OcfStreamReader:
         lag = self.options.get("compaction_lag_sec")
@@ -370,12 +363,7 @@ class AvroOcfDataSource(DataSource):
         )
 
     def streamWriter(self, schema: StructType, overwrite: bool) -> _OcfStreamWriter:
-        from ..schema.printer import to_avsc
-        from ..schema.spark_convert import from_struct_type
-
-        return _OcfStreamWriter(
-            self.options["path"], to_avsc(from_struct_type(schema, "record"))
-        )
+        return _OcfStreamWriter(self.options["path"], writer_schema_json(schema))
 
 
 def register(spark) -> None:

@@ -8,18 +8,20 @@ framing (0xC3 0x01 + CRC-64-AVRO fingerprint, ``_unframe_single_object``
 and ``single_object_decode`` in functions/avro_binary.py) is exactly what a
 registry-aware Kafka consumer sees per record — so this module closes the
 loop: a source relation in Kafka's wire shape (``value binary, topic,
-partition, offset``) flows through ``single_object_decode`` → the strict JSON decoder
-→ event-time windows, and the SAME pipeline function runs on a batch
+partition, offset``) flows through ``single_object_decode_typed`` (the
+fingerprint-checked JVM binary decode straight to the typed struct) →
+event-time windows, and the SAME pipeline function runs on a batch
 DataFrame (driver-checkable against a SQL oracle) or behind
 ``readStream`` (true streaming path, tests/test_streaming.py).
 
 On a real cluster the source line becomes ``spark.readStream
 .format("kafka")...`` — everything downstream of ``value`` is unchanged;
-that swap is the design point.  Scale: the decode is one Arrow-batched
-pandas UDF per message batch (the documented UDF-surface fallback for
-binary Avro — spark-avro's ``from_avro`` replaces it where the connector
-exists), then the windowed agg is a map-side-combinable hash aggregate
-keyed by (window, type); watermarks bound streaming state.
+that swap is the design point.  Scale: the decode is one JVM call per
+message (no Python worker), then the windowed agg is a
+map-side-combinable hash aggregate keyed by (window, type); watermarks
+bound streaming state.  The permissive route keeps the JSON hop
+(``single_object_decode_permissive`` → the JSON decoder) for its error
+channel.
 """
 
 from __future__ import annotations

@@ -156,6 +156,32 @@ class TestMalformedInput:
         with pytest.raises(DatumError, match="overruns"):
             codec.decode(out.getvalue())
 
+    def test_short_reads_and_bad_utf8_dead_letter(self, spark):
+        """A double, float or boolean read past the end and invalid UTF-8
+        are DatumErrors: the permissive decoder dead-letters those frames
+        while the good row of the same batch decodes."""
+        from pyspark.sql import functions as F
+
+        from anglerfish_spark.functions.avro_binary import avro_decode_permissive
+
+        schema = (
+            '{"type":"record","name":"p","fields":[{"name":"x","type":"double"},'
+            '{"name":"f","type":"float"},{"name":"b","type":"boolean"},'
+            '{"name":"s","type":"string"}]}'
+        )
+        good = BinaryCodec(schema).encode({"x": 1.5, "f": 2.5, "b": True, "s": "é"})
+        frames = [good, good[:2], good[:9], good[:12], good[:13] + b"\x02\xff"]
+        df = spark.createDataFrame([(i, bytearray(f)) for i, f in enumerate(frames)], "i int, m binary")
+        rows = df.select("i", avro_decode_permissive("m", schema).alias("d")).orderBy("i").collect()
+        assert json.loads(rows[0].d.value) == {"x": 1.5, "f": 2.5, "b": True, "s": "é"}
+        assert rows[0].d.error is None
+        assert [(r.d.value, r.d.error) for r in rows[1:]] == [
+            (None, "DatumError: length 8 at offset 0 overruns buffer of 2"),
+            (None, "DatumError: length 4 at offset 8 overruns buffer of 9"),
+            (None, "DatumError: length 1 at offset 12 overruns buffer of 12"),
+            (None, "DatumError: invalid UTF-8 in string at offset 14"),
+        ]
+
 
 class TestSingleObjectEncoding:
     """Avro spec single-object framing: C3 01 + CRC-64-AVRO fingerprint."""

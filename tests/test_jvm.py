@@ -7,6 +7,7 @@ from __future__ import annotations
 import ast
 import os
 import pathlib
+import re
 
 import pytest
 
@@ -195,6 +196,7 @@ def test_typed_binary_differential(spark):
 
 _ENUM = '{"type":"record","name":"E","fields":[{"name":"e","type":{"type":"enum","name":"Suit","symbols":["A","B"]}}]}'
 _LONG = '{"type":"record","name":"L","fields":[{"name":"n","type":"long"}]}'
+_ONE = '{"type":"record","name":"One","fields":[{"name":"v","type":"%s"}]}'
 
 
 def test_typed_binary_error_texts(spark):
@@ -202,7 +204,8 @@ def test_typed_binary_error_texts(spark):
     ``DatumError`` text: the raw framing over ``TestPublicDecoderSurface``'s
     bad frames (its single-object ones read as bodies; that class checks
     the single-object framing against the same texts), an out-of-range
-    enum index and an over-long varint."""
+    enum index, an over-long varint, double, float and boolean reads past
+    the end, and invalid UTF-8 in a string."""
     import pandas as pd
 
     from anglerfish_spark.errors import DatumError
@@ -213,6 +216,12 @@ def test_typed_binary_error_texts(spark):
     _, bad = _pin_frames()
     cases = [("raw", _PIN, case, frame) for case, frame in {**bad["so"], **bad["raw"]}.items()]
     cases += [("raw", _ENUM, "enum", b"\x04"), ("so", _LONG, "varint", _single_object_header(_LONG) + b"\xff" * 11)]
+    cases += [
+        ("raw", _ONE % "double", "short_double", b"\x00\x00"),
+        ("raw", _ONE % "float", "short_float", b"\x00"),
+        ("raw", _ONE % "boolean", "short_boolean", b""),
+        ("raw", _ONE % "string", "bad_utf8", b"\x02\xff"),
+    ]
     got, want = {}, {}
     for framing, schema_json, case, frame in cases:
         with pytest.raises(DatumError) as ei:
@@ -220,16 +229,23 @@ def test_typed_binary_error_texts(spark):
         want[case] = f"{type(ei.value).__name__}: {ei.value}"
         got[case] = _jvm_error(spark, _jvm_typed(framing, schema_json), frame)
     assert got == want
-    assert len(got) == 8
+    assert len(got) == 12
 
 
-def test_typed_binary_too_deep_is_pydecode_error(spark):
-    """A datum nested past the decode depth, where the Python typed path
-    fails inside Arrow, fails with pydecode's text for the same datum."""
+def test_typed_binary_too_deep_is_pydecode_error(spark, tmp_path):
+    """A datum nested past the decode depth fails with pydecode's text for
+    the same datum: in the JVM reader, the registry typed decoder and the
+    ``avro_ocf`` connector (the last two lift through the compiled view)."""
     from anglerfish_spark.codec.pydecode import decode_datum
     from anglerfish_spark.errors import UnrepresentableError
-    from anglerfish_spark.functions.avro_binary import BinaryCodec
+    from anglerfish_spark.functions.avro_binary import (
+        BinaryCodec,
+        _single_object_header,
+        single_object_decode_registry_typed,
+    )
     from anglerfish_spark.schema import parse_schema
+    from anglerfish_spark.sources.avro_ocf import encode_ocf
+    from anglerfish_spark.sources.ocf_datasource import FORMAT_NAME, register
 
     from .test_avro_binary import _jvm_error
     from .test_schema import F1_LINKED_LIST
@@ -241,5 +257,16 @@ def test_typed_binary_too_deep_is_pydecode_error(spark):
         datum = {"value": i, "tail": None if datum is None else {"foo": datum}}
     with pytest.raises(UnrepresentableError) as ei:
         decode_datum(ps.root, datum, ps.env)
+    text = f"UnrepresentableError: {ei.value}"
     body = BinaryCodec(ps).encode(value)
-    assert _jvm_error(spark, _jvm_typed("raw", F1_LINKED_LIST), body) == f"UnrepresentableError: {ei.value}"
+    assert _jvm_error(spark, _jvm_typed("raw", F1_LINKED_LIST), body) == text
+
+    frame = _single_object_header(F1_LINKED_LIST) + body
+    df = spark.createDataFrame([(bytearray(frame),)], "m binary")
+    with pytest.raises(Exception, match=re.escape(text)):
+        df.select(single_object_decode_registry_typed("m", [F1_LINKED_LIST], F1_LINKED_LIST)).collect()
+
+    (tmp_path / "part-0.avro").write_bytes(encode_ocf([value], F1_LINKED_LIST))
+    register(spark)
+    with pytest.raises(Exception, match=re.escape(text)):
+        spark.read.format(FORMAT_NAME).load(str(tmp_path)).collect()

@@ -407,7 +407,7 @@ class TestOcfTyped:
 
         df = spark.createDataFrame(rows, schema)
         out = str(tmp_path / "ocf")
-        avsc = write_avro_ocf_typed(df, out, name="r")
+        avsc = write_avro_ocf_typed(df, out)
         back = read_avro_ocf_typed(spark, out, avsc)
         assert back.schema == schema
         assert sorted(tuple(r) for r in back.collect()) == sorted(rows)
@@ -420,7 +420,7 @@ class TestOcfTyped:
 
         df = spark.createDataFrame([(1,)], T.StructType([T.StructField("id", T.LongType())]))
         out = str(tmp_path / "ocf2")
-        write_avro_ocf_typed(df, out, name="r")
+        write_avro_ocf_typed(df, out)
         reader = json.dumps(
             {
                 "type": "record",

@@ -315,3 +315,24 @@ def test_only_memo_times_stages_and_makes_temp_dirs():
                     if a.name in banned
                 )
     assert bad == []
+
+
+def test_only_the_decoders_lift_logical_carriers():
+    """``py_carrier_to_value`` (carrier → Spark value) is called only by
+    pydecode and the binary codec's lift: every other path from decoded
+    Avro values to Spark rows goes through the compiled semantic view
+    (``functions.avro_binary._cached_semantic_view``)."""
+    root = pathlib.Path(__file__).resolve().parent.parent / "anglerfish_spark"
+    allowed = {"codec/pydecode.py", "functions/avro_binary.py"}
+    bad = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel in allowed:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call):
+                fn = node.func
+                name = fn.id if isinstance(fn, ast.Name) else getattr(fn, "attr", None)
+                if name == "py_carrier_to_value":
+                    bad.append(f"{rel}:{node.lineno}")
+    assert bad == []

@@ -274,6 +274,39 @@ class TestOffsetCompaction:
             assert run_once() == set(range(8))
 
 
+def test_instants_read_back_utc_in_any_worker_time_zone(tmp_path, monkeypatch):
+    """A TIMESTAMP read under a worker time zone ahead of UTC comes back
+    as the instant written: the read goes through the conversion the
+    worker applies to a reader's output, no Spark job."""
+    import datetime as dt
+    import time
+
+    from pyspark.sql.datasource import InputPartition
+    from pyspark.sql.worker.plan_data_source_read import records_to_arrow_batches
+
+    from anglerfish_spark.sources.avro_ocf import encode_ocf
+    from anglerfish_spark.sources.ocf_datasource import AvroOcfDataSource
+
+    schema = (
+        '{"type":"record","name":"r","fields":['
+        '{"name":"ts","type":{"type":"long","logicalType":"timestamp-micros"}}]}'
+    )
+    noon = dt.datetime(2024, 3, 1, 12, tzinfo=dt.timezone.utc)
+    f = tmp_path / "part-0.avro"
+    f.write_bytes(encode_ocf([{"ts": noon}], schema))
+    monkeypatch.setenv("TZ", "Asia/Kolkata")
+    time.tzset()
+    try:
+        ds = AvroOcfDataSource({"path": str(tmp_path)})
+        out = ds.reader(ds.schema()).read(InputPartition(str(f)))
+        (batch,) = records_to_arrow_batches(out, 100, ds.schema(), ds)
+        got = batch.column("ts")[0].as_py()
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert got.astimezone(dt.timezone.utc) == noon
+
+
 def test_staged_tmp_files_are_invisible_to_readers(spark, tmp_path):
     """The two-phase write protocol: a dead task's .avro.tmp staging file
     must never be listed by batch or streaming reads."""

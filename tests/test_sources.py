@@ -67,7 +67,7 @@ class TestTypedOcfNanNull:
             [(1, float("nan")), (2, None), (3, 2.5)], "id bigint, x double"
         )
         out = str(tmp_path)
-        schema_json = write_avro_ocf_typed(df, out, name="nan_case")
+        schema_json = write_avro_ocf_typed(df, out)
         back = {r.id: r.x for r in read_avro_ocf_typed(spark, out, schema_json).collect()}
         assert math.isnan(back[1])
         assert back[2] is None
@@ -151,7 +151,7 @@ class TestAvroFormatProvider:
         if provider is None:
             pytest.skip("no JVM avro file format on this classpath")
         df = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "s"])
-        write_avro_ocf_typed(df, str(tmp_path / "t"), name="r")
+        write_avro_ocf_typed(df, str(tmp_path / "t"))
         back = spark.read.format(provider).load(str(tmp_path / "t"))
         assert sorted((r["k"], r["s"]) for r in back.collect()) == [(1, "a"), (2, "b")]
 
