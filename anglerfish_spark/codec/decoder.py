@@ -342,7 +342,7 @@ def decode_json_python(
         from .pydecode import compile_decoder
 
         # schema-compiled once per task (r14-opt, guide §4.2) — exception
-        # type+message identical to the _PyDecoder reference twin by the
+        # type+message identical to the pydecode.Decoder reference twin by the
         # differential suite, so the permissive error column is unchanged
         dec_fn = compile_decoder(root, env, max_depth)
         for pdf in batches:

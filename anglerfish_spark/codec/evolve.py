@@ -1,41 +1,53 @@
-"""Avro schema resolution (reader/writer evolution).
+"""Avro schema resolution (reader/writer evolution) as one plan.
 
 The reference models the ingredients — field aliases in
 ``AvroRecordFieldMetaData`` (AvroData.scala:62) and field defaults (D8,
 AvroJsonFAlgebras.scala:501-506) — but never wires the Avro-spec
 resolution rules; its README roadmap points at schema-registry use.  The
-engine completes the path, column-level:
+engine completes the path with ONE resolution plan per (writer, reader)
+pair (:func:`resolution_plan`, the shape of Avro's ``Resolver`` action
+tree, with the rules of Avro's ``SchemaCompatibility``):
 
-decode with the WRITER schema (one parse), then project into the READER
-shape with pure ``Column`` expressions — no re-parse, no Python:
-
-* fields match by name, else by a reader-field alias naming the writer
-  field;
-* writer-only fields are dropped (projection);
-* reader-only fields take their default — missing default is a
-  resolution-time ``SchemaEvolutionError``, not a runtime surprise;
+* records, enums and fixed match by name or reader alias (fixed also by
+  size; an enum needs every writer symbol; the value evaluator reads a
+  renamed top-level record); a reader field reads the
+  writer field of its name or of one of its aliases, else takes its
+  default (decoded once); writer-only fields are dropped;
 * primitive promotions per the spec: int→long/float/double,
-  long→float/double, float→double, string↔bytes (as casts);
-* records resolve recursively; arrays/maps resolve their element/value
-  types;
-* unions resolve shape-aware: a non-union writer lands in the reader
-  union's Spark encoding (bare nullable member, or the ``member_*`` tagged
-  struct with the matched branch populated); a writer union resolves
-  branch-wise into a superset reader union (each branch routed to its
-  first resolvable reader member); an unresolvable branch, or nullability
-  narrowing, is a resolution-time ``SchemaEvolutionError``.
+  long→float/double, float→double, string↔bytes;
+* arrays/maps resolve their element/value types; a non-union writer takes
+  one reader-union branch (:func:`_best_branch_order`); a writer union
+  resolves branch by branch, its null branch only into a nullable reader.
+
+A rule that fails leaves a refusal at its node; a record pair met again
+below itself is a back-edge (the walk is coinductive).  Every consumer
+evaluates the same plan: :meth:`Plan.refusals` is the verdict
+(``schema_registry.can_read``); :func:`evolve_struct` emits ``Column``
+projections from a writer-schema decode (one parse, no Python), refusing
+any plan with a refusal plus what expressions cannot bridge (logical
+promotions, decimals across the 38-digit cap, decimal → bare bytes,
+differing recursion references); :func:`resolve_datum` (and
+:attr:`Plan.resolve`) resolves carrier-space values, raising only when a
+value reaches a refusal; the table feed and the read path take field
+sources and decoded defaults from its record nodes.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass, field
+from functools import cached_property
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..errors import SchemaEvolutionError
+from ..memo import Memo
 from ..schema.model import (
     AvroArray,
     AvroEnum,
+    AvroField,
     AvroFixed,
     AvroMap,
     AvroPrimitive,
@@ -45,29 +57,11 @@ from ..schema.model import (
     AvroUnion,
     Primitive,
 )
-
-
-def _check_enum_resolution(w: AvroEnum, r: AvroEnum, path: str) -> None:
-    """Spec enum resolution: names must match (reader aliases may absorb a
-    writer rename) and every writer symbol must exist in the reader — the
-    schema-level strictness mirror of the per-datum "symbol not present"
-    error (pre-enum-default Avro, which is the reference's vintage).  The
-    decoded representation is the symbol string, so a legal resolution is
-    the identity projection.  (r5: found by the can_read↔evolve
-    differential — enums previously resolved only via full equality,
-    rejecting spec-legal reader-superset widening.)"""
-    if w.name != r.name and w.name not in r.aliases and w.fqn not in r.aliases:
-        raise SchemaEvolutionError(f"{path}: enum name mismatch {w.fqn} vs {r.fqn}")
-    missing = [s for s in w.symbols if s not in r.symbols]
-    if missing:
-        raise SchemaEvolutionError(
-            f"{path}: writer enum symbols {missing} not in reader {r.fqn}"
-        )
 from ..schema.parser import ParsedSchema, parse_schema
 from ..schema.spark_convert import to_struct_type, union_field_names
 from .decoder import decode_json
 from .logical import py_value_to_carrier
-from .pydecode import Decoder as _PyDecoder
+from .pydecode import compile_decoder
 
 #: spec-permitted primitive promotions (writer kind → reader kind)
 PROMOTIONS: frozenset[tuple[Primitive, Primitive]] = frozenset(
@@ -91,6 +85,8 @@ _CAST = {
     Primitive.STRING: "string",
 }
 
+_NULL = AvroPrimitive(Primitive.NULL)
+
 
 def _parse(s: ParsedSchema | AvroType | str) -> tuple[AvroType, dict[str, AvroType]]:
     if isinstance(s, str):
@@ -98,6 +94,223 @@ def _parse(s: ParsedSchema | AvroType | str) -> tuple[AvroType, dict[str, AvroTy
     if isinstance(s, ParsedSchema):
         return s.root, s.env
     return s, {}
+
+
+def _deref(t: AvroType, env: dict[str, AvroType]) -> AvroType:
+    while isinstance(t, AvroRecursionRef):
+        t = env[t.fqn]
+    return t
+
+
+@dataclass(eq=False)
+class FieldPlan:
+    """A reader field's source: the ``writer`` field it reads through
+    ``plan``, else its default (``plan`` is then None, or the refusal of a
+    field without one)."""
+
+    reader: AvroField
+    writer: AvroField | None
+    plan: Plan | None
+    renv: dict[str, AvroType]
+
+    @cached_property
+    def default(self):
+        """The reader default, decoded once (pydecode's semantic values)."""
+        decode = compile_decoder(self.reader.type, self.renv)
+        return decode(self.reader.default, f"default({self.reader.name})")
+
+
+@dataclass(eq=False)
+class Plan:
+    """One plan node over writer type ``w`` and reader type ``r``
+    (recursion references resolved).  ``kind``: ``prim``, ``enum``,
+    ``fixed``, ``record`` (``fields``), ``array``/``map`` (element plan
+    ``children[0]``), ``wunion`` (writer union: ``null`` plans its null
+    member, ``children`` the others), ``runion`` (non-union writer into
+    reader member ``r.non_null_members[branch]`` via ``children[0]``;
+    ``branch`` None is the null member) or ``refuse`` (``error``; a
+    top-level ``record`` may hold one too).  The root also holds the
+    reader's named-type env."""
+
+    kind: str
+    w: AvroType | None = None
+    r: AvroType | None = None
+    error: str | None = None
+    fields: list[FieldPlan] = field(default_factory=list)
+    children: list[Plan] = field(default_factory=list)
+    null: Plan | None = None
+    branch: int | None = None
+    renv: dict[str, AvroType] | None = None
+
+    def refusals(self, _skip: frozenset[int] = frozenset()) -> list[str]:
+        """Every refusal, in field and branch order (nodes in ``_skip``,
+        by id, are not entered)."""
+        out, seen, todo = [], set(_skip), [self]
+        while todo:
+            p = todo.pop()
+            if p is not None and id(p) not in seen:
+                seen.add(id(p))
+                out += [p.error] if p.error is not None else []
+                todo += reversed([f.plan for f in p.fields] + [p.null] + p.children)
+        return out
+
+    @cached_property
+    def resolve(self) -> Callable:
+        """The compiled value evaluator (see :func:`resolve_datum`)."""
+        return _value_fn(self)
+
+
+def _refuse(error: str) -> Plan:
+    return Plan("refuse", error=error)
+
+
+def _named_match(w: AvroRecord | AvroEnum | AvroFixed, r) -> bool:
+    """A reader named type answers to its full name, name and aliases."""
+    return bool({w.fqn, w.name} & {r.fqn, r.name, *r.aliases})
+
+
+#: (writer JSON, reader JSON) -> root Plan
+_PLAN_CACHE = Memo(256)
+
+
+def resolution_plan(
+    writer: ParsedSchema | AvroType | str, reader: ParsedSchema | AvroType | str
+) -> Plan:
+    """The plan for data written under ``writer`` read under ``reader``
+    (built once per process for two schema JSON texts)."""
+
+    def build() -> Plan:
+        (wroot, wenv), (rroot, renv) = _parse(writer), _parse(reader)
+        root = _plan(wroot, rroot, wenv, renv, "$", {})
+        root.renv = renv
+        return root
+
+    texts = isinstance(writer, str) and isinstance(reader, str)
+    return _PLAN_CACHE.get_or((writer, reader) if texts else None, build)
+
+
+def _plan(w: AvroType, r: AvroType, wenv, renv, path: str, stack: dict) -> Plan:
+    """``stack`` maps the (writer, reader) record names open above this
+    position to their nodes."""
+    w, r = _deref(w, wenv), _deref(r, renv)
+    if isinstance(w, AvroUnion):
+        wn = w.non_null_members
+        names = union_field_names(w) if len(wn) > 1 else None
+        node = Plan("wunion", w, r, children=[
+            _plan(m, r, wenv, renv, f"{path}<{names[i]}>" if names else path, stack)
+            for i, m in enumerate(wn)
+        ])
+        if w.is_nullable and isinstance(r, AvroUnion) and not r.is_nullable:
+            node.null = _refuse(f"{path}: writer union is nullable but reader union is not")
+        elif w.is_nullable and not isinstance(r, AvroUnion) and r != _NULL:
+            node.null = _refuse(f"{path}: nullable writer union cannot resolve into non-union reader")
+        elif w.is_nullable:
+            node.null = _plan(_NULL, r, wenv, renv, path, stack)
+        return node
+    if isinstance(r, AvroUnion):
+        if w == _NULL:
+            if r.is_nullable:
+                return Plan("runion", w, r)
+            return _refuse(f"{path}: no reader union branch accepts writer type ([])")
+        # the first member in best-branch order whose plan holds no
+        # refusal; back-edges to the records open above count as resolvable
+        rn, errs = r.non_null_members, []
+        open_nodes = frozenset(id(p) for p in stack.values())
+        for i in _best_branch_order(w, rn, renv, wenv):
+            sub = _plan(w, rn[i], wenv, renv, path, stack)
+            bad = sub.refusals(open_nodes)
+            if not bad:
+                return Plan("runion", w, r, children=[sub], branch=i)
+            errs.append(bad[0])
+        return _refuse(f"{path}: no reader union branch accepts writer type ({errs})")
+    if isinstance(w, AvroPrimitive) and isinstance(r, AvroPrimitive):
+        if w.kind is r.kind or (w.kind, r.kind) in PROMOTIONS:
+            return Plan("prim", w, r)
+        return _refuse(f"{path}: cannot promote {w.kind.value} to {r.kind.value}")
+    if isinstance(w, AvroRecord) and isinstance(r, AvroRecord):
+        if (w.fqn, r.fqn) in stack:
+            return stack[w.fqn, r.fqn]
+        # a renamed top-level record (none open above) keeps its fields: its
+        # values read under any reader name, as Avro's datum resolver reads
+        # them (a writer names it freely; the engine's OCF writer: ``record``)
+        error = None if _named_match(w, r) else f"{path}: record name mismatch ({w.fqn} -> {r.fqn})"
+        if error and stack:
+            return _refuse(error)
+        node = Plan("record", w, r, error=error)
+        stack = {**stack, (w.fqn, r.fqn): node}
+        by_name = {f.name: f for f in w.fields}
+        for rf in r.fields:
+            wf = next((by_name[n] for n in (rf.name, *rf.aliases) if n in by_name), None)
+            fpath = f"{path}.{rf.name}"
+            if wf is not None:
+                sub = _plan(wf.type, rf.type, wenv, renv, fpath, stack)
+            elif rf.has_default:
+                sub = None
+            else:
+                sub = _refuse(f"{fpath}: reader field missing from writer and has no default")
+            node.fields.append(FieldPlan(rf, wf, sub, renv))
+        return node
+    if isinstance(w, AvroArray) and isinstance(r, AvroArray):
+        return Plan("array", w, r, children=[_plan(w.items, r.items, wenv, renv, f"{path}[]", stack)])
+    if isinstance(w, AvroMap) and isinstance(r, AvroMap):
+        values = _plan(w.values, r.values, wenv, renv, f"{path}.{{}}", stack)
+        return Plan("map", w, r, children=[values])
+    if isinstance(w, AvroEnum) and isinstance(r, AvroEnum):
+        # pre-enum-default Avro (the reference's vintage): every writer
+        # symbol must exist in the reader; the decoded symbol passes as is
+        missing = [s for s in w.symbols if s not in r.symbols]
+        if not _named_match(w, r):
+            return _refuse(f"{path}: enum name mismatch {w.fqn} vs {r.fqn}")
+        if missing:
+            return _refuse(f"{path}: writer enum symbols {missing} not in reader {r.fqn}")
+        return Plan("enum", w, r)
+    if isinstance(w, AvroFixed) and isinstance(r, AvroFixed):
+        # the reader's (possibly different) decimal annotation then
+        # applies to the raw bytes
+        if _named_match(w, r) and w.length == r.length:
+            return Plan("fixed", w, r)
+        return _refuse(f"{path}: fixed mismatch {w.fqn}[{w.length}] vs {r.fqn}[{r.length}]")
+    return _refuse(f"{path}: cannot resolve {type(w).__name__} against {type(r).__name__}")
+
+
+def _best_branch_order(w: AvroType, rn, renv, wenv) -> list[int]:
+    """Reader-union member indices in the Avro *reference implementation's*
+    resolution order: EXACT matches first (same primitive kind, array/map
+    kind, or named type by FQN / reader alias), then the remaining members
+    in declaration order for promotion-based matches — the two-pass
+    ``bestBranch`` of ``GenericDatumReader`` (``getIndexNamed`` lookup
+    before the promotion scan).
+
+    Found by the JVM byte-level differential (seed 2002): a writer ``long``
+    resolving into ``["double", R, "long"]`` must select the exact ``long``
+    branch; the previous first-readable scan promoted it into ``double``.
+    """
+
+    wt = _deref(w, wenv)
+
+    def exact(m: AvroType) -> bool:
+        mt = _deref(m, renv)
+        if isinstance(wt, AvroPrimitive) and isinstance(mt, AvroPrimitive):
+            return wt.kind is mt.kind
+        if isinstance(wt, AvroArray) and isinstance(mt, AvroArray):
+            return True
+        if isinstance(wt, AvroMap) and isinstance(mt, AvroMap):
+            return True
+        for cls in (AvroRecord, AvroEnum, AvroFixed):
+            if isinstance(wt, cls) and isinstance(mt, cls):
+                return (
+                    mt.fqn == wt.fqn
+                    or wt.fqn in mt.aliases
+                    or wt.name in mt.aliases
+                )
+        return False
+
+    return sorted(range(len(rn)), key=lambda i: not exact(rn[i]))  # stable
+
+
+# ---------------------------------------------------------------------------
+# Column evaluator
+# ---------------------------------------------------------------------------
 
 
 def _bridge_logical(col: Column, wl, rl, w_kind: Primitive, path: str) -> Column:
@@ -133,184 +346,83 @@ def _bridge_logical(col: Column, wl, rl, w_kind: Primitive, path: str) -> Column
     return carrier_to_value_expr(rl, carrier) if rl is not None else carrier
 
 
-def _resolve(col: Column, w: AvroType, r: AvroType, renv, wenv, max_depth: int, path: str) -> Column:
-    if isinstance(w, AvroPrimitive) and isinstance(r, AvroPrimitive):
-        if w.kind is r.kind:
-            return _bridge_logical(col, w.logical, r.logical, w.kind, path)
-        if (w.kind, r.kind) in PROMOTIONS:
-            if w.logical is not None or r.logical is not None:
-                raise SchemaEvolutionError(
-                    f"{path}: promotion {w.kind.value}→{r.kind.value} with logical "
-                    "annotations is not supported"
-                )
-            return col.cast(_CAST[r.kind])
-        raise SchemaEvolutionError(f"{path}: cannot promote {w.kind.value} to {r.kind.value}")
-    if isinstance(w, AvroRecord) and isinstance(r, AvroRecord):
-        return _resolve_record(col, w, r, renv, wenv, max_depth, path)
-    if isinstance(w, AvroArray) and isinstance(r, AvroArray):
-        return F.transform(col, lambda e: _resolve(e, w.items, r.items, renv, wenv, max_depth, f"{path}[]"))
-    if isinstance(w, AvroMap) and isinstance(r, AvroMap):
-        return F.map_from_arrays(
-            F.map_keys(col),
-            F.transform(
-                F.map_values(col),
-                lambda v: _resolve(v, w.values, r.values, renv, wenv, max_depth, f"{path}.{{}}"),
-            ),
-        )
-    if isinstance(r, AvroUnion) and not isinstance(w, AvroUnion):
-        # writer T into reader union — first resolvable non-null member wins
-        # (spec: "the first schema in the reader's union that matches")
-        return _resolve_into_union(col, w, r, renv, wenv, max_depth, path)
-    if isinstance(w, AvroUnion) and isinstance(r, AvroUnion):
+def _column(p: Plan, col: Column, wt, rt, renv, max_depth: int, path: str) -> Column:
+    """``col`` at writer position ``wt`` projected into reader position
+    ``rt`` (the schemas' own types there, recursion references kept) along
+    a refusal-free plan node."""
+    w, r = p.w, p.r
+    if p.kind == "wunion":
+        # each writer branch into the reader; into a reader union the
+        # writer's nulls (checked by the plan) stay null
         if w == r:
             return col
-        return _resolve_union_union(col, w, r, renv, wenv, max_depth, path)
-    if isinstance(w, AvroUnion) and not isinstance(r, AvroUnion):
-        return _resolve_union_out(col, w, r, renv, wenv, max_depth, path)
-    if isinstance(w, AvroFixed) and isinstance(r, AvroFixed):
-        # spec: fixed matches on name + size; the reader's (possibly
-        # different) decimal annotation is then applied to the raw bytes
-        if w.name == r.name and w.length == r.length:
-            return _bridge_logical(col, w.logical, r.logical, Primitive.BYTES, path)
-        raise SchemaEvolutionError(
-            f"{path}: fixed mismatch {w.fqn}[{w.length}] vs {r.fqn}[{r.length}]"
-        )
-    if isinstance(w, AvroEnum) and isinstance(r, AvroEnum):
-        _check_enum_resolution(w, r, path)
-        return col  # decoded repr is the symbol string: identity
-    if type(w) is type(r) and w == r:
-        return col
-    raise SchemaEvolutionError(f"{path}: cannot resolve {type(w).__name__} against {type(r).__name__}")
-
-
-def _best_branch_order(w: AvroType, rn, renv, wenv) -> list[int]:
-    """Reader-union member indices in the Avro *reference implementation's*
-    resolution order: EXACT matches first (same primitive kind, array/map
-    kind, or named type by FQN / reader alias), then the remaining members
-    in declaration order for promotion-based matches — the two-pass
-    ``bestBranch`` of ``GenericDatumReader`` (``getIndexNamed`` lookup
-    before the promotion scan).
-
-    Found by the JVM byte-level differential (seed 2002): a writer ``long``
-    resolving into ``["double", R, "long"]`` must select the exact ``long``
-    branch; the previous first-readable scan promoted it into ``double``.
-    """
-
-    wt = w
-    while isinstance(wt, AvroRecursionRef):
-        wt = wenv[wt.fqn]
-
-    def exact(m: AvroType) -> bool:
-        mt = m
-        while isinstance(mt, AvroRecursionRef):
-            mt = renv[mt.fqn]
-        if isinstance(wt, AvroPrimitive) and isinstance(mt, AvroPrimitive):
-            return wt.kind is mt.kind
-        if isinstance(wt, AvroArray) and isinstance(mt, AvroArray):
-            return True
-        if isinstance(wt, AvroMap) and isinstance(mt, AvroMap):
-            return True
-        for cls in (AvroRecord, AvroEnum, AvroFixed):
-            if isinstance(wt, cls) and isinstance(mt, cls):
-                return (
-                    mt.fqn == wt.fqn
-                    or wt.fqn in mt.aliases
-                    or wt.name in mt.aliases
-                )
-        return False
-
-    idx = list(range(len(rn)))
-    ex = [i for i in idx if exact(rn[i])]
-    return ex + [i for i in idx if i not in ex]
-
-
-def _resolve_into_union(
-    col: Column, w: AvroType, r: AvroUnion, renv, wenv, max_depth: int, path: str
-) -> Column:
-    """Resolve a non-union writer value into the reader union's Spark shape:
-    the bare nullable member when the union has ≤1 non-null branch, else the
-    ``member_*`` tagged struct with exactly the matched branch populated
-    (previously the bare member column leaked out — ADVICE r1).  Branch
-    selection follows :func:`_best_branch_order` (exact before promoted)."""
-    rn = r.non_null_members
-    errs: list[str] = []
-    if len(rn) <= 1:
-        for m in rn:
-            try:
-                return _resolve(col, w, m, renv, wenv, max_depth, path)
-            except SchemaEvolutionError as ex:
-                errs.append(str(ex))
-        raise SchemaEvolutionError(f"{path}: no reader union branch accepts writer type ({errs})")
-    names = union_field_names(r)
-    for bi in _best_branch_order(w, rn, renv, wenv):
-        name, m = names[bi], rn[bi]
-        try:
-            resolved = _resolve(col, w, m, renv, wenv, max_depth, path)
-        except SchemaEvolutionError as ex:
-            errs.append(str(ex))
-            continue
+        wn = w.non_null_members
+        if len(wn) == 1:
+            out = _column(p.children[0], col, wn[0], rt, renv, max_depth, path)
+        else:  # a tagged struct (or none): keep the branch populated on each row
+            out = F.lit(None).cast(to_struct_type(rt, renv, max_depth))
+            for wname, wm, sub in reversed(list(zip(union_field_names(w), wn, p.children))):
+                resolved = _column(sub, col[wname], wm, rt, renv, max_depth, f"{path}<{wname}>")
+                out = F.when(col[wname].isNotNull(), resolved).otherwise(out)
+        if not isinstance(r, AvroUnion) or not wn:
+            return out
+        null = F.lit(None).cast(to_struct_type(rt, renv, max_depth))
+        return F.when(col.isNull(), null).otherwise(out)
+    if p.kind == "runion":
+        # the reader union's Spark shape: the bare nullable member when it
+        # has ≤1 non-null branch, else the ``member_*`` tagged struct with
+        # exactly the planned branch populated (ADVICE r1)
+        if p.branch is None:  # a null writer
+            return F.lit(None).cast(to_struct_type(rt, renv, max_depth))
+        rn = r.non_null_members
+        resolved = _column(p.children[0], col, wt, rn[p.branch], renv, max_depth, path)
+        if len(rn) <= 1:
+            return resolved
         fields = [
-            resolved.alias(nm)
-            if nm == name
+            resolved.alias(nm) if i == p.branch
             else F.lit(None).cast(to_struct_type(mm, renv, max_depth)).alias(nm)
-            for nm, mm in zip(names, rn)
+            for i, (nm, mm) in enumerate(zip(union_field_names(r), rn))
         ]
         return F.when(col.isNull(), F.lit(None)).otherwise(F.struct(*fields))
-    raise SchemaEvolutionError(f"{path}: no reader union branch accepts writer type ({errs})")
-
-
-def _resolve_union_union(
-    col: Column, w: AvroUnion, r: AvroUnion, renv, wenv, max_depth: int, path: str
-) -> Column:
-    """Writer union into a different reader union (the spec's most common
-    evolution: the reader adds a branch).  Every writer branch must find a
-    home in the reader union — an unresolvable branch is a resolution-time
-    ``SchemaEvolutionError`` (strict: the engine refuses plans that could
-    fail per-datum, rather than failing at runtime)."""
-    if w.is_nullable and not r.is_nullable:
-        raise SchemaEvolutionError(f"{path}: writer union is nullable but reader union is not")
-    wn = w.non_null_members
-    rdt = to_struct_type(r, renv, max_depth)
-    if len(wn) == 0:  # null-only writer union; reader nullability checked above
-        return F.lit(None).cast(rdt)
-    if len(wn) == 1:
-        # writer's Spark shape is the bare nullable member
-        out = _resolve_into_union(col, wn[0], r, renv, wenv, max_depth, path)
-        return F.when(col.isNull(), F.lit(None).cast(rdt)).otherwise(out)
-    # writer's shape is a tagged struct: route each branch, keep the one
-    # that is populated on each row (exactly one, by construction)
-    branches = [
-        (
-            col[wname],
-            _resolve_into_union(col[wname], wm, r, renv, wenv, max_depth, f"{path}<{wname}>"),
-        )
-        for wname, wm in zip(union_field_names(w), wn)
-    ]
-    out = F.lit(None).cast(rdt)
-    for src, resolved in reversed(branches):
-        out = F.when(src.isNotNull(), resolved).otherwise(out)
-    return F.when(col.isNull(), F.lit(None).cast(rdt)).otherwise(out)
-
-
-def _resolve_union_out(
-    col: Column, w: AvroUnion, r: AvroType, renv, wenv, max_depth: int, path: str
-) -> Column:
-    """Writer union into a non-union reader.  Permitted when every writer
-    branch resolves into the reader type and the writer cannot produce
-    nulls (strict resolution-time check, same rationale as above)."""
-    if w.is_nullable:
+    if isinstance(wt, AvroRecursionRef) or isinstance(rt, AvroRecursionRef):
+        if wt == rt:  # recursion is not resolved column-wise below the root
+            return col
         raise SchemaEvolutionError(
-            f"{path}: nullable writer union cannot resolve into non-union reader"
+            f"{path}: cannot resolve {type(wt).__name__} against {type(rt).__name__}"
         )
-    wn = w.non_null_members
-    if len(wn) == 1:
-        return _resolve(col, wn[0], r, renv, wenv, max_depth, path)
-    rdt = to_struct_type(r, renv, max_depth)
-    out = F.lit(None).cast(rdt)
-    for wname, wm in reversed(list(zip(union_field_names(w), wn))):
-        resolved = _resolve(col[wname], wm, r, renv, wenv, max_depth, f"{path}<{wname}>")
-        out = F.when(col[wname].isNotNull(), resolved).otherwise(out)
-    return out
+    if p.kind == "prim":
+        if w.kind is r.kind:
+            return _bridge_logical(col, w.logical, r.logical, w.kind, path)
+        if w.logical is not None or r.logical is not None:
+            raise SchemaEvolutionError(
+                f"{path}: promotion {w.kind.value}→{r.kind.value} with logical "
+                "annotations is not supported"
+            )
+        return col.cast(_CAST[r.kind])
+    if p.kind == "record":
+        target = to_struct_type(r, renv, max_depth)
+        out = [
+            (
+                _column(f.plan, col[f.writer.name], f.writer.type, f.reader.type,
+                        renv, max_depth, f"{path}.{f.reader.name}")
+                if f.writer is not None
+                else _lit_value(f.default, target[f.reader.name].dataType)
+            ).alias(f.reader.name)
+            for f in p.fields
+        ]
+        return F.when(col.isNull(), F.lit(None)).otherwise(F.struct(*out))
+    if p.kind == "array":
+        return F.transform(col, lambda e: _column(
+            p.children[0], e, w.items, r.items, renv, max_depth, f"{path}[]"))
+    if p.kind == "map":
+        return F.map_from_arrays(
+            F.map_keys(col),
+            F.transform(F.map_values(col), lambda v: _column(
+                p.children[0], v, w.values, r.values, renv, max_depth, f"{path}.{{}}")),
+        )
+    if p.kind == "fixed":
+        return _bridge_logical(col, w.logical, r.logical, Primitive.BYTES, path)
+    return col  # enum: the decoded symbol string
 
 
 def _lit_value(value, dtype: T.DataType) -> Column:
@@ -335,34 +447,6 @@ def _lit_value(value, dtype: T.DataType) -> Column:
     return F.lit(value).cast(dtype)
 
 
-def _resolve_record(
-    col: Column, w: AvroRecord, r: AvroRecord, renv, wenv, max_depth: int, path: str
-) -> Column:
-    target = to_struct_type(r, renv, max_depth)
-    by_name = {f.name: f for f in w.fields}
-    out = []
-    for rf in r.fields:
-        wf = by_name.get(rf.name)
-        if wf is None:
-            for alias in rf.aliases:
-                if alias in by_name:
-                    wf = by_name[alias]
-                    break
-        fpath = f"{path}.{rf.name}"
-        if wf is not None:
-            out.append(
-                _resolve(col[wf.name], wf.type, rf.type, renv, wenv, max_depth, fpath).alias(rf.name)
-            )
-        elif rf.has_default:
-            decoded = _PyDecoder(renv, max_depth).decode(rf.type, rf.default, f"default({rf.name})")
-            out.append(_lit_value(decoded, target[rf.name].dataType).alias(rf.name))
-        else:
-            raise SchemaEvolutionError(
-                f"{fpath}: reader field missing from writer and has no default"
-            )
-    return F.when(col.isNull(), F.lit(None)).otherwise(F.struct(*out))
-
-
 def evolve_struct(
     col: Column,
     writer: ParsedSchema | AvroType | str,
@@ -370,9 +454,82 @@ def evolve_struct(
     max_depth: int = 10,
 ) -> Column:
     """Project a writer-schema struct column into the reader schema."""
-    wroot, wenv = _parse(writer)
-    rroot, renv = _parse(reader)
-    return _resolve(col, wroot, rroot, renv, wenv, max_depth, "$")
+    plan = resolution_plan(writer, reader)
+    refusals = plan.refusals()
+    if refusals:
+        raise SchemaEvolutionError(refusals[0])
+    return _column(plan, col, plan.w, plan.r, plan.renv, max_depth, "$")
+
+
+# ---------------------------------------------------------------------------
+# value evaluator
+# ---------------------------------------------------------------------------
+
+
+def _identity(v):
+    return v
+
+
+def _value_fn(root: Plan) -> Callable:
+    """Compile a plan into one closure over carrier-space values (what
+    ``BinaryCodec.decode`` yields; the reader's logical annotations apply
+    when the result is lifted)."""
+    done: dict[int, Callable] = {}
+
+    def comp(p: Plan) -> Callable:
+        if id(p) not in done:
+            done[id(p)] = lambda v, k=id(p): done[k](v)  # what a back-edge reaches
+            done[id(p)] = build(p)
+        return done[id(p)]
+
+    def build(p: Plan) -> Callable:
+        if p.kind == "refuse":
+            def refuse(v):
+                raise SchemaEvolutionError(p.error)
+
+            return refuse
+        if p.kind == "prim":
+            wk, rk = p.w.kind, p.r.kind
+            if rk in (Primitive.FLOAT, Primitive.DOUBLE) and wk is not rk:
+                return float
+            if (wk, rk) == (Primitive.STRING, Primitive.BYTES):
+                return lambda v: v.encode("utf-8") if isinstance(v, str) else v
+            if (wk, rk) == (Primitive.BYTES, Primitive.STRING):
+                return lambda v: bytes(v).decode("utf-8") if isinstance(v, (bytes, bytearray)) else v
+            return _identity  # same kind, int → long
+        if p.kind == "record":
+            getters = [
+                (f.reader.name, f.writer and f.writer.name, comp(f.plan) if f.plan else
+                 lambda _, d=carrierize(f.reader.type, f.default, f.renv): d)
+                for f in p.fields
+            ]
+            return lambda v: {n: fn(None if src is None else v[src]) for n, src, fn in getters}
+        if p.kind == "array":
+            item = comp(p.children[0])
+            return lambda v: [item(x) for x in v]
+        if p.kind == "map":
+            value = comp(p.children[0])
+            return lambda v: {k: value(x) for k, x in v.items()}
+        if p.kind == "wunion":
+            null = comp(p.null) if p.null is not None else _identity
+            if len(p.children) == 1:
+                one = comp(p.children[0])
+                return lambda v: null(v) if v is None else one(v)
+            keyed = list(zip(union_field_names(p.w), map(comp, p.children)))
+            # tagged-dict repr: exactly one member_* key non-null
+            return lambda v: null(v) if v is None else next(
+                fn(v[k]) for k, fn in keyed if v.get(k) is not None
+            )
+        if p.kind == "runion":
+            if p.branch is None:
+                return lambda v: None
+            fn, names = comp(p.children[0]), union_field_names(p.r)
+            if len(names) <= 1:
+                return fn
+            return lambda v: {n: fn(v) if i == p.branch else None for i, n in enumerate(names)}
+        return _identity  # enum symbol, fixed bytes
+
+    return comp(root)
 
 
 def resolve_datum(
@@ -384,105 +541,17 @@ def resolve_datum(
     max_depth: int = 10,
     path: str = "$",
 ):
-    """Value-space schema resolution (same rules as :func:`_resolve`, over
-    decoded representations instead of Columns).
+    """Value-space schema resolution: the plan's value evaluator, over
+    carrier-space decoded representations instead of Columns.
 
     Exists for the one case the column projection cannot serve: a source
     whose rows were written under *different* writer schemas (e.g. an OCF
     directory accumulated across schema versions, or a registry-framed
     message stream) being read under one reader schema — each datum
-    resolves against its own writer before the rows unify."""
-    renv = renv or {}
-    wenv = wenv or {}
-
-    if isinstance(writer, AvroRecursionRef):
-        return resolve_datum(value, wenv[writer.fqn], reader, renv, wenv, max_depth, path)
-    if isinstance(reader, AvroRecursionRef):
-        return resolve_datum(value, writer, renv[reader.fqn], renv, wenv, max_depth, path)
-    if isinstance(writer, AvroPrimitive) and isinstance(reader, AvroPrimitive):
-        if writer.kind is reader.kind:
-            return value
-        if (writer.kind, reader.kind) not in PROMOTIONS:
-            raise SchemaEvolutionError(
-                f"{path}: cannot promote {writer.kind.value} to {reader.kind.value}"
-            )
-        if reader.kind in (Primitive.FLOAT, Primitive.DOUBLE):
-            return float(value)
-        if reader.kind is Primitive.BYTES and isinstance(value, str):
-            return value.encode("utf-8")
-        if reader.kind is Primitive.STRING and isinstance(value, (bytes, bytearray)):
-            return bytes(value).decode("utf-8")
-        return value  # int → long
-    if isinstance(writer, AvroRecord) and isinstance(reader, AvroRecord):
-        by_name = {f.name: f for f in writer.fields}
-        out = {}
-        for rf in reader.fields:
-            wf = by_name.get(rf.name)
-            if wf is None:
-                for alias in rf.aliases:
-                    if alias in by_name:
-                        wf = by_name[alias]
-                        break
-            if wf is not None:
-                out[rf.name] = resolve_datum(
-                    value[wf.name], wf.type, rf.type, renv, wenv, max_depth, f"{path}.{rf.name}"
-                )
-            elif rf.has_default:
-                decoded = _PyDecoder(renv, max_depth).decode(
-                    rf.type, rf.default, f"default({rf.name})"
-                )
-                # value-space resolution runs in CARRIER space (inputs come
-                # from BinaryCodec.decode); pydecode lifts logical types to
-                # semantic values, so defaults must convert back down
-                out[rf.name] = carrierize(rf.type, decoded, renv)
-            else:
-                raise SchemaEvolutionError(
-                    f"{path}.{rf.name}: reader field missing from writer and has no default"
-                )
-        return out
-    if isinstance(writer, AvroArray) and isinstance(reader, AvroArray):
-        return [
-            resolve_datum(v, writer.items, reader.items, renv, wenv, max_depth, f"{path}[]")
-            for v in value
-        ]
-    if isinstance(writer, AvroMap) and isinstance(reader, AvroMap):
-        return {
-            k: resolve_datum(v, writer.values, reader.values, renv, wenv, max_depth, f"{path}.{{}}")
-            for k, v in value.items()
-        }
-    if isinstance(writer, AvroUnion):
-        wn = writer.non_null_members
-        if value is None:
-            if isinstance(reader, AvroUnion) and reader.is_nullable:
-                return None
-            raise SchemaEvolutionError(f"{path}: null has no home in non-nullable reader")
-        if len(wn) == 1:
-            branch_t, branch_v = wn[0], value
-        else:
-            # tagged-dict repr: exactly one member_* key non-null
-
-            names = union_field_names(writer)
-            key = next(k for k in names if value.get(k) is not None)
-            branch_t, branch_v = wn[names.index(key)], value[key]
-        return _resolve_datum_into(branch_v, branch_t, reader, renv, wenv, max_depth, path)
-    if not isinstance(writer, AvroUnion) and isinstance(reader, AvroUnion):
-        return _resolve_datum_into(value, writer, reader, renv, wenv, max_depth, path)
-    if isinstance(writer, AvroFixed) and isinstance(reader, AvroFixed):
-        # spec: fixed matches on name + size; annotations may differ (value
-        # stays carrier bytes — the reader's annotation applies at decode)
-        if writer.name == reader.name and writer.length == reader.length:
-            return value
-        raise SchemaEvolutionError(
-            f"{path}: fixed mismatch {writer.fqn}[{writer.length}] vs {reader.fqn}[{reader.length}]"
-        )
-    if isinstance(writer, AvroEnum) and isinstance(reader, AvroEnum):
-        _check_enum_resolution(writer, reader, path)
-        return value  # symbol string: identity
-    if type(writer) is type(reader) and writer == reader:
-        return value
-    raise SchemaEvolutionError(
-        f"{path}: cannot resolve {type(writer).__name__} against {type(reader).__name__}"
-    )
+    resolves against its own writer before the rows unify.  Loops holding
+    schema JSON take ``resolution_plan(writer, reader).resolve`` instead,
+    planned and compiled once per process."""
+    return _plan(writer, reader, wenv or {}, renv or {}, path, {}).resolve(value)
 
 
 def carrierize(t: AvroType, v, env: dict[str, AvroType]):
@@ -517,29 +586,6 @@ def carrierize(t: AvroType, v, env: dict[str, AvroType]):
     if isinstance(t, AvroRecord):
         return {f.name: carrierize(f.type, v.get(f.name), env) for f in t.fields}
     return v  # enum symbols, plain primitives
-
-
-def _resolve_datum_into(value, w: AvroType, r: AvroType, renv, wenv, max_depth, path):
-    """Resolve a non-union writer value into ``r`` (union or not), emitting
-    the reader union's decoded shape (bare value or tagged dict)."""
-    if not isinstance(r, AvroUnion):
-        return resolve_datum(value, w, r, renv, wenv, max_depth, path)
-    rn = r.non_null_members
-    errs = []
-    for i in _best_branch_order(w, rn, renv, wenv):
-        try:
-            resolved = resolve_datum(value, w, rn[i], renv, wenv, max_depth, path)
-        except SchemaEvolutionError as ex:
-            errs.append(str(ex))
-            continue
-        if len(rn) <= 1:
-            return resolved
-    
-        names = union_field_names(r)
-        out = {n: None for n in names}
-        out[names[i]] = resolved
-        return out
-    raise SchemaEvolutionError(f"{path}: no reader union branch accepts writer type ({errs})")
 
 
 def decode_json_evolved(

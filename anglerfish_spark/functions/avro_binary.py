@@ -1037,7 +1037,7 @@ class _WriterTable:
     is the DatumError text for a key it does not hold."""
 
     def __init__(self, writers: dict, miss) -> None:
-        self._entries = {k: (_cached_schema(w), _cached_codec(w)) for k, w in writers.items()}
+        self._entries = {k: (w, _cached_codec(w)) for k, w in writers.items()}
         self._miss = miss
 
     def get(self, key):
@@ -1048,10 +1048,10 @@ class _WriterTable:
 
 
 class _ClientIdResolver:
-    """id -> (ParsedSchema, BinaryCodec) through the process's
+    """id -> (writer JSON, BinaryCodec) through the process's
     SchemaRegistryClient for ``base_url`` (LRU id cache, retries),
-    memoizing parsed schemas per batch (the client itself memoizes the
-    JSON per process).  Registry id-miss becomes DatumError so the
+    memoizing entries per batch (the client itself memoizes the JSON per
+    process).  Registry id-miss becomes DatumError so the
     permissive path dead-letters it like any other poisoned frame; network
     failures stay SchemaRegistryError — those must fail the batch (retry),
     not silently dead-letter healthy messages."""
@@ -1071,7 +1071,7 @@ class _ClientIdResolver:
                 wjson = self._client.schema_by_id(sid)
             except SchemaNotFoundError as ex:
                 raise DatumError(f"schema id {sid} not in registry") from ex
-            entry = self._cache[sid] = (_cached_schema(wjson), _cached_codec(wjson))
+            entry = self._cache[sid] = (wjson, _cached_codec(wjson))
         return entry
 
 
@@ -1210,9 +1210,8 @@ def _decode_udf(
     bare = len(fields) == 1
 
     def _decode(s: pd.Series):
-        from ..codec.evolve import resolve_datum
+        from ..codec.evolve import resolution_plan
 
-        rps = _cached_schema(reader_schema)
         if typed:
             emit = _cached_semantic_view(reader_schema)
         else:
@@ -1226,9 +1225,7 @@ def _decode_udf(
         def read(key, body):
             writer, codec = get(key)
             v = codec.decode(body)
-            if writer is None:
-                return v
-            return resolve_datum(v, writer.root, rps.root, rps.env, writer.env)
+            return v if writer is None else resolution_plan(writer, reader_schema).resolve(v)
 
         if permissive:
             keys, values, errors = [], [], []

@@ -41,7 +41,6 @@ from ..functions.avro_binary import (
     BinaryCodec,
     _cached_codec,
     _cached_json_view,
-    _cached_schema,
     dumps_avro_json,
     read_long,
     write_long,
@@ -86,8 +85,10 @@ def decode_ocf(blob: bytes) -> list:
     return decode_ocf_with_schema(blob)[0]
 
 
-def decode_ocf_with_schema(blob: bytes) -> tuple[list, str]:
-    """Parse one OCF blob → (values, writer schema JSON from the header)."""
+def read_ocf_header(blob: bytes) -> tuple[dict[str, bytes], int]:
+    """The header metadata of one OCF blob (``avro.schema`` holds the
+    writer schema JSON) and the offset of its sync marker; no datum is
+    decoded."""
     if blob[:4] != MAGIC:
         raise ValueError("not an Avro object container file")
     pos = 4
@@ -106,6 +107,12 @@ def decode_ocf_with_schema(blob: bytes) -> tuple[list, str]:
             vlen, pos = read_long(blob, pos)
             meta[key] = blob[pos : pos + vlen]
             pos += vlen
+    return meta, pos
+
+
+def decode_ocf_with_schema(blob: bytes) -> tuple[list, str]:
+    """Parse one OCF blob → (values, writer schema JSON from the header)."""
+    meta, pos = read_ocf_header(blob)
     codec_name = meta.get("avro.codec", b"null")
     decompress = _block_decompressor(codec_name)
     codec = _cached_codec(meta["avro.schema"].decode())
@@ -208,29 +215,21 @@ def read_avro_ocf(
     column-level ``decode_json_evolved`` projection."""
 
     def _read(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..codec.evolve import resolve_datum
+        from ..codec.evolve import resolution_plan
 
-        rps = _cached_schema(reader_schema) if reader_schema else None
         reader_view = _cached_json_view(reader_schema) if reader_schema else None
         for pdf in batches:
             rows = []
             for blob in pdf["content"]:
                 values, wjson = decode_ocf_with_schema(bytes(blob))
-                wps = _cached_schema(wjson)
-                if rps is None:
+                if reader_view is None:
                     # faithful Avro-JSON (tagged unions) against the file's
                     # own writer schema — decode_json-ready text
                     writer_view = _cached_json_view(wjson)
                     rows.extend(json.dumps(writer_view(v)) for v in values)
                     continue
-                rows.extend(
-                    json.dumps(
-                        reader_view(
-                            resolve_datum(v, wps.root, rps.root, rps.env, wps.env)
-                        )
-                    )
-                    for v in values
-                )
+                resolve = resolution_plan(wjson, reader_schema).resolve
+                rows.extend(json.dumps(reader_view(resolve(v))) for v in values)
             yield pd.DataFrame({"value": rows})
 
     files = spark.read.format("binaryFile").load(path_glob)

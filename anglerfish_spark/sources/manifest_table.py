@@ -1799,15 +1799,18 @@ def append_evolved(
     rewrites, the whole point of the format at 100 TB.
 
     The new reader schema must be able to read EVERY retained fileset's
-    writer schema (checked via the engine's ``can_read``); an
-    incompatible evolution fails the commit, not some later read.
+    writer schema: each fileset's projection is built here exactly as
+    ``read_table`` will apply it (``codec.evolve.evolve_struct``, which
+    refuses what the resolution plan refuses and what the projection
+    cannot bridge), so an incompatible evolution fails the commit, not
+    some later read.
 
     ``stat_cols`` (writer-schema column names) records footer stats for
     the NEW files; prior files' stats carry forward under their own
     writer-era names — the composed read path re-keys predicates per
     fileset (read_path._writer_predicates), so pruning survives renames."""
+    from ..codec.evolve import evolve_struct
     from ..errors import SchemaEvolutionError
-    from ..sources.schema_registry import can_read
 
     reader_schema = reader_schema or writer_schema
     v = current_version(table)
@@ -1818,11 +1821,10 @@ def append_evolved(
         else []
     )
     for fs in prior:
-        reasons = can_read(fs["schema"], reader_schema)
-        if reasons:
-            raise SchemaEvolutionError(
-                f"new reader schema cannot read retained fileset: {reasons}"
-            )
+        try:
+            evolve_struct(F.col("_r"), fs["schema"], reader_schema)
+        except SchemaEvolutionError as ex:
+            raise SchemaEvolutionError(f"new reader schema cannot read retained fileset: {ex}") from ex
     partitions = None
     if m.get("partition_spec"):
         # a partitioned table's evolved append stages THROUGH the spec so
@@ -1976,8 +1978,8 @@ ORDER BY bucket
 )
 def q_table_evolved(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema evolution through the manifest table, resolved by the
-    ENGINE's own Avro schema resolution (codec/evolve.evolve_struct +
-    schema_registry.can_read — the reference's resolution rules,
+    ENGINE's own Avro schema resolution (codec/evolve's resolution plan,
+    checked at commit and projected at read — the reference's rules,
     AvroSchemaCompanion semantics per SURVEY §2.1 S3/I7): v2 renames
     ``total``→``price`` via an alias and adds a defaulted ``status``
     column; v1's data files are NEVER rewritten.

@@ -77,7 +77,7 @@ class _OcfReader(DataSourceReader):
     def read(self, partition: InputPartition) -> Iterator[pa.RecordBatch]:
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        from ..codec.evolve import resolve_datum
+        from ..codec.evolve import resolution_plan
         from ..functions.avro_binary import _cached_schema, _cached_semantic_view
         from .avro_ocf import decode_ocf_with_schema
 
@@ -87,8 +87,7 @@ class _OcfReader(DataSourceReader):
         with open(partition.value, "rb") as f:
             values, wjson = decode_ocf_with_schema(f.read())
         if wjson != self.reader_schema_json:  # per-file writer → reader resolution
-            wps = _cached_schema(wjson)
-            values = (resolve_datum(v, wps.root, rps.root, rps.env, wps.env) for v in values)
+            values = map(resolution_plan(wjson, self.reader_schema_json).resolve, values)
         # resolve and lift lazily, one bounded batch at a time: the peak
         # is the decoded file plus one batch, not extra whole-file copies
         rows = (lift(v) for v in values)
@@ -323,14 +322,13 @@ class AvroOcfDataSource(DataSource):
         rs = self.options.get("reader_schema")
         if rs:
             return rs
-        from .avro_ocf import decode_ocf_with_schema
+        from .avro_ocf import read_ocf_header
 
         files = _files(self.options["path"])
         if not files:
             raise FileNotFoundError(f"no .avro files under {self.options['path']!r}")
         with open(files[0], "rb") as f:  # header-only metadata read
-            _, wjson = decode_ocf_with_schema(f.read())
-        return wjson
+            return read_ocf_header(f.read())[0]["avro.schema"].decode()
 
     def schema(self) -> StructType:
         ps = parse_schema(self._reader_schema_json())
@@ -340,14 +338,16 @@ class AvroOcfDataSource(DataSource):
         # rows are shaped by the Avro reader schema; a user-supplied
         # .schema(...) that differs would be silently misaligned — reject
         # it loudly and point at the option that does support projection
-        inferred = self.schema()
+        reader_schema_json = self._reader_schema_json()
+        ps = parse_schema(reader_schema_json)
+        inferred = to_struct_type(ps.root, ps.env)
         if schema != inferred:
             raise ValueError(
                 "avro_ocf does not accept a user read schema; pass a "
                 "reader_schema option (avsc JSON) instead. "
                 f"user={schema.simpleString()} header={inferred.simpleString()}"
             )
-        return _OcfReader(self.options["path"], self._reader_schema_json())
+        return _OcfReader(self.options["path"], reader_schema_json)
 
     def writer(self, schema: StructType, overwrite: bool) -> _OcfWriter:
         # overwrite deletes the OLD files only at commit time (after every

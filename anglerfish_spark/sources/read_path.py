@@ -66,28 +66,18 @@ def _reader_fields(schema: str):
     return parse_schema(schema).root.fields
 
 
-def _writer_predicates(
-    predicates: dict[str, tuple], rfields, writer: str
-) -> dict[str, tuple]:
+def _writer_predicates(predicates: dict[str, tuple], writer: str, reader: str) -> dict[str, tuple]:
     """Translate reader-name predicates into this fileset's writer column
-    names (identity, or reader-field alias present in the writer).  A
-    predicate that names no reader field, or a field the writer lacks,
-    yields no pruning key — the file is conservatively kept and the
-    residual filter decides."""
-    wnames = {f.name for f in _reader_fields(writer)}
-    out: dict[str, tuple] = {}
-    for rname, bounds in predicates.items():
-        rf = next((f for f in rfields if f.name == rname), None)
-        if rf is None:
-            continue
-        if rf.name in wnames:
-            out[rf.name] = bounds
-        else:
-            for a in rf.aliases:
-                if a in wnames:
-                    out[a] = bounds
-                    break
-    return out
+    names — the writer source of each reader field in the pair's
+    resolution plan (identity, or a reader-field alias).  A predicate
+    that names no reader field, or a field the writer lacks, yields no
+    pruning key — the file is conservatively kept and the residual filter
+    decides."""
+    from ..codec.evolve import resolution_plan
+
+    plan = resolution_plan(writer, reader)
+    sources = {f.reader.name: f.writer.name for f in plan.fields if f.writer}
+    return {sources[r]: bounds for r, bounds in predicates.items() if r in sources}
 
 
 def _group_applies(g: dict, fs: dict) -> bool:
@@ -173,8 +163,6 @@ def read_table(
     included.  Internal: :func:`manifest_table.compact_deletes` uses it
     to locate which files the deletes actually touch; it is not a user
     read mode."""
-    from ..codec.evolve import evolve_struct
-
     if sum(x is not None for x in (version, as_of_ts, tag)) > 1:
         raise ValueError("pass at most one of version / as_of_ts / tag")
     if as_of_ts is not None:
@@ -215,7 +203,7 @@ def read_table(
     for fs in manifest_filesets_view(table, m):
         writer = fs.get("schema") or reader
         pred_w = (
-            _writer_predicates(predicates, rfields, writer)
+            _writer_predicates(predicates, writer, reader)
             if reader and writer
             else predicates
         )
@@ -283,13 +271,7 @@ def read_table(
             if limit0:
                 df = df.limit(0)
             if reader and writer:
-                wnames = [f.name for f in _reader_fields(writer)]
-                packed = F.struct(*[F.col(c) for c in wnames])
-                keep = ["_r.*"] + (["_fp", "_ri"] if need_pos else [])
-                df = df.select(
-                    evolve_struct(packed, writer, reader).alias("_r"),
-                    *(["_fp", "_ri"] if need_pos else []),
-                ).select(*keep)
+                df = _evolved(df, writer, reader, ["_fp", "_ri"] if need_pos else [])
             sig = frozenset(i for i, g in enumerate(groups) if _group_applies(g, fs))
             return sig, df
 
@@ -374,14 +356,18 @@ def _resolve_files(
     """Scan ``files`` written under ``writer`` and project into ``reader``
     via the engine's Avro resolution — the shared leaf of the logged and
     incremental feed paths."""
+    df = read_parquet(spark, *[os.path.join(table, f) for f in files])
+    return _evolved(df, writer, reader) if reader and writer else df
+
+
+def _evolved(df: DataFrame, writer: str, reader: str, keep: tuple | list = ()) -> DataFrame:
+    """``df``'s writer-schema columns projected into the reader schema by
+    the pair's resolution plan (``codec.evolve.evolve_struct``), plus the
+    ``keep`` columns."""
     from ..codec.evolve import evolve_struct
 
-    df = read_parquet(spark, *[os.path.join(table, f) for f in files])
-    if reader and writer:
-        wnames = [f.name for f in _reader_fields(writer)]
-        packed = F.struct(*[F.col(c) for c in wnames])
-        df = df.select(evolve_struct(packed, writer, reader).alias("_r")).select("_r.*")
-    return df
+    packed = F.struct(*[F.col(f.name) for f in _reader_fields(writer)])
+    return df.select(evolve_struct(packed, writer, reader).alias("_r"), *keep).select("_r.*", *keep)
 
 
 def _net_fold(df: DataFrame) -> DataFrame:

@@ -38,20 +38,8 @@ from typing import Callable
 
 from ..errors import AnglerfishError
 from ..memo import Memo
-from ..schema.model import (
-    AvroArray,
-    AvroEnum,
-    AvroField,
-    AvroFixed,
-    AvroMap,
-    AvroPrimitive,
-    AvroRecord,
-    AvroRecursionRef,
-    AvroType,
-    AvroUnion,
-    Primitive,
-)
-from ..schema.parser import ParsedSchema, parse_schema
+from ..schema.model import AvroType
+from ..schema.parser import ParsedSchema
 
 
 class SchemaRegistryError(AnglerfishError):
@@ -211,18 +199,11 @@ def process_client(base_url: str) -> SchemaRegistryClient:
 
 # ---------------------------------------------------------------------------
 # structural compatibility: Avro spec "Schema Resolution" as a checkable
-# predicate over the engine's schema model (no Spark, no network)
+# predicate over the engine's schema model (no Spark, no network) — the
+# verdict of the one resolution plan (codec/evolve.py) the evolve layer,
+# the value-space resolver and the table feed all evaluate, so the check
+# cannot drift from what those readers do
 # ---------------------------------------------------------------------------
-
-#: writer primitive -> reader primitives it may promote to (spec resolution
-#: rules; D3's decode-time promotions are the value-level mirror)
-_PROMOTIONS: dict[Primitive, frozenset[Primitive]] = {
-    Primitive.INT: frozenset({Primitive.LONG, Primitive.FLOAT, Primitive.DOUBLE}),
-    Primitive.LONG: frozenset({Primitive.FLOAT, Primitive.DOUBLE}),
-    Primitive.FLOAT: frozenset({Primitive.DOUBLE}),
-    Primitive.STRING: frozenset({Primitive.BYTES}),
-    Primitive.BYTES: frozenset({Primitive.STRING}),
-}
 
 
 def can_read(
@@ -230,129 +211,14 @@ def can_read(
 ) -> list[str]:
     """Reasons the reader canNOT read the writer's data; empty = compatible.
 
-    Implements the Avro specification's schema-resolution matching rules
-    structurally: record field matching by name/alias with default fill,
-    primitive promotions, enum symbol coverage, fixed name+size equality,
-    union member-wise resolution.  Recursive schemas terminate via the
+    The refusals of :func:`codec.evolve.resolution_plan`: the Avro
+    specification's schema-resolution rules — record field matching by
+    name/alias with default fill, primitive promotions, enum symbol
+    coverage, named-type name/alias and fixed size matching, union
+    member-wise resolution.  Recursive schemas terminate via the
     assume-compatible-on-revisit rule (coinductive: a cycle is only
     incompatible if some finite unrolling differs, which the first visit
     already checks)."""
-    wroot, wenv = _parts(writer)
-    rroot, renv = _parts(reader)
-    errs: list[str] = []
-    _check(wroot, rroot, wenv, renv, "$", errs, set())
-    return errs
+    from ..codec.evolve import resolution_plan
 
-
-def _parts(s: ParsedSchema | AvroType | str) -> tuple[AvroType, dict[str, AvroType]]:
-    if isinstance(s, str):
-        s = parse_schema(s)
-    if isinstance(s, ParsedSchema):
-        return s.root, s.env
-    return s, {}
-
-
-def _deref(t: AvroType, env: dict[str, AvroType]) -> AvroType:
-    while isinstance(t, AvroRecursionRef):
-        target = env.get(t.fqn)
-        if target is None:
-            raise SchemaRegistryError(f"dangling recursion ref {t.fqn!r}")
-        t = target
-    return t
-
-
-def _names(t: AvroRecord | AvroEnum | AvroFixed) -> set[str]:
-    """Names a reader type answers to: its fullname plus aliases (spec:
-    aliases on the READER side map writer names onto reader types)."""
-    return {t.fqn, t.name, *t.aliases}
-
-
-def _check(w: AvroType, r: AvroType, wenv, renv, path: str, errs: list[str], seen) -> None:
-    w = _deref(w, wenv)
-    r = _deref(r, renv)
-
-    if isinstance(w, AvroRecord) and isinstance(r, AvroRecord):
-        key = (w.fqn, r.fqn, "record")
-        if key in seen:
-            return
-        seen = seen | {key}
-        if w.fqn != r.fqn and w.name not in _names(r) and w.fqn not in _names(r):
-            errs.append(f"{path}: record name mismatch ({w.fqn} -> {r.fqn})")
-            return
-        wfields = {f.name: f for f in w.fields}
-        for rf in r.fields:
-            wf = wfields.get(rf.name) or _by_alias(rf, wfields)
-            if wf is None:
-                if not rf.has_default:
-                    errs.append(
-                        f"{path}.{rf.name}: reader field missing from writer and has no default"
-                    )
-                continue
-            _check(wf.type, rf.type, wenv, renv, f"{path}.{rf.name}", errs, seen)
-        return
-
-    if isinstance(w, AvroEnum) and isinstance(r, AvroEnum):
-        if w.fqn != r.fqn and w.name not in _names(r) and w.fqn not in _names(r):
-            errs.append(f"{path}: enum name mismatch ({w.fqn} -> {r.fqn})")
-            return
-        extra = set(w.symbols) - set(r.symbols)
-        if extra:
-            errs.append(f"{path}: writer enum symbols {sorted(extra)} not in reader")
-        return
-
-    if isinstance(w, AvroFixed) and isinstance(r, AvroFixed):
-        if w.fqn != r.fqn and w.name not in _names(r) and w.fqn not in _names(r):
-            errs.append(f"{path}: fixed name mismatch ({w.fqn} -> {r.fqn})")
-        if w.length != r.length:
-            errs.append(f"{path}: fixed size {w.length} != reader size {r.length}")
-        return
-
-    if isinstance(w, AvroArray) and isinstance(r, AvroArray):
-        _check(w.items, r.items, wenv, renv, f"{path}[]", errs, seen)
-        return
-
-    if isinstance(w, AvroMap) and isinstance(r, AvroMap):
-        _check(w.values, r.values, wenv, renv, f"{path}{{}}", errs, seen)
-        return
-
-    if isinstance(w, AvroUnion):
-        # every writer member must be readable (data may carry any of them)
-        for m in w.members:
-            member_errs: list[str] = []
-            _check(m, r, wenv, renv, path, member_errs, seen)
-            errs.extend(member_errs)
-        return
-
-    if isinstance(r, AvroUnion):
-        # writer non-union: some reader member must accept it
-        for m in r.members:
-            trial: list[str] = []
-            _check(w, m, wenv, renv, path, trial, seen)
-            if not trial:
-                return
-        errs.append(f"{path}: no reader union member accepts writer {_tname(w)}")
-        return
-
-    if isinstance(w, AvroPrimitive) and isinstance(r, AvroPrimitive):
-        if w.kind is r.kind or r.kind in _PROMOTIONS.get(w.kind, frozenset()):
-            return
-        errs.append(f"{path}: {w.kind.value} not readable as {r.kind.value}")
-        return
-
-    errs.append(f"{path}: {_tname(w)} not readable as {_tname(r)}")
-
-
-def _by_alias(rf: AvroField, wfields: dict[str, AvroField]) -> AvroField | None:
-    for a in rf.aliases:
-        wf = wfields.get(a)
-        if wf is not None:
-            return wf
-    return None
-
-
-def _tname(t: AvroType) -> str:
-    if isinstance(t, AvroPrimitive):
-        return t.kind.value
-    if isinstance(t, (AvroRecord, AvroEnum, AvroFixed)):
-        return f"{type(t).__name__.lower().removeprefix('avro')} {t.fqn}"
-    return type(t).__name__.removeprefix("Avro").lower()
+    return resolution_plan(writer, reader).refusals()

@@ -577,6 +577,24 @@ class TestResolveDatum:
         assert resolve_datum("hi", s, b) == b"hi"
         assert resolve_datum(b"hi", b, s) == "hi"
 
+    def test_named_types_match_by_name_or_reader_alias(self):
+        import pytest
+
+        from anglerfish_spark.codec.evolve import resolve_datum
+        from anglerfish_spark.errors import SchemaEvolutionError
+        from anglerfish_spark.schema import parse_schema
+
+        rec = '{"type":"record","name":"R","fields":[{"name":"x","type":%s}]}'
+        # a nested record renamed without a reader alias is refused
+        w = parse_schema(rec % '{"type":"record","name":"A","fields":[{"name":"a","type":"int"}]}')
+        r = parse_schema(rec % '{"type":"record","name":"B","fields":[{"name":"a","type":"int"}]}')
+        with pytest.raises(SchemaEvolutionError, match="record name mismatch"):
+            resolve_datum({"x": {"a": 1}}, w.root, r.root, r.env, w.env)
+        # a fixed renamed with a reader alias is read as is
+        w = parse_schema(rec % '{"type":"fixed","name":"F","size":4}')
+        r = parse_schema(rec % '{"type":"fixed","name":"G","size":4,"aliases":["F"]}')
+        assert resolve_datum({"x": b"abcd"}, w.root, r.root, r.env, w.env) == {"x": b"abcd"}
+
 
 class TestCollectionDepthStrictness:
     """D6/D3 strictness must reach records nested inside collections: the

@@ -306,6 +306,48 @@ def test_can_read_agrees_with_evolve_struct(spark, evolution_pairs):
     assert not bad, f"{len(bad)} predicate/constructor disagreements; first: {bad[:2]}"
 
 
+#: the drift cases of the engine's former rulebooks (each a full
+#: (writer, reader) pair): renamed named types and logical promotions
+_REC = '{"type":"record","name":"%s","fields":[{"name":"x","type":%s}]}'
+DRIFT_PAIRS = [
+    (_REC % ("R", '{"type":"record","name":"A","fields":[{"name":"a","type":"int"}]}'),
+     _REC % ("R", '{"type":"record","name":"B","fields":[{"name":"a","type":"int"}]}')),
+    (_REC % ("R", '"long"'), _REC % ("S", '"long"')),
+    (_REC % ("R", '{"type":"fixed","name":"F","size":4}'),
+     _REC % ("R", '{"type":"fixed","name":"G","size":4,"aliases":["F"]}')),
+    (_REC % ("R", '{"type":"int","logicalType":"date"}'), _REC % ("R", '"long"')),
+    (_REC % ("R", '{"type":"bytes","logicalType":"decimal","precision":40,"scale":2}'),
+     _REC % ("R", '{"type":"bytes","logicalType":"decimal","precision":20,"scale":2}')),
+]
+
+
+def test_can_read_matches_avro_schema_compatibility(spark, evolution_pairs):
+    """``can_read`` is empty exactly when Avro's own
+    ``SchemaCompatibility.checkReaderWriterCompatibility`` says
+    COMPATIBLE, over the random corpus plus the drift cases — the plan's
+    rulebook pinned to the reference implementation (py4j calls on the
+    session JVM, no Spark job)."""
+    jvm = spark._jvm
+    try:
+        jvm.java.lang.Class.forName("org.apache.avro.SchemaCompatibility")
+    except Exception:
+        pytest.skip("avro-core not on classpath")
+
+    def parse(s):
+        return jvm.org.apache.avro.Schema.Parser().parse(s)
+
+    pairs = [(w, r) for w, r, _ in evolution_pairs] + DRIFT_PAIRS
+    bad = []
+    for w, r in pairs:
+        avro = jvm.org.apache.avro.SchemaCompatibility.checkReaderWriterCompatibility(
+            parse(r), parse(w)
+        ).getType().toString()
+        if (can_read(w, r) == []) != (avro == "COMPATIBLE"):
+            bad.append((w, r, avro, can_read(w, r)[:3]))
+    assert len(pairs) == len(evolution_pairs) + 5
+    assert not bad, f"{len(bad)} of {len(pairs)} verdicts differ from Avro; first: {bad[:2]}"
+
+
 def test_value_and_expression_paths_agree(spark, evolution_pairs):
     rng = random.Random(SEED + 1)
     mismatches = []

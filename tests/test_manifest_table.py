@@ -324,6 +324,32 @@ class TestSchemaEvolution:
                 narrowed, reader_schema=narrowed,
             )
 
+    def test_evolution_the_read_cannot_project_fails_at_commit(self, spark, tmp_path):
+        # int/date -> long is a legal Avro promotion, but the read path's
+        # column projection has no bridge for a logical promotion: the
+        # commit refuses it instead of every later snapshot_evolved
+        import pytest
+
+        from anglerfish_spark.errors import SchemaEvolutionError
+        import anglerfish_spark.sources.manifest_table as mt
+
+        t = str(tmp_path / "t")
+        dated = """
+        {"type":"record","name":"t","fields":[
+          {"name":"d","type":{"type":"int","logicalType":"date"}}
+        ]}
+        """
+        widened = """
+        {"type":"record","name":"t","fields":[{"name":"d","type":"long"}]}
+        """
+        mt.append_evolved(spark, t, spark.sql("SELECT DATE'2024-01-02' AS d"), dated)
+        with pytest.raises(SchemaEvolutionError):
+            mt.append_evolved(
+                spark, t, spark.sql("SELECT CAST(5 AS BIGINT) AS d"),
+                widened, reader_schema=widened,
+            )
+        assert mt.current_version(t) == 1
+
 
 class TestMergeOnReadDeletes:
     """Equality-delete files: O(keys) deletes, anti-join reads, time

@@ -336,3 +336,28 @@ def test_only_the_decoders_lift_logical_carriers():
                 if name == "py_carrier_to_value":
                     bad.append(f"{rel}:{node.lineno}")
     assert bad == []
+
+
+def test_only_evolve_binds_promotion_rules():
+    """Only ``codec/evolve.py`` binds a module-level name containing
+    ``PROMOTIONS``: every reader (the Column projection, the value-space
+    resolver, ``can_read``, the table feed) takes its verdicts from the
+    one resolution plan there, so no second rulebook can drift from it."""
+    root = pathlib.Path(__file__).resolve().parent.parent / "anglerfish_spark"
+    bad = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "codec/evolve.py":
+            continue
+        for node in ast.parse(path.read_text()).body:
+            targets = (
+                node.targets if isinstance(node, ast.Assign)
+                else [node.target] if isinstance(node, ast.AnnAssign)
+                else []
+            )
+            bad.extend(
+                f"{rel}:{node.lineno} {t.id}"
+                for t in targets
+                if isinstance(t, ast.Name) and "PROMOTIONS" in t.id
+            )
+    assert bad == []

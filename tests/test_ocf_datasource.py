@@ -307,6 +307,30 @@ def test_instants_read_back_utc_in_any_worker_time_zone(tmp_path, monkeypatch):
     assert got.astimezone(dt.timezone.utc) == noon
 
 
+def test_schema_inference_reads_headers_only(tmp_path, monkeypatch):
+    """Planning a read without a ``reader_schema`` option parses the
+    first file's header, never its data: no datum is decoded on the
+    driver around ``reader(schema())``."""
+    from anglerfish_spark.functions.avro_binary import BinaryCodec
+    from anglerfish_spark.sources.avro_ocf import encode_ocf
+    from anglerfish_spark.sources.ocf_datasource import AvroOcfDataSource
+
+    schema = '{"type":"record","name":"r","fields":[{"name":"x","type":"long"}]}'
+    (tmp_path / "part-0.avro").write_bytes(encode_ocf([{"x": i} for i in range(1000)], schema))
+    decodes = []
+    decode_fn = BinaryCodec.decode_fn
+
+    def counting(self):
+        fn = decode_fn(self)
+        return lambda buf, pos: decodes.append(1) or fn(buf, pos)
+
+    monkeypatch.setattr(BinaryCodec, "decode_fn", counting)
+    ds = AvroOcfDataSource({"path": str(tmp_path)})
+    reader = ds.reader(ds.schema())
+    assert reader.reader_schema_json == schema
+    assert len(decodes) == 0
+
+
 def test_staged_tmp_files_are_invisible_to_readers(spark, tmp_path):
     """The two-phase write protocol: a dead task's .avro.tmp staging file
     must never be listed by batch or streaming reads."""

@@ -238,6 +238,12 @@ class TestCanReadAgreesWithEvolve:
         ('{"name":"x","type":{"type":"fixed","name":"Fx","size":4}}',
          '{"name":"x","type":{"type":"fixed","name":"Fx","size":8}}'),
         ('{"name":"x","type":"long"}', '{"name":"x","type":"string"}'),
+        # named-type renames: a nested record renamed without a reader
+        # alias is refused, a fixed renamed with one is read (Avro's rule)
+        ('{"name":"x","type":{"type":"record","name":"A","fields":[{"name":"a","type":"int"}]}}',
+         '{"name":"x","type":{"type":"record","name":"B","fields":[{"name":"a","type":"int"}]}}'),
+        ('{"name":"x","type":{"type":"fixed","name":"F","size":4}}',
+         '{"name":"x","type":{"type":"fixed","name":"G","size":4,"aliases":["F"]}}'),
     ]
 
     @pytest.mark.parametrize("wf,rf", PAIRS)

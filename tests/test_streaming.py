@@ -1049,6 +1049,36 @@ class TestFeedEvolutionDifferential:
             )
             assert got == want, f"case {label}: {got} != {want}"
 
+    def test_bytes_default_decodes_like_batch(self, spark, tmp_path):
+        """A reader-only ``bytes`` field's default is decoded by the
+        resolution plan (base64, the engine's convention) — the feed's
+        Arrow default op fills b"\\xff\\x01" for "/wE=", as batch
+        ``table_changes`` does; the reader is driven on its partitions
+        directly, so no stream starts."""
+        from anglerfish_spark.sources import manifest_table as mt
+        from anglerfish_spark.sources.read_path import table_changes
+        from anglerfish_spark.streaming.table_feed import ManifestFeedStreamReader
+
+        W = '{"type":"record","name":"R","fields":[{"name":"a","type":"long"}]}'
+        R = (
+            '{"type":"record","name":"R","fields":[{"name":"a","type":"long"},'
+            '{"name":"b","type":"bytes","default":"/wE="}]}'
+        )
+        t = str(tmp_path / "t")
+        mt.append_evolved(spark, t, spark.range(2).select(F.col("id").alias("a")), W)
+        mt.append_evolved(spark, t, mt.snapshot(spark, t).limit(0), W, reader_schema=R)
+        feed = ManifestFeedStreamReader(None, {"table": t})
+        parts = feed.partitions({"version": 0}, {"version": 2})
+        got = [
+            v
+            for p in parts
+            for batch in feed.read(p)
+            for v in batch.column("b").to_pylist()
+        ]
+        batch, _mode = table_changes(spark, t, 0, None, mode="logged")
+        want = [bytes(r["b"]) for r in batch.collect()]
+        assert got == want == [b"\xff\x01", b"\xff\x01"]
+
     # --- r9 value-space fallback: shapes beyond the flat subset ---
 
     N_REC = '{"type":"record","name":"N","fields":[{"name":"x","type":"long"}]}'
